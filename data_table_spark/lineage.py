@@ -26,12 +26,13 @@ from pyspark.sql import DataFrame
 CHECKPOINT_DIR_ENV = "SPARK_GRAFT_CHECKPOINT_DIR"
 
 
-def truncate_lineage(df: DataFrame) -> DataFrame:
+def truncate_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
     """Cut ``df``'s logical plan: reliable checkpoint when
-    :data:`CHECKPOINT_DIR_ENV` is set, executor-local otherwise."""
+    :data:`CHECKPOINT_DIR_ENV` is set, executor-local otherwise.
+    ``eager=False`` defers materialization to the first action."""
     ckpt_dir = os.environ.get(CHECKPOINT_DIR_ENV)
     if ckpt_dir:
         sc = df.sparkSession.sparkContext
         sc.setCheckpointDir(ckpt_dir)
-        return df.checkpoint()
-    return df.localCheckpoint()
+        return df.checkpoint(eager=eager)
+    return df.localCheckpoint(eager=eager)

@@ -17,7 +17,7 @@ distinct-word count, not token count) — then repeat:
 3. rewrite every word's symbol array, merging non-overlapping
    occurrences left-to-right — a pure JVM ``aggregate`` fold over the
    symbol array (no Python in the loop), lineage cut per round with
-   ``localCheckpoint`` on the vocabulary-sized word table (the
+   ``truncate_lineage`` on the vocabulary-sized word table (the
    _oriented_graph rationale: persist() would leak across gates).
 
 The fold reproduces single-pass left-to-right replacement exactly:
@@ -37,6 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..lineage import truncate_lineage
 from ..sources.registry import load_table, local_df
 
 BPE_QUERIES: dict = {}
@@ -128,8 +129,8 @@ def bpe_train(
     (blocks exist after the first action), half the per-round job
     count; the training loop is job-overhead-bound because the word
     table is vocabulary-sized."""
-    words = _with_symbols(word_freqs(docs, text_col)).localCheckpoint(
-        eager=False
+    words = truncate_lineage(
+        _with_symbols(word_freqs(docs, text_col)), eager=False
     )
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(n_merges):
@@ -143,8 +144,8 @@ def bpe_train(
             break
         left, right, n = best[0]["left"], best[0]["right"], best[0]["n"]
         merges.append((rank, left, right, int(n)))
-        words = _apply_merge(words, left, right).localCheckpoint(
-            eager=False
+        words = truncate_lineage(
+            _apply_merge(words, left, right), eager=False
         )
     return merges
 

@@ -3598,12 +3598,11 @@ def q100_pagerank(spark, sf_dir):
     # sized but derives from the full event window — and it feeds the
     # node count action plus every unrolled iteration's share join
     # (~8 subtree references). Materialize it once.
-    edges = (
+    edges = truncate_lineage(
         e.withColumn("src", F.lag("event_type").over(w_ord))
         .where(F.col("src").isNotNull())
         .groupBy("src", F.col("event_type").alias("dst"))
         .agg(F.count(F.lit(1)).alias("w"))
-        .localCheckpoint(eager=True)
     )
     outw = edges.groupBy("src").agg(F.sum("w").alias("ow"))
     share = (
@@ -4147,14 +4146,14 @@ def _oriented_graph(edges: DataFrame):
     edge set is ≪ the fact table (distinct pairs), so materializing it
     is the 100 TB-correct trade; executor loss there wants reliable
     checkpointing or recompute-tolerant persist instead."""
-    edges = edges.localCheckpoint(eager=True)
+    edges = truncate_lineage(edges)
     deg = (
         edges.select(F.col("a").alias("n"))
         .unionAll(edges.select(F.col("b").alias("n")))
         .groupBy("n").agg(F.count(F.lit(1)).alias("d"))
     )
     da, db = deg.alias("da"), deg.alias("db")
-    oriented = (
+    oriented = truncate_lineage(
         edges.join(da, F.col("a") == F.col("da.n"))
         .join(db, F.col("b") == F.col("db.n"))
         .select(
@@ -4168,7 +4167,6 @@ def _oriented_graph(edges: DataFrame):
             ).alias("e")
         )
         .select("e.u", "e.v")
-        .localCheckpoint(eager=True)
     )
     return edges, deg, oriented
 
@@ -4179,10 +4177,9 @@ def _oriented_adjacency(oriented: DataFrame) -> DataFrame:
     orientation, so the adjacency table has node count rows and edge
     count total entries, with no unbounded row. Checkpointed: both
     attach joins read it."""
-    return (
+    return truncate_lineage(
         oriented.groupBy(F.col("u").alias("n"))
         .agg(F.array_sort(F.collect_list("v")).alias("nb"))
-        .localCheckpoint(eager=True)
     )
 
 
@@ -6332,9 +6329,11 @@ def q133_spearman_corr(spark, sf_dir):
     # customer-bounded; localCheckpoint because FIVE actions otherwise
     # re-derive it (each midrank2's ledger collect + the final 3-way
     # join's two rank subtrees + the fact side) — round-13, guide §5
-    pairs = c.join(o, F.col("c_custkey") == F.col("o_custkey")).select(
-        "c_custkey", "bal_c", "rev_c"
-    ).localCheckpoint(eager=True)
+    pairs = truncate_lineage(
+        c.join(o, F.col("c_custkey") == F.col("o_custkey")).select(
+            "c_custkey", "bal_c", "rev_c"
+        )
+    )
 
     def midrank2(col, span):
         per_v = pairs.groupBy(F.col(col).alias("v")).agg(
@@ -6446,7 +6445,7 @@ def q134_link_prediction(spark, sf_dir):
     bound = 400
     # round-13: same edge set via the shared one-exchange builder
     # (collect_set + map-side pair explode — see _copurchase_edges)
-    edges = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=True)
+    edges = truncate_lineage(_copurchase_edges(spark, sf_dir))
     adj = edges.select(
         F.col("a").alias("n"), F.col("b").alias("z")
     ).unionAll(edges.select(F.col("b").alias("n"), F.col("a").alias("z")))
@@ -6976,7 +6975,7 @@ def q139_bounded_bfs(spark, sf_dir):
     plan statically analyzable — and most product queries ARE
     hop-bounded."""
     # round-13: same edge set via the shared one-exchange builder
-    edges = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=True)
+    edges = truncate_lineage(_copurchase_edges(spark, sf_dir))
     adj = edges.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
         edges.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )
@@ -7470,7 +7469,7 @@ def bipartite_k_core(
     read them (both degree aggs + the next round) — DataFrame reuse is
     not plan reuse (the q124 lesson); without the cut, round r's plan
     re-executes round r-1 three times and the unroll goes exponential."""
-    edges = edges.select("p", "s").distinct().localCheckpoint(eager=True)
+    edges = truncate_lineage(edges.select("p", "s").distinct())
     summaries = []
 
     def summary(r, e):
@@ -7485,11 +7484,10 @@ def bipartite_k_core(
     for r in range(1, rounds + 1):
         pdeg = edges.groupBy("p").agg(F.count(F.lit(1)).alias("dp"))
         sdeg = edges.groupBy("s").agg(F.count(F.lit(1)).alias("ds"))
-        edges = (
+        edges = truncate_lineage(
             edges.join(pdeg.where(F.col("dp") >= kp).select("p"), "p")
             .join(sdeg.where(F.col("ds") >= ks).select("s"), "s")
             .select("p", "s")
-            .localCheckpoint(eager=True)
         )
         summaries.append(summary(r, edges))
     out = summaries[0]
@@ -7820,9 +7818,9 @@ def spine_pairs(df: DataFrame, idx_col: str = "idx", width: int = 64) -> DataFra
     # checkpoint BEFORE the count: counting first would execute the
     # input lineage once for n and again for the materialization — the
     # q124 double-execution class
-    d = df.withColumn(
-        "_xb", (F.col(idx_col) / width).cast("long")
-    ).localCheckpoint(eager=True)  # 3 consumers: same + both cross sides
+    d = truncate_lineage(
+        df.withColumn("_xb", (F.col(idx_col) / width).cast("long"))
+    )  # 3 consumers: same + both cross sides
     n = d.count()
     nb = max(1, (n + width - 1) // width)
     if nb > 1_000_000_000:
@@ -7893,9 +7891,9 @@ def q148_mann_kendall(spark, sf_dir):
     aggregate's input."""
     daily = _daily_rev_cents(spark, sf_dir)
     w_day = Window.orderBy("day")
-    d = daily.select(
-        "rev", (F.row_number().over(w_day) - 1).alias("idx")
-    ).localCheckpoint(eager=True)  # consumers: the pair kernel + ties
+    d = truncate_lineage(
+        daily.select("rev", (F.row_number().over(w_day) - 1).alias("idx"))
+    )  # consumers: the pair kernel + ties
     s_df = spine_pairs(d).agg(
         F.sum(
             F.signum(
@@ -8006,12 +8004,11 @@ def q149_theil_sen(spark, sf_dir):
     # partition-local sort selects the row — no global window anywhere.
     from ..session import DEFAULT_SHUFFLE_PARTITIONS
 
-    sp = (
+    sp = truncate_lineage(
         slopes.repartitionByRange(
             DEFAULT_SHUFFLE_PARTITIONS, "slope_e6"
         )
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
     )
     ledger = sorted(
         (r["_pid"], r["c"])
@@ -10597,12 +10594,11 @@ def q180_tpch_q11_important(spark, sf_dir):
     per-part table IS the input to the total, so the fact scan runs
     once)."""
     li = _t(spark, sf_dir, "lineitem")
-    per_part = (
+    per_part = truncate_lineage(
         li.select(F.col("l_partkey"), _rev_u().alias("rev_u"))
         .groupBy("l_partkey")
         .agg(F.sum(F.col("rev_u").cast("decimal(38,0)")).alias("value"))
-        .localCheckpoint()  # reuse: feeds BOTH the total and the filter
-    )
+    )  # reuse: feeds BOTH the total and the filter
     total = per_part.agg(F.sum("value").alias("t"))
     return (
         per_part.crossJoin(F.broadcast(total))
@@ -10687,12 +10683,11 @@ def q182_tpch_q15_top_supplier(spark, sf_dir):
         (F.col("l_shipdate") >= "1998-01-01")
         & (F.col("l_shipdate") < "1998-04-01")
     )
-    rev = (
+    rev = truncate_lineage(
         li.select("l_suppkey", _rev_u().alias("rev_u"))
         .groupBy("l_suppkey")
         .agg(F.sum(F.col("rev_u").cast("decimal(38,0)")).alias("total"))
-        .localCheckpoint()  # reuse: feeds both the argmax and the filter
-    )
+    )  # reuse: feeds both the argmax and the filter
     mx = rev.agg(F.max("total").alias("mx"))
     s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
@@ -11052,14 +11047,13 @@ def q188_kendall_tau(spark, sf_dir):
     doubles whose operands are exact longs; sqrt and one division are
     IEEE-correctly-rounded, so the e6 floor is engine-portable."""
     e = _t(spark, sf_dir, "events")
-    daily = (
+    daily = truncate_lineage(
         e.groupBy(F.to_date("ts").alias("day"))
         .agg(
             F.count(F.lit(1)).alias("x"),
             F.sum(F.round(F.col("value") * 100).cast("long")).alias("y"),
         )
-        .localCheckpoint()  # tiny; feeds both sides of the pair join
-    )
+    )  # tiny; feeds both sides of the pair join
     a = daily.select(
         F.col("day").alias("d1"), F.col("x").alias("x1"),
         F.col("y").alias("y1"),
@@ -11293,14 +11287,13 @@ def q191_hits_scores(spark, sf_dir):
     the output is a TakeOrderedAndProject top-20."""
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    edges = (
+    edges = truncate_lineage(
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
         .select(
             F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p")
         )
         .distinct()
-        .localCheckpoint()  # three passes ride one materialized edge list
-    )
+    )  # three passes ride one materialized edge list
     auth1 = edges.groupBy("p").agg(F.count(F.lit(1)).alias("a1"))
     hub1 = (
         edges.join(auth1, "p")
@@ -11557,7 +11550,7 @@ def q195_crosscorr_daily(spark, sf_dir):
     bit-identical."""
     e = _t(spark, sf_dir, "events")
     v_c = F.round(F.col("value") * 100).cast("long")
-    daily = (
+    daily = truncate_lineage(
         e.groupBy(F.to_date("ts").alias("day"))
         .agg(
             F.sum(F.when(F.col("event_type") == "click", v_c).otherwise(0))
@@ -11566,18 +11559,19 @@ def q195_crosscorr_daily(spark, sf_dir):
                 F.when(F.col("event_type") == "purchase", v_c).otherwise(0)
             ).cast("long").alias("y"),
         )
-        .localCheckpoint()  # calendar-sized; feeds 4 readers below
-    )
+    )  # calendar-sized; feeds 4 readers below
     tot = daily.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("x").cast("long").alias("sx"),
         F.sum("y").cast("long").alias("sy"),
     )
-    d = daily.crossJoin(F.broadcast(tot)).select(
-        "day",
-        (F.col("n") * F.col("x") - F.col("sx")).alias("a"),
-        (F.col("n") * F.col("y") - F.col("sy")).alias("b"),
-    ).localCheckpoint()
+    d = truncate_lineage(
+        daily.crossJoin(F.broadcast(tot)).select(
+            "day",
+            (F.col("n") * F.col("x") - F.col("sx")).alias("a"),
+            (F.col("n") * F.col("y") - F.col("sy")).alias("b"),
+        )
+    )
     dec = "decimal(38,0)"
     var = d.agg(
         F.sum(F.col("a").cast(dec) * F.col("a").cast(dec)).alias("va"),
@@ -11812,7 +11806,7 @@ def q198_degree_assortativity(spark, sf_dir):
     # round-13: shared one-exchange edge builder + checkpoint — the
     # degree union and the directed union reference the edge subtree
     # FOUR times in the one final plan
-    edges = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=True)
+    edges = truncate_lineage(_copurchase_edges(spark, sf_dir))
     deg = (
         edges.select(F.col("a").alias("node"))
         .unionAll(edges.select(F.col("b").alias("node")))
@@ -12013,9 +12007,11 @@ def q200_sql_scripting_search(spark, sf_dir):
     stack_args = ", ".join(
         f"CAST({1 << k} AS BIGINT), c{k}" for k in range(40)
     )
-    spine = spine_row.select(
-        "n", F.expr(f"stack(40, {stack_args}) AS (thr, cnt)")
-    ).localCheckpoint(eager=True)
+    spine = truncate_lineage(
+        spine_row.select(
+            "n", F.expr(f"stack(40, {stack_args}) AS (thr, cnt)")
+        )
+    )
     spine.createOrReplaceTempView("orders_script_pc")
     return spark.sql(
         """
@@ -12131,7 +12127,7 @@ def q202_modularity(spark, sf_dir):
     itself."""
     # round-13: shared one-exchange edge builder + checkpoint (three
     # aggregate consumers reference the edge subtree in the final plan)
-    edges = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=True)
+    edges = truncate_lineage(_copurchase_edges(spark, sf_dir))
     b = MODULARITY_BUCKET
     stats = edges.agg(
         F.count(F.lit(1)).cast("decimal(38,0)").alias("m"),

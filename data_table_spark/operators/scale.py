@@ -20,6 +20,7 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from ..lineage import truncate_lineage
 from ..sources.registry import local_df
 
 
@@ -474,8 +475,6 @@ def distributed_prefix_sum(
     ).alias("_psb")
     bucketed = df.withColumn("_psb", b)
     if materialize:
-        from ..lineage import truncate_lineage
-
         bucketed = truncate_lineage(bucketed)
     ledger = (
         bucketed.groupBy("_psb")
@@ -539,8 +538,6 @@ def distributed_prefix_max(
     ).alias("_pmb")
     bucketed = df.withColumn("_pmb", b)
     if materialize:
-        from ..lineage import truncate_lineage
-
         bucketed = truncate_lineage(bucketed)
     ledger = (
         bucketed.groupBy("_pmb")

@@ -1503,7 +1503,7 @@ def sim_prefix_dim_topk(spark, sf_dir):
     # (~6 evaluations of a 64-element when/transform per row). The
     # int8 copy is 4× smaller than the raw embeddings and IS the
     # serving-tier artifact this gate models.
-    q8 = quantize_int8(e).localCheckpoint(eager=True)
+    q8 = truncate_lineage(quantize_int8(e))
     pfx = lambda c: F.slice(c, 1, PREFIX_DIMS)
     idot = lambda a, b: F.aggregate(
         F.zip_with(a, b, lambda x, y: (x * y).cast("bigint")),

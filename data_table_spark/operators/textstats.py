@@ -18,6 +18,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..lineage import truncate_lineage
 from ..sources.registry import load_table, local_df
 
 #: BPE-ish token pattern: letter runs | single digits | single punctuation.
@@ -937,10 +938,9 @@ def bigram_lm_score(docs: DataFrame) -> DataFrame:
         )
         .select("doc_id", "p.w1", "p.w2")
     )
-    c12 = (
+    c12 = truncate_lineage(
         bg.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
     )
     c1 = c12.groupBy("w1").agg(F.sum("c").alias("tot"))
     vs = int(
@@ -1214,10 +1214,9 @@ def pmi_bigrams(docs: DataFrame, min_count: int = 5) -> DataFrame:
         )
         .select("p.w1", "p.w2")
     )
-    c12 = (
+    c12 = truncate_lineage(
         bg.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("cxy"))
-        .localCheckpoint(eager=True)
     )
     c1 = c12.groupBy("w1").agg(F.sum("cxy").alias("cx"))
     c2 = c12.groupBy("w2").agg(F.sum("cxy").alias("cy"))
@@ -2174,8 +2173,6 @@ def dup_ngram_stats(docs: DataFrame) -> DataFrame:
     # instead of five times; (2) the exploded instance stream — it
     # feeds BOTH the vocabulary aggregate and the join-back, which
     # otherwise re-run the whole gram build.
-    from ..lineage import truncate_lineage
-
     tk = truncate_lineage(
         docs.where(n >= DUP_NGRAM_N).select("doc_id", "source", t.alias("t"))
     )

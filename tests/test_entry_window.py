@@ -1,24 +1,26 @@
-"""Driver-contract window policy (no Spark needed — pure registry checks).
+"""Driver-contract gate order (no Spark needed — pure registry checks).
 
 The round driver grades the FIRST 50 queries() entries against
-oracle_sql() and records the result in CORRECTNESS_r{N}.json. These
-tests pin the rotation policy documented in __spark_entry__._PRIORITY:
-no window slot may be wasted on a gate the driver cannot hash-grade,
-and every oracle-backed gate that has never earned a green row must be
-inside the window.
+oracle_sql(). ``__spark_entry__`` computes that order from the committed
+CORRECTNESS_r*.json files; these tests pin its properties, recomputing
+the freshest green round per gate independently of the entry module.
 """
 
 from __future__ import annotations
 
+import glob
+import importlib
 import json
 import os
+import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-import __spark_entry__ as entry  # noqa: E402
+import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+import __spark_entry__ as entry  # noqa: E402
 
 #: gates whose output is tolerance-checked or hash-dependent BY NATURE —
 #: they can never hash-match an oracle and must stay out of the window
@@ -55,15 +57,25 @@ ROWS_ONLY_BY_NATURE = {
 }
 
 
+
 def _window():
     return list(entry.queries())[:50]
 
 
-def test_priority_entries_all_resolve():
-    qs = entry.queries()
-    missing = [p for p in entry._PRIORITY if p not in qs]
-    assert not missing, missing
-    assert len(entry._PRIORITY) == len(set(entry._PRIORITY))
+def _freshest_green():
+    latest = {}
+    for p in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
+        n = int(re.search(r"_r(\d+)\.json$", p).group(1))
+        with open(p) as f:
+            for k, v in json.load(f).items():
+                if v.get("hash_match"):
+                    latest[k] = max(latest.get(k, 0), n)
+    return latest
+
+
+def test_registry_sizes():
+    assert len(entry.queries()) == 391
+    assert len(entry.oracle_sql()) == 380
 
 
 def test_window_is_fully_oracle_backed():
@@ -77,29 +89,58 @@ def test_window_is_fully_oracle_backed():
 def test_every_never_green_oracle_gate_is_in_window():
     """A gate with an oracle but no green row in any committed
     CORRECTNESS file is exactly what the window exists to prove."""
-    green = set()
-    for n in range(1, 50):
-        p = os.path.join(REPO, f"CORRECTNESS_r{n:02d}.json")
-        if not os.path.exists(p):
-            continue
-        with open(p) as f:
-            for k, v in json.load(f).items():
-                if v.get("hash_match"):
-                    green.add(k)
     oracles = entry.oracle_sql()
-    never_green = {k for k in entry.queries() if k in oracles} - green
-    # the window holds 50 slots; when never-green gates outnumber it
-    # (gates written after the window froze), the overflow must be
-    # EXPLICITLY staged in _NEXT_WINDOW_QUEUE — nothing falls through
-    # silently, and re-proof slots never displace a frozen window
-    # mid-round.
-    out = never_green - set(_window()) - set(entry._NEXT_WINDOW_QUEUE)
+    never_green = set(oracles) - set(_freshest_green())
+    out = never_green - set(_window())
     assert not out, f"never-green oracle-backed gates outside the window: {out}"
-    # queued gates must still be real, oracle-backed registry entries
-    stale_queue = [
-        k for k in entry._NEXT_WINDOW_QUEUE if k not in entry.queries()
-    ]
-    assert not stale_queue, f"queue names unknown gates: {stale_queue}"
+
+
+def test_green_gates_stalest_first():
+    """Never-green oracle gates precede every green one, green gates come
+    in non-decreasing freshest-green round, and oracle_sql() follows the
+    same order."""
+    oracles = entry.oracle_sql()
+    green = _freshest_green()
+    order = [k for k in entry.queries() if k in oracles]
+    rounds = [green.get(k, 0) for k in order]
+    assert rounds == sorted(rounds)
+    assert list(oracles) == order
+
+
+def test_rows_only_gates_come_last():
+    qs = list(entry.queries())
+    tail = qs[len(qs) - len(ROWS_ONLY_BY_NATURE):]
+    assert set(tail) == ROWS_ONLY_BY_NATURE, tail
+
+
+def test_entry_has_no_pinned_queues_or_import_guards():
+    with open(os.path.join(REPO, "__spark_entry__.py")) as f:
+        src = f.read()
+    assert not re.search(r"\b_R\d*_|_PRIORITY|_QUEUE", src)
+    assert "try:" not in src
+
+
+class _BrokenModule:
+    """Meta-path finder that makes one module's import fail."""
+
+    def __init__(self, name):
+        self.name = name
+
+    def find_spec(self, name, path=None, target=None):
+        if name == self.name:
+            raise SyntaxError(f"stand-in syntax error in {name}")
+        return None
+
+
+def test_broken_operator_module_fails_entry_import(monkeypatch):
+    """A broken family must fail loudly, not drop its gates silently."""
+    broken = "data_table_spark.operators.dedup"
+    for mod in ("__spark_entry__", broken):
+        monkeypatch.delitem(sys.modules, mod)
+    monkeypatch.delattr(sys.modules["data_table_spark.operators"], "dedup")
+    monkeypatch.setattr(sys, "meta_path", [_BrokenModule(broken), *sys.meta_path])
+    with pytest.raises(SyntaxError):
+        importlib.import_module("__spark_entry__")
 
 
 def test_rows_only_set_matches_registry():
@@ -111,172 +152,3 @@ def test_rows_only_set_matches_registry():
     assert no_oracle == ROWS_ONLY_BY_NATURE, (
         no_oracle ^ ROWS_ONLY_BY_NATURE
     )
-
-
-def _latest_green():
-    latest = {}
-    for n in range(1, 50):
-        p = os.path.join(REPO, f"CORRECTNESS_r{n:02d}.json")
-        if not os.path.exists(p):
-            continue
-        with open(p) as f:
-            for k, v in json.load(f).items():
-                if v.get("hash_match"):
-                    latest[k] = n
-    return latest
-
-
-def test_stalest_cohort_is_in_window_or_staged_for_r9():
-    """Round-6 judge item 4: the r3-proven cohort is the stalest green
-    set. Every gate whose FRESHEST green row is round 3 must either be
-    re-proven in this round's window or hold an explicit round-9
-    re-proof claim — the claim order is pinned here, not improvised
-    next round."""
-    latest = _latest_green()
-    stalest_round = min(latest.values())
-    stale = {k for k, r in latest.items() if r <= 3}
-    out = stale - set(_window()) - set(entry._R9_REPROOF_QUEUE)
-    assert not out, (
-        f"r{stalest_round}-resting gates neither in window nor staged: {out}"
-    )
-    # queue entries must be real registry gates (no stale names)
-    unknown = [k for k in entry._R9_REPROOF_QUEUE if k not in entry.queries()]
-    assert not unknown, f"r9 queue names unknown gates: {unknown}"
-
-
-def test_r4_cohort_reproved_in_r11():
-    """Archival, never re-interpreted: every pinned r4 claim
-    (_R11_REPROOF_QUEUE) earned its green row in the committed
-    CORRECTNESS_r11.json. Asserting against the committed artifact —
-    not against the live window — is what keeps this test true after
-    later rounds rotate the window (the round-11 judge's 'equality
-    against moving state' defect, VERDICT r11 item 2)."""
-    with open(os.path.join(REPO, "CORRECTNESS_r11.json")) as f:
-        r11 = json.load(f)
-    not_green = [
-        k
-        for k in entry._R11_REPROOF_QUEUE
-        if not r11.get(k, {}).get("hash_match")
-    ]
-    assert not not_green, f"pinned r4 claims without an r11 green: {not_green}"
-
-
-def test_r11_session_additions_drained_in_r12():
-    """Archival, never re-interpreted (round-12 ADVICE item 1: the old
-    form asserted `_PRIORITY[:27]` against an alias of itself). The 27
-    round-11 session additions are now an INDEPENDENT literal copied
-    from the round-11 commit; the committed CORRECTNESS_r12.json must
-    lead with exactly those 27 keys, in queue order, all green."""
-    assert len(entry._R11_SESSION_ADDITIONS) == 27
-    assert len(set(entry._R11_SESSION_ADDITIONS)) == 27
-    with open(os.path.join(REPO, "CORRECTNESS_r12.json")) as f:
-        r12 = json.load(f)
-    assert list(r12)[:27] == entry._R11_SESSION_ADDITIONS
-    not_green = [
-        k
-        for k in entry._R11_SESSION_ADDITIONS
-        if not r12.get(k, {}).get("hash_match")
-    ]
-    assert not not_green, f"r11 additions without an r12 green: {not_green}"
-
-
-def test_r5_cohort_drained_by_r12_and_r13():
-    """The r5 cohort claim order was consumed strictly as a prefix:
-    r11 spillover took 4, the committed round-12 window took the next
-    23 (asserted against CORRECTNESS_r12.json — archival), and the
-    round-13 window consumes the 16-gate remainder
-    (_R13_REPROOF_QUEUE) IN FULL as its rule-3a slots."""
-    with open(os.path.join(REPO, "CORRECTNESS_r12.json")) as f:
-        r12 = json.load(f)
-    assert list(r12)[27:50] == entry._R12_REPROOF_QUEUE[:23]
-    assert entry._R13_REPROOF_QUEUE == entry._R12_REPROOF_QUEUE[23:]
-    assert len(entry._R13_REPROOF_QUEUE) == 16
-    # rule-3a: the full remainder sits in this round's window, in the
-    # pinned order, directly after the rule-1 session additions
-    assert _window()[9:25] == entry._R13_REPROOF_QUEUE
-
-
-def test_r12_session_additions_drained_in_r13():
-    """Archival, never re-interpreted (round-14 inherited-state fix: the
-    pre-r13 form asserted these gates held NO committed green row, which
-    was true only until the round-13 grading file landed — the exact
-    'equality against moving state' defect of VERDICT r11 item 2, and
-    the round-12 verdict's 'coverage semantics' warning). The committed
-    CORRECTNESS_r13.json must lead with exactly the 9 round-12 session
-    additions, in queue order, all green — rule 1 achieved."""
-    assert len(entry._R12_SESSION_ADDITIONS) == 9
-    assert len(set(entry._R12_SESSION_ADDITIONS)) == 9
-    assert _window()[:9] == entry._R12_SESSION_ADDITIONS
-    with open(os.path.join(REPO, "CORRECTNESS_r13.json")) as f:
-        r13 = json.load(f)
-    assert list(r13)[:9] == entry._R12_SESSION_ADDITIONS
-    not_green = [
-        k
-        for k in entry._R12_SESSION_ADDITIONS
-        if not r13.get(k, {}).get("hash_match")
-    ]
-    assert not not_green, f"r12 additions without an r13 green: {not_green}"
-
-
-def test_r6_cohort_is_in_window_or_staged():
-    """Once the r5 remainder re-proves this round, the r6 cohort is the
-    stalest green set. Its claim order is pinned NOW
-    (_R6_COHORT_CLAIM_ORDER, q-gates numeric then families
-    alphabetical); round 13's rule-3b slots consume the FIRST 25, and
-    _R14_REPROOF_QUEUE is exactly the unconsumed suffix.
-
-    COVERAGE, not equality: a grading file landing mid-round moves
-    gates OUT of the stale set, so the pinned order must be a superset
-    of whatever still rests on r6 — never asserted equal to it."""
-    latest = _latest_green()
-    stale = {k for k, r in latest.items() if r == 6}
-    assert stale <= set(entry._R6_COHORT_CLAIM_ORDER), (
-        stale - set(entry._R6_COHORT_CLAIM_ORDER)
-    )
-    out = stale - set(_window()) - set(entry._R14_REPROOF_QUEUE)
-    assert not out, f"r6-resting gates neither in window nor staged: {out}"
-    unknown = [
-        k
-        for k in entry._R6_COHORT_CLAIM_ORDER
-        if k not in entry.queries()
-    ]
-    assert not unknown, f"r6 claim order names unknown gates: {unknown}"
-    # rule-3b slots consume the r6 claim order's prefix, no skipping
-    # ahead; the r14 queue is exactly its suffix
-    consumed = [
-        k for k in entry._R6_COHORT_CLAIM_ORDER if k in set(_window())
-    ]
-    assert consumed == entry._R6_COHORT_CLAIM_ORDER[: len(consumed)], (
-        "rule-3b slots skip ahead of the pinned r6 claim order"
-    )
-    assert entry._R14_REPROOF_QUEUE == entry._R6_COHORT_CLAIM_ORDER[
-        len(consumed):
-    ], "r14 queue is not the unconsumed suffix of the r6 claim order"
-    # a queued claim must not also burn a window slot
-    dup = set(entry._R14_REPROOF_QUEUE) & set(_window())
-    assert not dup, f"r14 queue duplicates round-13 window slots: {dup}"
-
-
-def test_r7_cohort_claim_order_pinned_for_r14():
-    """The r7 cohort becomes the stalest green set once the r6
-    remainder re-proves; its claim order was pinned at round-13 END
-    (before the round-14 window freezes). COVERAGE, not equality: the
-    pinned order must be a superset of whatever still rests on r7,
-    every name must resolve, and no name may duplicate a claim already
-    staged in _R14_REPROOF_QUEUE."""
-    latest = _latest_green()
-    stale = {k for k, r in latest.items() if r == 7}
-    assert stale <= set(entry._R7_COHORT_CLAIM_ORDER), (
-        stale - set(entry._R7_COHORT_CLAIM_ORDER)
-    )
-    unknown = [
-        k
-        for k in entry._R7_COHORT_CLAIM_ORDER
-        if k not in entry.queries()
-    ]
-    assert not unknown, f"r7 claim order names unknown gates: {unknown}"
-    assert len(entry._R7_COHORT_CLAIM_ORDER) == len(
-        set(entry._R7_COHORT_CLAIM_ORDER)
-    )
-    dup = set(entry._R7_COHORT_CLAIM_ORDER) & set(entry._R14_REPROOF_QUEUE)
-    assert not dup, f"r7 order duplicates staged r14 claims: {dup}"
