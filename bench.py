@@ -43,6 +43,7 @@ def _default_heap_gb() -> int:
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{_default_heap_gb()}g")
 
 from data_table_spark.session import get_spark  # noqa: E402
+from data_table_spark.sources.registry import DEFAULT_SF_DIR, load_table  # noqa: E402
 
 
 def materialize(df) -> None:
@@ -143,7 +144,7 @@ def _wait_for_quiet_host() -> None:
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     _wait_for_quiet_host()
     env_before = _env_fingerprint()
@@ -167,7 +168,7 @@ def main() -> None:
 
     qs = entry_mod.queries()
     # warm the JVM/codegen once so timings reflect steady state, not init
-    spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
+    load_table(spark, "region", sf_dir).count()
     timings: dict[str, float] = {}
     t_all = time.perf_counter()
     for i, name in enumerate(sorted(qs)):

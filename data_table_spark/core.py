@@ -37,30 +37,9 @@ from .inference import (
     guess_types_with_audit,
 )
 from .names import dedupe_names, resolve_column, spark_safe_name, symbolize_name
-from .sources.registry import local_slices
+from .sources.registry import local_df
 
 ROW_ID = "_row_id"
-
-def _local_relation(spark: SparkSession, data, schema) -> DataFrame:
-    """Driver-side literal rows → DataFrame, sliced by input size.
-
-    ``createDataFrame`` over a python list parallelizes into
-    defaultParallelism slices regardless of size, so a 6-row fixture
-    schedules one pickled-python task PER CORE on EVERY job that
-    touches it (measured ~0.33 s warm per no-op materialize of a 6-row
-    facade table on local[32] — scheduling + python-worker round trips,
-    zero data; multi-job facade paths like coerce_types pay it
-    repeatedly). The facade constructors therefore run the standard
-    list-path ``createDataFrame`` ONCE for its full-list driver-side
-    type inference and untyped-cell demotion (semantics untouched),
-    then rebuild the frame here on a right-sized RDD with the RESOLVED
-    schema — identical per-row converters, one python round trip per
-    job instead of one per core (sources.registry.local_df rationale;
-    slicing = local_slices, one slice per 10k rows)."""
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(data, local_slices(spark, len(data))),
-        schema,
-    )
 
 
 def with_row_id(df: DataFrame, col: str = ROW_ID) -> DataFrame:
@@ -174,7 +153,10 @@ class DataTable:
                     + [T.StructField(k, T.StringType()) for k in keys]
                 )
                 rows, df = str_rows, spark.createDataFrame(str_rows, str_schema)
-            df = _local_relation(spark, rows, df.schema)
+            # the list-path frame above only resolves the schema (type
+            # inference, untyped-cell demotion); the rows ride a
+            # right-sized literal built from it
+            df = local_df(spark, rows, df.schema)
         else:
             schema = T.StructType(
                 [T.StructField(ROW_ID, T.LongType())]
@@ -233,7 +215,7 @@ class DataTable:
                 for r in padded
             ]
             df = spark.createDataFrame(padded, str_schema)
-        df = _local_relation(spark, padded, df.schema)
+        df = local_df(spark, padded, df.schema)
         return cls(df, config=config, _has_row_id=True, _n_rows=len(padded))
 
     @classmethod
@@ -394,7 +376,7 @@ class DataTable:
             vals_df = spark.createDataFrame(
                 val_rows, schema=[ROW_ID, "_dt_new"]
             )
-            vals_df = _local_relation(spark, val_rows, vals_df.schema)
+            vals_df = local_df(spark, val_rows, vals_df.schema)
             old_c, new_c = F.col(name), F.col("_dt_new")
             if dict(dt._df.dtypes)[name] != dict(vals_df.dtypes)["_dt_new"]:
                 # untyped-cell model: mixing value types demotes the column
@@ -457,7 +439,7 @@ class DataTable:
             [T.StructField(ROW_ID, T.LongType(), False)]
         )
         pad_rows = [(i,) for i in range(cur, n)]
-        pad = _local_relation(spark, pad_rows, pad_schema)
+        pad = local_df(spark, pad_rows, pad_schema)
         for f in self._df.schema.fields:
             if f.name != ROW_ID:
                 pad = pad.withColumn(f.name, F.lit(None).cast(f.dataType))

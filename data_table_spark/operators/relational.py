@@ -23,7 +23,6 @@ Scale posture per query class:
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -31,11 +30,7 @@ from pyspark.sql import functions as F
 
 from ..functions.cleaning import relaxed_double, trim_and_nullify
 from ..lineage import truncate_lineage
-from ..sources.registry import local_df
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from ..sources.registry import load_table, local_df
 
 
 def _sorted_array_pairs(col: str):
@@ -109,12 +104,12 @@ def _floor_div_dec(num, den):
 
 def q01_scan_project(spark, sf_dir):
     """Parquet scan + projection (column pruning reaches the reader)."""
-    return _t(spark, sf_dir, "region").select("r_regionkey", "r_name")
+    return load_table(spark, "region", sf_dir).select("r_regionkey", "r_name")
 
 
 def q02_filter(spark, sf_dir):
     """Comparison predicates; both push down to the parquet scan."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     return (
         li.where((F.col("l_quantity") > 30) & (F.col("l_returnflag") == "R"))
         .select("l_orderkey", "l_linenumber", "l_quantity")
@@ -122,7 +117,7 @@ def q02_filter(spark, sf_dir):
 
 
 def q03_in_between_like(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     return (
         o.where(
             F.col("o_orderstatus").isin("O", "F")
@@ -139,8 +134,8 @@ def q03_in_between_like(spark, sf_dir):
 def q04_inner_join(spark, sf_dir):
     """Fact-dim equi join; customer is small per-SF → leave strategy to
     Catalyst/AQE (broadcasts under threshold, sort-merge above)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, "customer", sf_dir)
+    o = load_table(spark, "orders", sf_dir)
     return (
         c.join(o, c.c_custkey == o.o_custkey, "inner")
         .select("c_custkey", "o_orderkey")
@@ -150,9 +145,9 @@ def q04_inner_join(spark, sf_dir):
 def q05_multiway_join(spark, sf_dir):
     """3-way star join; nation(25)/region(5) are broadcast explicitly —
     at 100 TB these dims are still tiny, so the fact table never shuffles."""
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
+    c = load_table(spark, "customer", sf_dir)
+    n = load_table(spark, "nation", sf_dir)
+    r = load_table(spark, "region", sf_dir)
     return (
         c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
@@ -161,8 +156,8 @@ def q05_multiway_join(spark, sf_dir):
 
 
 def q06_left_join(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, "customer", sf_dir)
+    o = load_table(spark, "orders", sf_dir)
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left")
         .select("c_custkey", "o_orderkey")
@@ -172,8 +167,8 @@ def q06_left_join(spark, sf_dir):
 def q07_full_outer(spark, sf_dir):
     """Full outer of two per-nation aggregates — aggregate BEFORE joining
     so the outer join sees O(nations) rows, not O(customers)."""
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
+    c = load_table(spark, "customer", sf_dir)
+    s = load_table(spark, "supplier", sf_dir)
     a = c.groupBy(F.col("c_nationkey").alias("ak")).agg(F.count("*").alias("c"))
     b = s.groupBy(F.col("s_nationkey").alias("bk")).agg(F.count("*").alias("s"))
     return (
@@ -184,8 +179,8 @@ def q07_full_outer(spark, sf_dir):
 
 def q08_semi_join(spark, sf_dir):
     """EXISTS → left_semi: no duplication, no payload columns shuffled."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("c_custkey"))
+    c = load_table(spark, "customer", sf_dir)
+    o = load_table(spark, "orders", sf_dir).select(F.col("o_custkey").alias("c_custkey"))
     return c.join(o, "c_custkey", "left_semi").select("c_custkey")
 
 
@@ -195,9 +190,9 @@ def q09_anti_join(spark, sf_dir):
     EMPTY at every sf in this synthesis, so the gate was matching its
     oracle on zero rows and proving nothing; the priority filter keeps
     the anti-join shape and populates both sides.)"""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, "customer", sf_dir)
     o = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, "orders", sf_dir)
         .where(F.col("o_orderpriority") == "1-URGENT")
         .select(F.col("o_custkey").alias("c_custkey"))
     )
@@ -205,8 +200,8 @@ def q09_anti_join(spark, sf_dir):
 
 
 def q10_cross_join(spark, sf_dir):
-    r1 = _t(spark, sf_dir, "region").select(F.col("r_name").alias("a"))
-    r2 = _t(spark, sf_dir, "region").select(F.col("r_name").alias("b"))
+    r1 = load_table(spark, "region", sf_dir).select(F.col("r_name").alias("a"))
+    r2 = load_table(spark, "region", sf_dir).select(F.col("r_name").alias("b"))
     return r1.crossJoin(r2)
 
 
@@ -214,8 +209,8 @@ def q11_theta_join(spark, sf_dir):
     """Equi key + inequality residual: executes as an equi join on
     l_partkey with the range predicate as a post-join filter — NOT a
     nested-loop; scales like any shuffle join."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    li = load_table(spark, "lineitem", sf_dir)
+    p = load_table(spark, "part", sf_dir)
     return (
         li.join(
             p,
@@ -232,7 +227,7 @@ def q11_theta_join(spark, sf_dir):
 def q12_group_agg(spark, sf_dir):
     """TPC-H Q1 shape: partial agg map-side, 6-group final — the canonical
     'aggregate early' plan."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     return li.groupBy("l_returnflag", "l_linestatus").agg(
         F.round(F.sum("l_quantity"), 2).alias("sq"),
         F.round(F.avg("l_extendedprice"), 2).alias("ap"),
@@ -241,14 +236,14 @@ def q12_group_agg(spark, sf_dir):
 
 
 def q13_count_distinct(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, "customer", sf_dir)
     return c.groupBy("c_mktsegment").agg(
         F.countDistinct("c_nationkey").alias("nd")
     )
 
 
 def q14_having(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     return (
         o.groupBy("o_custkey")
         .agg(F.count("*").alias("cnt"))
@@ -257,19 +252,19 @@ def q14_having(spark, sf_dir):
 
 
 def q15_rollup(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, "customer", sf_dir)
     return c.rollup("c_mktsegment", "c_nationkey").agg(F.count("*").alias("cnt"))
 
 
 def q16_cube(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     return o.cube("o_orderstatus", "o_orderpriority").agg(F.count("*").alias("cnt"))
 
 
 def q17_approx_count_distinct(spark, sf_dir):
     """HLL++ sketch — constant memory per partition vs exact distinct's
     shuffle; tolerance-checked (±5%) rather than hash-matched."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     return o.agg(F.approx_count_distinct("o_custkey", rsd=0.01).alias("acd"))
 
 
@@ -278,7 +273,7 @@ def q17_approx_count_distinct(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 def q18_row_number(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     return o.select(
         "o_custkey", "o_orderkey",
@@ -287,7 +282,7 @@ def q18_row_number(spark, sf_dir):
 
 
 def q19_rank(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     w = Window.partitionBy("l_returnflag").orderBy("l_quantity")
     return li.select(
         "l_returnflag", "l_orderkey", "l_linenumber", "l_quantity",
@@ -297,7 +292,7 @@ def q19_rank(spark, sf_dir):
 
 
 def q20_lag_lead(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     return o.select(
         "o_custkey", "o_orderkey",
@@ -307,7 +302,7 @@ def q20_lag_lead(spark, sf_dir):
 
 
 def q21_running_sum(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     w = (
         Window.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")
@@ -324,7 +319,7 @@ def q22_ntile(spark, sf_dir):
     reports, not a 100 TB path — the scale-safe variant is
     operators/scale.ntile_approx (two-pass approx-quantile bucketing,
     map-only after the boundary broadcast, golden+plan tested)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     w = Window.orderBy("o_totalprice", "o_orderkey")
     return o.select(
         "o_orderkey", F.ntile(4).over(w).cast("long").alias("q")
@@ -338,7 +333,7 @@ def q22_ntile(spark, sf_dir):
 def q23_top_k(spark, sf_dir):
     """orderBy+limit compiles to TakeOrderedAndProject: per-partition
     partial top-k then a k-row merge on one task — no global sort."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     return (
         o.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
         .select("o_orderkey", "o_totalprice")
@@ -347,14 +342,14 @@ def q23_top_k(spark, sf_dir):
 
 
 def q24_union_all(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("k"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("k"))
+    c = load_table(spark, "customer", sf_dir).select(F.col("c_nationkey").alias("k"))
+    s = load_table(spark, "supplier", sf_dir).select(F.col("s_nationkey").alias("k"))
     return c.unionByName(s).groupBy("k").agg(F.count("*").alias("c"))
 
 
 def q25_intersect(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer").select("c_nationkey")
-    s = _t(spark, sf_dir, "supplier").select(
+    c = load_table(spark, "customer", sf_dir).select("c_nationkey")
+    s = load_table(spark, "supplier", sf_dir).select(
         F.col("s_nationkey").alias("c_nationkey")
     )
     return c.intersect(s)
@@ -367,10 +362,10 @@ def q26_except(spark, sf_dir):
     original nation-key difference was EMPTY at every sf — suppliers
     cover every customer nation — so the gate matched its oracle on
     zero rows.)"""
-    ship = _t(spark, sf_dir, "lineitem").select(
+    ship = load_table(spark, "lineitem", sf_dir).select(
         F.to_date("l_shipdate").alias("day")
     )
-    ordered = _t(spark, sf_dir, "orders").select(
+    ordered = load_table(spark, "orders", sf_dir).select(
         F.to_date("o_orderdate").alias("day")
     )
     return ship.subtract(ordered)
@@ -381,7 +376,7 @@ def q26_except(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 def q27_strings(spark, sf_dir):
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, "part", sf_dir)
     return p.select(
         "p_partkey",
         F.upper("p_brand").alias("ub"),
@@ -421,7 +416,7 @@ def q29_relaxed_parse(spark, sf_dir):
 
 
 def q30_dates(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     return o.select(
         "o_orderkey",
         F.year("o_orderdate").cast("long").alias("y"),
@@ -431,7 +426,7 @@ def q30_dates(spark, sf_dir):
 
 
 def q31_math(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     return li.select(
         "l_orderkey", "l_linenumber",
         F.round("l_extendedprice", 1).alias("r"),
@@ -443,8 +438,8 @@ def q31_math(spark, sf_dir):
 
 
 def q32_conditionals(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, "customer", sf_dir)
+    o = load_table(spark, "orders", sf_dir)
     j = c.join(o, c.c_custkey == o.o_custkey, "left")
     return j.select(
         "c_custkey",
@@ -617,8 +612,6 @@ RELATIONAL_ORACLE: dict[str, str] = {
 def q33_events_tumbling(spark, sf_dir):
     """Batch form of streaming S1: 5-minute tumbling buckets over events
     (epoch-floor buckets so the oracle is engine-neutral)."""
-    from ..sources.registry import load_table
-
     e = load_table(spark, "events", sf_dir)
     bucket = F.floor(F.unix_timestamp("ts") / 300).cast("long")
     return e.groupBy(bucket.alias("bucket"), "event_type").agg(
@@ -630,8 +623,6 @@ def q34_sessionization(spark, sf_dir):
     """Batch sessionization (gaps-and-islands): a session breaks after a
     30-minute silence per user. One window pass for lag, one running sum
     for session ids, one agg — all shuffles on user_id."""
-    from ..sources.registry import load_table
-
     e = load_table(spark, "events", sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.when(
@@ -653,7 +644,7 @@ def q34_sessionization(spark, sf_dir):
 def q35_pivot(spark, sf_dir):
     """Pivot l_returnflag values into columns (oracle spells it as
     conditional aggregation — the portable form of PIVOT)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     return (
         li.groupBy("l_linestatus")
         .pivot("l_returnflag", ["A", "N", "R"])
@@ -669,7 +660,7 @@ def q35_pivot(spark, sf_dir):
 
 def q36_string_breadth(spark, sf_dir):
     """Wider scalar-string coverage: pad/replace/position/initcap-adjacent."""
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, "part", sf_dir)
     return p.select(
         "p_partkey",
         F.lpad("p_brand", 12, "*").alias("lp"),
@@ -684,7 +675,7 @@ def q36_string_breadth(spark, sf_dir):
 
 def q37_date_breadth(spark, sf_dir):
     """Date arithmetic: diffs, offsets, truncation, parts, last_day."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     d = F.col("o_orderdate").cast("date")
     return o.select(
         "o_orderkey",
@@ -701,7 +692,7 @@ def q38_grouping_sets(spark, sf_dir):
     """Explicit GROUPING SETS (beyond rollup/cube): totals by status, by
     priority, and grand total — via SQL (the DataFrame API spells it
     rollup/cube only)."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_gs")
+    load_table(spark, "orders", sf_dir).createOrReplaceTempView("orders_gs")
     return spark.sql(
         """
         SELECT o_orderstatus, o_orderpriority, COUNT(*) AS cnt
@@ -713,7 +704,7 @@ def q38_grouping_sets(spark, sf_dir):
 
 def q39_string_agg(spark, sf_dir):
     """Ordered string aggregation: deterministic via sorted collect."""
-    n = _t(spark, sf_dir, "nation")
+    n = load_table(spark, "nation", sf_dir)
     return n.groupBy("n_regionkey").agg(
         F.array_join(F.array_sort(F.collect_list("n_name")), ",").alias("nations")
     )
@@ -721,7 +712,7 @@ def q39_string_agg(spark, sf_dir):
 
 def q40_conditional_agg(spark, sf_dir):
     """FILTER-style conditional aggregation + least/greatest."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     return li.groupBy("l_returnflag").agg(
         F.count(F.when(F.col("l_quantity") > 25, 1)).alias("n_big"),
         F.count(F.when(F.col("l_discount") == 0, 1)).alias("n_nodisc"),
@@ -804,7 +795,7 @@ RELATIONAL_ORACLE.update(
 def q41_percentiles(spark, sf_dir):
     """Exact percentiles per group (linear interpolation — both engines
     interpolate identically on doubles; 6dp rounding absorbs ulp noise)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     return li.groupBy("l_returnflag").agg(
         F.round(F.expr("percentile(l_extendedprice, 0.5)"), 6).alias("p50"),
         F.round(F.expr("percentile(l_extendedprice, 0.9)"), 6).alias("p90"),
@@ -815,8 +806,8 @@ def q41_percentiles(spark, sf_dir):
 def q42_correlated_subquery(spark, sf_dir):
     """Correlated scalar subquery — Catalyst decorrelates it into a join
     (no per-row re-execution; check the plan for the rewritten agg+join)."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_cs")
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("customer_cs")
+    load_table(spark, "orders", sf_dir).createOrReplaceTempView("orders_cs")
+    load_table(spark, "customer", sf_dir).createOrReplaceTempView("customer_cs")
     return spark.sql(
         """
         SELECT c_custkey,
@@ -830,7 +821,7 @@ def q42_correlated_subquery(spark, sf_dir):
 def q43_range_frame(spark, sf_dir):
     """RANGE window frame: sum of all orders within ±1000.0 of the current
     price, per status — value-based frames, not row-based."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_rf")
+    load_table(spark, "orders", sf_dir).createOrReplaceTempView("orders_rf")
     # SQL form: the DataFrame API's rangeBetween only takes integer
     # offsets; RANGE with fractional bounds needs the SQL surface
     return spark.sql(
@@ -847,7 +838,7 @@ def q43_range_frame(spark, sf_dir):
 
 def q44_first_last_value(spark, sf_dir):
     """first_value / last_value / nth_value over a full-partition frame."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     w = (
         Window.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")
@@ -864,7 +855,7 @@ def q44_first_last_value(spark, sf_dir):
 def q45_case_insensitive_and_regex(spark, sf_dir):
     """regexp_extract / regexp_count / case-insensitive match — the
     regex scalar family."""
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, "part", sf_dir)
     return p.select(
         "p_partkey",
         F.regexp_extract("p_type", r"^(\w+)", 1).alias("first_word"),
@@ -921,7 +912,7 @@ def q46_array_ops(spark, sf_dir):
     """G4: array build / join / element access — the reference's list-cell
     → ", "-joined-string semantics (data-table.lisp:448-451) as native
     array columns."""
-    n = _t(spark, sf_dir, "nation")
+    n = load_table(spark, "nation", sf_dir)
     arr = F.array("n_name", F.upper("n_name"))
     return n.select(
         "n_nationkey",
@@ -947,9 +938,9 @@ def q47_tpch_q3_shape(spark, sf_dir):
     """Composite showcase (TPC-H Q3 shape): selective filters pushed to
     both scans, fact-fact join, aggregation, top-k — Catalyst orders the
     joins, AQE resizes the shuffle."""
-    c = _t(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    c = load_table(spark, "customer", sf_dir).where(F.col("c_mktsegment") == "BUILDING")
+    o = load_table(spark, "orders", sf_dir)
+    li = load_table(spark, "lineitem", sf_dir)
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -967,11 +958,11 @@ def q47_tpch_q3_shape(spark, sf_dir):
 def q48_tpch_q5_shape(spark, sf_dir):
     """Composite showcase (TPC-H Q5 shape): 5-way star join with broadcast
     dims + grouped revenue per nation."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
+    c = load_table(spark, "customer", sf_dir)
+    o = load_table(spark, "orders", sf_dir)
+    li = load_table(spark, "lineitem", sf_dir)
+    s = load_table(spark, "supplier", sf_dir)
+    n = load_table(spark, "nation", sf_dir)
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -1022,8 +1013,6 @@ def q49_json_extract(spark, sf_dir):
     vs 0.35 s local for the dual-parse form). The path-string form
     (``get_json_object``) is asserted equal in
     tests/test_relational.py::test_json_extract_paths_agree."""
-    from ..sources.registry import load_table
-
     e = load_table(spark, "events", sf_dir)
     return (
         e.select(
@@ -1047,8 +1036,8 @@ def q50_right_join(spark, sf_dir):
     /root/reference/clsql-data-table.lisp:13-19). Catalyst plans right outer
     exactly like left outer with sides swapped; customers without orders
     survive with NULL o_orderkey."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, "customer", sf_dir)
+    o = load_table(spark, "orders", sf_dir)
     return (
         o.join(c, o.o_custkey == c.c_custkey, "right")
         .select("c_custkey", "o_orderkey")
@@ -1059,8 +1048,8 @@ def q51_union_distinct(spark, sf_dir):
     """UNION (distinct) — union() is bag concat, distinct() dedupes; Spark
     plans this as a single hash aggregate over the concatenated scans (no
     extra shuffle vs UNION ALL + GROUP BY)."""
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("k"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("k"))
+    c = load_table(spark, "customer", sf_dir).select(F.col("c_nationkey").alias("k"))
+    s = load_table(spark, "supplier", sf_dir).select(F.col("s_nationkey").alias("k"))
     return c.union(s).distinct()
 
 
@@ -1068,16 +1057,16 @@ def q52_except_all(spark, sf_dir):
     """EXCEPT ALL — multiset difference keeps duplicate cardinality
     (customer has ~60 rows per nationkey, supplier ~4; the result keeps the
     surplus copies, unlike q26's set-semantics EXCEPT)."""
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("k"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("k"))
+    c = load_table(spark, "customer", sf_dir).select(F.col("c_nationkey").alias("k"))
+    s = load_table(spark, "supplier", sf_dir).select(F.col("s_nationkey").alias("k"))
     return c.exceptAll(s)
 
 
 def q53_intersect_all(spark, sf_dir):
     """INTERSECT ALL — multiset intersection (min of per-side
     multiplicities per key)."""
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("k"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("k"))
+    c = load_table(spark, "customer", sf_dir).select(F.col("c_nationkey").alias("k"))
+    s = load_table(spark, "supplier", sf_dir).select(F.col("s_nationkey").alias("k"))
     return c.intersectAll(s)
 
 
@@ -1107,7 +1096,7 @@ def q54_unpivot(spark, sf_dir):
     columns back to (part, metric, value) long form. Spark's unpivot is a
     zero-shuffle generate (each input row fans out to len(metrics) rows
     map-side)."""
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, "part", sf_dir)
     return p.select(
         "p_partkey",
         F.col("p_retailprice").alias("retail"),
@@ -1137,8 +1126,6 @@ def q55_time_rollup(spark, sf_dir):
     date_trunc buckets (one shuffle; each input row expands to its two
     grouping sets map-side — how a timeseries store backfills multi-level
     rollups without rescanning per level)."""
-    from ..sources.registry import load_table
-
     load_table(spark, "events", sf_dir).createOrReplaceTempView("events_tr")
     return spark.sql(
         """
@@ -1169,8 +1156,6 @@ def q56_map_entries(spark, sf_dir):
     """MAP-typed column surface: parse props into map<string,string>,
     explode to (key, value) entry rows — from_json + explode are both
     map-side generates, no shuffle."""
-    from ..sources.registry import load_table
-
     e = load_table(spark, "events", sf_dir)
     m = F.from_json(F.col("props"), "map<string,string>")
     return e.select("event_id", F.explode(m).alias("key", "value")).orderBy(
@@ -1191,7 +1176,7 @@ RELATIONAL_ORACLE["q56_map_entries"] = (
 def q57_rank_ratios(spark, sf_dir):
     """percent_rank / cume_dist — relative-position window functions
     (the remaining rank family members beyond q19/q22)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     from pyspark.sql import Window
 
     w = Window.partitionBy("o_orderstatus").orderBy("o_totalprice", "o_orderkey")
@@ -1218,9 +1203,9 @@ def q58_tpch_q10_shape(spark, sf_dir):
     """TPC-H Q10 shape: revenue from returned items per customer, top 20.
     Two-join star with the filter pushed below both joins and the
     aggregate before the top-k (TakeOrderedAndProject)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
+    c = load_table(spark, "customer", sf_dir)
+    o = load_table(spark, "orders", sf_dir)
+    li = load_table(spark, "lineitem", sf_dir).where(F.col("l_returnflag") == "R")
     rev = F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     return (
         c.join(o, c.c_custkey == o.o_custkey)
@@ -1259,7 +1244,7 @@ def q59_latest_per_key(spark, sf_dir):
     a correctness bug, not a perf knob."""
     from pyspark.sql import Window
 
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     w = Window.partitionBy("o_custkey").orderBy(
         F.col("o_orderdate").desc(), F.col("o_orderkey").desc()
     )
@@ -1292,8 +1277,6 @@ def q60_variant_extract(spark, sf_dir):
     the parse into each extraction. try_parse_json (not parse_json) so a
     malformed props row degrades to NULL exactly like the oracle's
     TRY_CAST path instead of failing the whole job."""
-    from ..sources.registry import load_table
-
     e = load_table(spark, "events", sf_dir)
     return (
         e.select("event_id", F.try_parse_json(F.col("props")).alias("v"))
@@ -1359,8 +1342,6 @@ def q61_interval_join(spark, sf_dir):
     big-big path (interval_join_bucketed) even though this interval side
     is broadcast-sized — the plan is the one that scales; a plan test
     asserts no nested-loop join survives."""
-    from ..sources.registry import load_table
-
     e = load_table(spark, "events", sf_dir)
     iv = spark.range(10).select(
         F.col("id").alias("w_id"),
@@ -1403,14 +1384,14 @@ def q62_tpch_q7_shape(spark, sf_dir):
     different aliases; the only real shuffle is the final (nation,
     nation, year) aggregate, whose cardinality is tiny. The symmetric
     nation-pair predicate prunes before the aggregate."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    n1 = _t(spark, sf_dir, "nation").select(
+    li = load_table(spark, "lineitem", sf_dir)
+    o = load_table(spark, "orders", sf_dir)
+    c = load_table(spark, "customer", sf_dir)
+    s = load_table(spark, "supplier", sf_dir)
+    n1 = load_table(spark, "nation", sf_dir).select(
         F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")
     )
-    n2 = _t(spark, sf_dir, "nation").select(
+    n2 = load_table(spark, "nation", sf_dir).select(
         F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("cust_nation")
     )
     pair = (
@@ -1465,8 +1446,6 @@ def q63_funnel(spark, sf_dir):
     residual. Scale: every shuffle keys on user_id (the natural
     co-partitioning key for event analytics); stage outputs are
     one-row-per-user aggregates, monotonically shrinking."""
-    from ..sources.registry import load_table
-
     e = load_table(spark, "events", sf_dir)
     s1 = (
         e.where(F.col("event_type") == "signup")
@@ -1502,8 +1481,6 @@ def q64_retention_cohorts(spark, sf_dir):
     stream when it fits (cohort tables are users-sized, tiny next to
     events at 100 TB — but broadcastability is data-dependent, so the
     join is left unhinted for AQE to decide)."""
-    from ..sources.registry import load_table
-
     e = load_table(spark, "events", sf_dir).select(
         "user_id", F.to_date("ts").alias("day")
     )
@@ -1565,9 +1542,9 @@ def q65_tpch_q18_shape(spark, sf_dir):
     two of each; measured 15.7 s → 12.4 s at 100× facts, identical
     result). Top-20 compiles to TakeOrderedAndProject (no global
     sort)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    c = load_table(spark, "customer", sf_dir)
+    o = load_table(spark, "orders", sf_dir)
+    li = load_table(spark, "lineitem", sf_dir)
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("sq"))
@@ -1627,9 +1604,9 @@ def q66_tpch_q21_shape(spark, sf_dir):
     aggregate (measured 90 s → 53 s at 100× facts, identical result;
     the second shuffle is on the already-collapsed pair set).
     """
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    s = _t(spark, sf_dir, "supplier")
+    li = load_table(spark, "lineitem", sf_dir)
+    o = load_table(spark, "orders", sf_dir)
+    s = load_table(spark, "supplier", sf_dir)
     per_supp = li.groupBy("l_orderkey", "l_suppkey").agg(
         F.max((F.col("l_returnflag") == "R").cast("int")).alias("has_r")
     )
@@ -1680,9 +1657,9 @@ def q67_tpch_q2_shape(spark, sf_dir):
     exactly (both engines evaluate the identical binary64 division and
     order-independent MIN), rounded only for output.
     """
-    p = _t(spark, sf_dir, "part").where(F.col("p_size").between(10, 15))
-    s = _t(spark, sf_dir, "supplier")
-    li = _t(spark, sf_dir, "lineitem")
+    p = load_table(spark, "part", sf_dir).where(F.col("p_size").between(10, 15))
+    s = load_table(spark, "supplier", sf_dir)
+    li = load_table(spark, "lineitem", sf_dir)
     unit = li.select(
         "l_partkey", "l_suppkey",
         (F.col("l_extendedprice") / F.col("l_quantity")).alias("unit_price"),
@@ -1764,7 +1741,7 @@ def q68_merge_upsert(spark, sf_dir):
     The reprice factor is 2 (exact in binary floating point) so the
     ROUND never lands on a half-cent tie, where Spark's HALF_UP and
     DuckDB's double rounding disagree."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     base = o.where(F.col("o_orderkey") % 3 != 0)
     upd = (
         o.where(F.col("o_orderkey") % 2 == 0)
@@ -1809,8 +1786,8 @@ def q69_runtime_filter(spark, sf_dir):
     """
     from .scale import runtime_filter
 
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    o = load_table(spark, "orders", sf_dir)
+    li = load_table(spark, "lineitem", sf_dir)
     hot = o.where(
         (F.col("o_orderpriority") == "1-URGENT")
         & (F.col("o_totalprice") > 400000)
@@ -1883,7 +1860,7 @@ def q70_scd2_build(spark, sf_dir):
     """Gate: :func:`scd2_build` over the events table — per-user
     event_type validity intervals, ties broken by event_id so both
     engines see one deterministic sequence."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, "events", sf_dir)
     return scd2_build(e, "user_id", ["ts", "event_id"], "event_type")
 
 
@@ -1921,7 +1898,7 @@ def q71_incremental_agg(spark, sf_dir):
     doubles) so the two-level merge is associativity-proof — partial
     double sums re-added in a different order than a single-pass SUM
     can drift in the low bits."""
-    o = _t(spark, sf_dir, "orders").withColumn(
+    o = load_table(spark, "orders", sf_dir).withColumn(
         "price_cents", F.round(F.col("o_totalprice") * 100).cast("long")
     )
     split = "1997-01-01"
@@ -1998,7 +1975,7 @@ def q72_table_diff(spark, sf_dir):
     (max − 1000) via a broadcast scalar join — no driver collect, and
     the same shape at every sf — matching the oracle's scalar
     subquery, which DuckDB decorrelates identically."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
     cut = o.agg((F.max("o_orderkey") - 1000).alias("_cutoff"))
@@ -2061,7 +2038,7 @@ def q73_gap_fill(spark, sf_dir):
     partition. Both the daily aggregate and the windows partition on
     user_id, so the whole densification is two shuffles on one key.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, "events", sf_dir)
     daily = (
         e.withColumn("day", F.to_date("ts"))
         .groupBy("user_id", "day")
@@ -2132,7 +2109,7 @@ def q74_histogram(spark, sf_dir):
     rows per partition, vs. the naive orderBy+ntile histogram that
     global-sorts. Empty buckets are absent by construction (left to the
     caller to densify — at 100 TB a 20-row spine join is free)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     bucket = F.least(
         F.greatest(
             F.floor((F.col("o_totalprice") - HIST_LO) / HIST_W), F.lit(0)
@@ -2168,7 +2145,7 @@ def q75_corr_matrix(spark, sf_dir):
     Values are rounded to 4 decimals: Spark and DuckDB accumulate
     moments in different orders, identical to ~1e-12 — far inside the
     rounding — but not bit-equal."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     cols = ["l_quantity", "l_extendedprice", "l_discount"]
     aggs = []
     for i, x in enumerate(cols):
@@ -2209,7 +2186,7 @@ def q76_transition_matrix(spark, sf_dir):
     transition counts product analytics builds funnels from. One lag()
     window partitioned on user_id + one global count aggregation; the
     bigram never materializes per-path strings, just two columns."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, "events", sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return (
         e.withColumn("prev_type", F.lag("event_type").over(w))
@@ -2238,7 +2215,7 @@ def q77_outliers(spark, sf_dir):
     order have NULL stddev and are excluded by the comparison in both
     engines. The z-score is recomputed from the same double moments in
     both engines and rounded for output only."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     stats = o.groupBy("o_custkey").agg(
         F.avg("o_totalprice").alias("mu"),
         F.stddev_samp("o_totalprice").alias("sigma"),
@@ -2285,7 +2262,7 @@ def q78_fuzzy_match(spark, sf_dir):
     before any edit-distance is computed) and levenshtein only the
     blocked candidates."""
     p = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, "part", sf_dir)
         .where(F.col("p_partkey") < FUZZY_BOUND)
         .select("p_partkey", "p_name")
     )
@@ -2344,7 +2321,7 @@ def q79_cooccurrence(spark, sf_dir):
     multiset of pairs by construction (each order contributes each
     unordered distinct-part pair exactly once either way); equivalence
     vs the self-join form pinned in tests/test_optimization_r14.py."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_partkey")
     baskets = (
         li.groupBy("l_orderkey")
         .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
@@ -2385,7 +2362,7 @@ def q80_ab_test(spark, sf_dir):
     1-row result, computed identically in both engines, NULL in both
     when the pooled variance degenerates to zero. At 100 TB nothing
     here is driver-side."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, "events", sf_dir)
     # conversion = the user's FIRST event (by ts, event_id) is a
     # purchase — a genuinely varying behavioral flag at every scale
     # factor (an any-purchase flag saturates to 1 for every user in
@@ -2474,7 +2451,7 @@ def ntile_approx_buckets(spark, sf_dir):
     per dataset (boundaries are deterministic for a given input)."""
     from .scale import ntile_approx
 
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     return (
         ntile_approx(o, "o_totalprice", n=4)
         .groupBy("q")
@@ -2505,11 +2482,11 @@ def q81_tpch_q4_shape(spark, sf_dir):
     groupBy that follows reduces to the 5 priority rows. At 100 TB the
     only fact shuffle is the semi join's; the order-date window prunes
     at the scan (PushedFilters)."""
-    o = _t(spark, sf_dir, "orders").where(
+    o = load_table(spark, "orders", sf_dir).where(
         (F.col("o_orderdate") >= "1996-01-01")
         & (F.col("o_orderdate") < "1996-07-01")
     )
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     hit = o.join(
         li,
         (o["o_orderkey"] == li["l_orderkey"])
@@ -2540,8 +2517,8 @@ def q82_tpch_q13_shape(spark, sf_dir):
     runs over |customers| rows, already tiny. The non-join predicate
     (priority filter) rides on the orders side BEFORE the join, as the
     spec's ON-clause semantics require for outer joins."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").where(
+    c = load_table(spark, "customer", sf_dir)
+    o = load_table(spark, "orders", sf_dir).where(
         F.col("o_orderpriority") != "1-URGENT"
     )
     per_cust = (
@@ -2573,11 +2550,11 @@ def q83_tpch_q14_shape(spark, sf_dir):
     quantity) so the sums are associativity-proof and the BIGINT/ratio
     split keeps the oracle HUGEINT-free; the pct is a pure scalar over
     the 1-row result. part is a broadcast dim."""
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = load_table(spark, "lineitem", sf_dir).where(
         (F.col("l_shipdate") >= "1996-09-01")
         & (F.col("l_shipdate") < "1996-12-01")
     )
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, "part", sf_dir)
     j = li.join(p, li["l_partkey"] == p["p_partkey"])
     rev = F.round(
         F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000
@@ -2624,8 +2601,8 @@ def q84_tpch_q17_shape(spark, sf_dir):
     filter semi-joins the fact down to the brand's parts (broadcast).
     Quantities are integral doubles, so the window AVG is exact and the
     0.2·avg comparison is engine-identical."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").where(F.col("p_brand") == "Brand#23")
+    li = load_table(spark, "lineitem", sf_dir)
+    p = load_table(spark, "part", sf_dir).where(F.col("p_brand") == "Brand#23")
     j = li.join(
         p.select("p_partkey"),
         li["l_partkey"] == p["p_partkey"],
@@ -2673,12 +2650,12 @@ def q85_tpch_q20_shape(spark, sf_dir):
     HAVING threshold, and THAT key set semi-joins the supplier dim.
     Every step shrinks the data before the next; nothing fans out.
     Quantity sums run as BIGINT (quantities are integral doubles)."""
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = load_table(spark, "lineitem", sf_dir).where(
         (F.col("l_shipdate") >= "1997-01-01")
         & (F.col("l_shipdate") < "1998-01-01")
     )
-    p = _t(spark, sf_dir, "part").where(F.col("p_name").startswith("small"))
-    s = _t(spark, sf_dir, "supplier")
+    p = load_table(spark, "part", sf_dir).where(F.col("p_name").startswith("small"))
+    s = load_table(spark, "supplier", sf_dir)
     shipped = (
         li.join(
             p.select("p_partkey"),
@@ -2718,7 +2695,7 @@ def q86_tpch_q22_shape(spark, sf_dir):
     aggregate broadcast-crossed into the probe (no correlated re-scan),
     balances compare in exact integer cents, and the NOT EXISTS is a
     left-anti join against the pruned recent-orders key set."""
-    c = _t(spark, sf_dir, "customer").withColumn(
+    c = load_table(spark, "customer", sf_dir).withColumn(
         "bal_cents", F.round(F.col("c_acctbal") * 100).cast("long")
     )
     segs = ("AUTOMOBILE", "MACHINERY", "HOUSEHOLD")
@@ -2727,7 +2704,7 @@ def q86_tpch_q22_shape(spark, sf_dir):
         F.avg("bal_cents").alias("avg_cents")
     )
     recent = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, "orders", sf_dir)
         .where(F.col("o_orderdate") >= "2001-01-01")
         .select("o_custkey")
     )
@@ -2769,7 +2746,7 @@ def q87_tpch_q11_shape(spark, sf_dir):
     window over the ROLLUP — the fact is scanned and pre-aggregated
     exactly once, and the single partition holds only |parts| rows
     (plan-asserted: one parquet scan). Values in exact cents."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     pv = li.groupBy("l_partkey").agg(
         F.sum(
             F.round(F.col("l_extendedprice") * 100).cast("long")
@@ -2806,8 +2783,8 @@ def q88_tpch_q19_shape(spark, sf_dir):
     disjunction as the residual filter — NEVER a nested-loop join
     (plan-asserted in tests/test_plans.py). Revenue in exact e4
     integers as in q83."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    li = load_table(spark, "lineitem", sf_dir)
+    p = load_table(spark, "part", sf_dir)
     cond = (li["l_partkey"] == p["p_partkey"]) & (
         (
             (p["p_brand"] == "Brand#12")
@@ -2856,13 +2833,13 @@ def q89_tpch_q16_shape(spark, sf_dir):
     runs as a broadcast left-anti join (s_suppkey is non-null, so anti
     ≡ NOT IN); part is a broadcast dim; the only fact shuffle is the
     count-distinct's partial-agg exchange on the group keys."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").where(
+    li = load_table(spark, "lineitem", sf_dir)
+    p = load_table(spark, "part", sf_dir).where(
         (F.col("p_brand") != "Brand#45")
         & F.col("p_size").isin(1, 5, 9, 14, 20, 25, 30, 36)
     )
     bad = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, "supplier", sf_dir)
         .where(F.col("s_acctbal") < 0)
         .select("s_suppkey")
     )
@@ -2895,7 +2872,7 @@ def q90_latest_n_per_key(spark, sf_dir):
     — ONE shuffle on user_id with O(N) state per key, so a hot user
     costs N rows of state, not its whole history. Tie-break on event_id
     keeps the survivors deterministic."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, "events", sf_dir)
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts").desc(), F.col("event_id").desc()
     )
@@ -2924,12 +2901,12 @@ def q91_tpch_q8_shape(spark, sf_dir):
     conditional aggregate over a single joined pass (numerator and
     denominator together, never two scans). Revenue in exact e4
     integers; the share ratio is a scalar over the per-year rows."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
+    li = load_table(spark, "lineitem", sf_dir)
+    o = load_table(spark, "orders", sf_dir)
+    c = load_table(spark, "customer", sf_dir)
+    s = load_table(spark, "supplier", sf_dir)
+    n = load_table(spark, "nation", sf_dir)
+    r = load_table(spark, "region", sf_dir)
     cust_in_asia = (
         c.join(n, c["c_nationkey"] == n["n_nationkey"])
         .join(r, (n["n_regionkey"] == r["r_regionkey"]) & (r["r_name"] == "ASIA"))
@@ -3004,11 +2981,11 @@ def q92_tpch_q9_shape(spark, sf_dir):
     semi-reduces the fact FIRST so the big join moves only matching
     lines. (The spec's ps_supplycost is replaced by p_retailprice — the
     fixture has no partsupp — preserving the join/agg shape.)"""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    p = _t(spark, sf_dir, "part").where(F.col("p_name").contains("red"))
+    li = load_table(spark, "lineitem", sf_dir)
+    o = load_table(spark, "orders", sf_dir)
+    s = load_table(spark, "supplier", sf_dir)
+    n = load_table(spark, "nation", sf_dir)
+    p = load_table(spark, "part", sf_dir).where(F.col("p_name").contains("red"))
     supp_nation = s.join(
         n.select(
             F.col("n_nationkey").alias("sn_key"),
@@ -3061,11 +3038,11 @@ def q93_tpch_q12_shape(spark, sf_dir):
     join + dual conditional count. orders is the smaller side here and
     broadcasts at this sf; at scale both sides are facts and AQE picks
     SMJ. Counts via SUM(CASE) in exact integers."""
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = load_table(spark, "lineitem", sf_dir).where(
         (F.col("l_shipdate") >= "1997-01-01")
         & (F.col("l_shipdate") < "1998-01-01")
     )
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     j = li.join(o, li["l_orderkey"] == o["o_orderkey"])
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return j.groupBy("l_returnflag").agg(
@@ -3096,11 +3073,11 @@ def q94_tpch_q15_shape(spark, sf_dir):
     supplier dim for the name. Revenue in exact cents makes the
     equality-with-max well-defined (double maxima are a tie-break
     hazard)."""
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = load_table(spark, "lineitem", sf_dir).where(
         (F.col("l_shipdate") >= "1997-01-01")
         & (F.col("l_shipdate") < "1997-04-01")
     )
-    s = _t(spark, sf_dir, "supplier")
+    s = load_table(spark, "supplier", sf_dir)
     rev = li.groupBy("l_suppkey").agg(
         F.sum(
             F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000)
@@ -3139,7 +3116,7 @@ def q95_tpch_q6_shape(spark, sf_dir):
     simplest query in the suite and the one that most directly measures
     scan + pushdown health at 100 TB. Revenue = extendedprice×discount
     in exact e4 integers."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     flt = li.where(
         (F.col("l_shipdate") >= "1997-01-01")
         & (F.col("l_shipdate") < "1998-01-01")
@@ -3175,7 +3152,7 @@ def q96_tpch_q1_full(spark, sf_dir):
     shuffle on a 6-group key; money sums in exact e4 integers, the
     averages derived FROM those integer sums (identical in both
     engines) rather than re-aggregated doubles."""
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = load_table(spark, "lineitem", sf_dir).where(
         F.col("l_shipdate") <= "2001-09-01"
     )
     price_e4 = F.round(F.col("l_extendedprice") * 10000).cast("long")
@@ -3255,7 +3232,7 @@ def q97_column_profile(spark, sf_dir):
     meaningless AND its partials would brush the 64-bit ceiling past
     ~sf100 (≈4.5e18 at the 100× smoke already). avg_v is guarded for
     all-NULL columns (no non-null denominator → NULL, not a divide)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     nul_s = F.lit(None).cast("string")
     nul_d = F.lit(None).cast("double")
 
@@ -3366,7 +3343,7 @@ def q98_cdc_fold(spark, sf_dir):
     on user_id, so the whole fold is ONE shuffle (plan-asserted in
     tests/test_plans.py); per-key state is O(1), hot keys cost a sort,
     not memory."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, "events", sf_dir)
     log = e.select(
         "user_id", "ts", "event_id",
         F.when(F.col("event_type") == "signup", "set")
@@ -3486,7 +3463,7 @@ def q99_sliding_distinct(spark, sf_dir):
     The oracle is the naive quadratic form (spine LEFT JOIN events on
     BETWEEN + COUNT DISTINCT) — an independent semantic definition, so
     the gate proves the islands/difference-array rewrite exactly."""
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, "events", sf_dir).select(
         F.to_date("ts").alias("day"), "user_id"
     ).distinct()
     w_ord = Window.partitionBy("user_id").orderBy("day")
@@ -3592,7 +3569,7 @@ def q100_pagerank(spark, sf_dir):
     rounds. Dangling nodes are absent by construction here (every
     event type both sends and receives); a general build would add
     the dangling mass redistribution term."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, "events", sf_dir)
     w_ord = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # round-13 (guide §5): the transition-count table is vocabulary²-
     # sized but derives from the full event window — and it feeds the
@@ -3695,7 +3672,7 @@ def q101_pit_join(spark, sf_dir):
     cadence), so the residual scan per matched key is bounded; this is
     the cheaper plan than the q61-style bucketed interval join, which
     pays off only when intervals lack an equi key."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, "events", sf_dir)
     status = e.where(F.col("event_type").isin("signup", "error"))
     dim = scd2_build(
         status, "user_id", ["ts", "event_id"], "event_type"
@@ -3769,7 +3746,7 @@ def q102_skyline(spark, sf_dir):
     with DuckDB's native window — same algebra, independent engine."""
     from .scale import distributed_prefix_max
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     pts = li.groupBy(
         F.col("l_extendedprice").alias("p"), F.col("l_quantity").alias("q")
     ).agg(F.count(F.lit(1)).alias("c"))
@@ -3831,7 +3808,7 @@ def q103_weighted_median(spark, sf_dir):
     engines agree to the bit. (A high-cardinality value domain would
     swap the per-group window for the bucketed two-phase scan of
     scale.distributed_prefix_sum.)"""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     w_e4 = F.round(F.col("l_extendedprice") * 10000).cast("long")
     base = li.select(
         "l_returnflag", F.col("l_quantity").alias("v"), w_e4.alias("w")
@@ -3903,7 +3880,7 @@ def q104_chi_square(spark, sf_dir):
     would sum in shuffle order and could flap the last bits run to
     run). Output: per-cell observed/expected plus the shared
     χ²_e6 = Σ⌊contrib·10⁶⌋ and degrees of freedom on every row."""
-    e = _t(spark, sf_dir, "lineitem")
+    e = load_table(spark, "lineitem", sf_dir)
     cells = e.groupBy("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("o")
     )
@@ -3985,14 +3962,14 @@ def q105_interval_coverage(spark, sf_dir):
     is a user's own event count, the same bound q73 documents). Islands
     then collapse with one map-combinable aggregate.
     """
-    # tz-free epoch micros: events.ts is TIMESTAMP_NTZ, so unix_micros
-    # (TZ-typed) won't bind and unix_timestamp would re-interpret in the
-    # session zone; timestampdiff against the NTZ epoch matches DuckDB's
-    # epoch_us bit-for-bit regardless of session timezone
+    # exact epoch micros: events.ts is TIMESTAMP (load_table normalizes
+    # it); timestampdiff against the epoch literal, coerced to TIMESTAMP
+    # in the session zone (UTC), matches DuckDB's epoch_us bit-for-bit
+    # where unix_timestamp would truncate to seconds
     us = F.expr(
         "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
     )
-    ev = _t(spark, sf_dir, "events").select(
+    ev = load_table(spark, "events", sf_dir).select(
         "user_id",
         us.alias("s"),
         (us + (F.lit(1) + F.col("event_id") % 7) * F.lit(60_000_000))
@@ -4114,7 +4091,7 @@ def _copurchase_edges(spark, sf_dir) -> DataFrame:
     per-order expansion is constant work), and one distinct remains.
     Same edge set by construction: a<b ordering comes from the sorted
     array's index pairs."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_partkey")
     baskets = (
         li.groupBy("l_orderkey")
         .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
@@ -4281,7 +4258,7 @@ def q107_mode_per_group(spark, sf_dir):
     combinable; the collapsed table is bounded by |groups| x |distinct
     values|, NOT row count), then a tiny partitioned window picks the
     winner. No fact-table window, no single reducer."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     counts = li.groupBy(
         "l_returnflag", F.col("l_quantity").alias("v")
     ).agg(F.count(F.lit(1)).alias("cnt"))
@@ -4323,7 +4300,7 @@ def q108_percentile_disc(spark, sf_dir):
     the integer predicate ``100*cum >= p*n`` exactly, no float ceil.
     One conditional-min aggregate emits all three percentiles in a
     single pass over the collapsed table."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
     vals = o.groupBy(
         "o_orderpriority", cents.alias("v")
@@ -4383,8 +4360,8 @@ def q109_regression_slope(spark, sf_dir):
     moments to double is deterministic across engines, as is the IEEE
     arithmetic after it — the q104 pattern), and both slope and
     intercept are floored to e6 integers for the hash."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = load_table(spark, "orders", sf_dir)
+    c = load_table(spark, "customer", sf_dir)
     x = F.round(F.col("c_acctbal") * 100).cast("long")
     y = F.round(F.col("o_totalprice") * 100).cast("long")
     # no broadcast HINT on the customer projection: customer SCALES
@@ -4462,10 +4439,10 @@ def q110_pareto_cover(spark, sf_dir):
     scan). A customer is NEEDED while the cumulative revenue BEFORE it
     is under 80% of the total — the integer predicate 5·prev < 4·total,
     no float thresholds."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
+    o = load_table(spark, "orders", sf_dir)
+    c = load_table(spark, "customer", sf_dir)
+    n = load_table(spark, "nation", sf_dir)
+    r = load_table(spark, "region", sf_dir)
     rev = o.groupBy("o_custkey").agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
         .alias("rev")
@@ -4543,7 +4520,7 @@ def q111_session_paths(spark, sf_dir):
     rows landed. Both windows partition on user_id/session, so the
     whole query is two user-keyed shuffles plus a bounded path count
     (≤ |event_type|³ groups)."""
-    e = _t(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
+    e = load_table(spark, "events", sf_dir).select("user_id", "ts", "event_id", "event_type")
     w_seq = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap_s = (
         F.unix_timestamp("ts")
@@ -4617,7 +4594,7 @@ def q112_rrf_fusion(spark, sf_dir):
     bit-stable. Token counts come from regexp_count of non-space runs,
     which the two engines tokenize identically. Top-10 per language by
     (fused desc, doc_id) keeps the result bounded."""
-    d = _t(spark, sf_dir, "documents").select(
+    d = load_table(spark, "documents", sf_dir).select(
         "doc_id", "lang", "n_chars",
         F.regexp_count(F.col("text"), F.lit(r"\S+")).alias("n_tokens"),
     )
@@ -4689,8 +4666,8 @@ def q113_null_semantics(spark, sf_dir):
     rewritten as the NOT EXISTS form, which plans as a regular
     shuffled anti join). Output: both counts plus the null-probe row
     count, one row."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = load_table(spark, "orders", sf_dir)
+    c = load_table(spark, "customer", sf_dir)
     # fixed names + createOrReplace ⇒ reruns are idempotent (no view
     # accumulation across driver replays / best-of-2 bench runs)
     ov, cv = "q113_orders_probe", "q113_customer_excl"
@@ -4746,7 +4723,7 @@ def q114_cohort_ltv(spark, sf_dir):
     space (no timezone, no date_trunc dialect drift), revenue in exact
     cents, and the cumulative window runs over the COLLAPSED
     cohort×age matrix (bounded by months², not fact rows)."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, "orders", sf_dir).select(
         "o_custkey",
         (F.year("o_orderdate") * 12 + F.month("o_orderdate") - 1)
         .alias("ym"),
@@ -4811,14 +4788,14 @@ def q115_last_touch_attribution(spark, sf_dir):
     whose customer has no prior events credit to '(none)'."""
     from .asof import asof_join
 
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, "orders", sf_dir).select(
         F.col("o_custkey").alias("user_id"),
         F.col("o_orderdate").alias("ts"),
         "o_orderkey",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("rev"),
     )
     e = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, "events", sf_dir)
         .groupBy("user_id", "ts")
         .agg(F.max(F.struct("event_id", "event_type")).alias("m"))
         .select("user_id", "ts", F.col("m.event_type").alias("event_type"))
@@ -4869,8 +4846,8 @@ def q116_rolling_slope(spark, sf_dir):
     only double op, identical IEEE in both engines (q109's argument).
     Output: one row per (nation, day) with the trailing slope in
     cents/day, floored to e2."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = load_table(spark, "orders", sf_dir)
+    c = load_table(spark, "customer", sf_dir)
     daily = (
         o.join(
             # unhinted: customer scales with SF (round-5 ADVICE rule);
@@ -4984,7 +4961,7 @@ def q117_association_rules(spark, sf_dir):
     C(n,2) struct explode + count. No join of the line stream against
     itself anywhere; equivalence vs the self-join form pinned in
     tests/test_optimization_r14.py."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_partkey")
     baskets = truncate_lineage(
         li.groupBy("l_orderkey").agg(
             F.array_sort(F.collect_set("l_partkey")).alias("ps")
@@ -5083,7 +5060,7 @@ def q118_benford(spark, sf_dir):
     at powers of ten), expected frequencies come from a precomputed
     constant table, and observed shares are floored e6 integer ratios.
     One map-combinable aggregate over a single scan; 9 output rows."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
     d = o.select(
         F.substring(cents.cast("string"), 1, 1).cast("long").alias("digit")
@@ -5136,10 +5113,10 @@ def q119_gini(spark, sf_dir):
     made deterministic by the (rev, custkey) order — any tie order
     yields the same Σi·x since tied x are equal). Final ratio in
     doubles from exact moments, floored to e6."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n_ = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
+    o = load_table(spark, "orders", sf_dir)
+    c = load_table(spark, "customer", sf_dir)
+    n_ = load_table(spark, "nation", sf_dir)
+    r = load_table(spark, "region", sf_dir)
     rev = o.groupBy("o_custkey").agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
         .alias("rev")
@@ -5235,7 +5212,7 @@ def q120_spatial_grid_join(spark, sf_dir):
     values via the pipeline hash idiom). The ORACLE is the naive
     quadratic join — an algebraically independent construction, so a
     hash match certifies the grid decomposition itself."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, "customer", sf_dir)
 
     def h48(col, salt):
         return F.conv(
@@ -5345,7 +5322,7 @@ def q121_tree_closure(spark, sf_dir):
     parallel doubling), so the hash match certifies the doubling
     composition including the uneven-depth tail where a pointer
     already rests at the root. Output: every part's root and depth."""
-    p = _t(spark, sf_dir, "part").select(
+    p = load_table(spark, "part", sf_dir).select(
         F.col("p_partkey").alias("node")
     )
     state = p.select(
@@ -5413,7 +5390,7 @@ def q122_mad_outliers(spark, sf_dir):
     BIGINT arithmetic — no float compare anywhere. Three passes over
     collapsed tables, each shuffle bounded by |type| × |distinct
     value|, never row count."""
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, "events", sf_dir).select(
         "event_type",
         F.round(F.col("value") * 10000).cast("long").alias("v"),
     )
@@ -5504,7 +5481,7 @@ def q123_time_to_convert(spark, sf_dir):
     that's what makes the exact percentile scale; a per-user-value
     percentile would grow with users and belongs to ntile_approx).
     Output: one row with cohort sizes and p50/p90 lag days."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, "events", sf_dir)
     us = F.expr(
         "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
     )
@@ -5718,7 +5695,7 @@ def q125_ks_test(spark, sf_dir):
     the double ks_stat (the ks_num column is what forces the bound)."""
     from .scale import distributed_prefix_sum
 
-    o = _t(spark, sf_dir, "orders").where(
+    o = load_table(spark, "orders", sf_dir).where(
         F.col("o_orderpriority").isin("1-URGENT", "5-LOW")
     ).select(
         F.round(F.col("o_totalprice") * 100).cast("long").alias("p"),
@@ -5799,15 +5776,15 @@ def q126_hhi_concentration(spark, sf_dir):
     and hhi = numer/tot² converts the two exact integers to double in
     one deterministic rounding each. Dims (customer→nation→region)
     broadcast against the orders fact."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, "orders", sf_dir).select(
         "o_custkey",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("rev_c"),
     )
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation").select(
+    c = load_table(spark, "customer", sf_dir).select("c_custkey", "c_nationkey")
+    n = load_table(spark, "nation", sf_dir).select(
         "n_nationkey", "n_regionkey"
     )
-    r = _t(spark, sf_dir, "region").select("r_regionkey", "r_name")
+    r = load_table(spark, "region", sf_dir).select("r_regionkey", "r_name")
     per_nation = (
         o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
         .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
@@ -5863,7 +5840,7 @@ def q127_mutual_information(spark, sf_dir):
     bounded cell table, never the fact rows."""
     from pyspark.sql import Window
 
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, "events", sf_dir).select(
         "event_type", F.hour("ts").alias("hh")
     )
     cells = e.groupBy("event_type", "hh").agg(
@@ -5922,7 +5899,7 @@ def q128_trimmed_stats(spark, sf_dir):
     the kept count and kept sum — the mean's division is the only
     float, rounded once. No fact-table window; the per-segment window
     runs over collapsed distinct values."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, "customer", sf_dir)
     cents = F.round(F.col("c_acctbal") * 100).cast("long")
     vals = c.groupBy(
         "c_mktsegment", cents.alias("v")
@@ -5993,14 +5970,14 @@ def q129_decile_lift(spark, sf_dir):
     (lift_e6 = 1e6·buyers·region_n // (n·region_buyers)). Buyer flags
     come from a distinct-key semi-ish aggregation of orders, joined
     broadcast (customer-bounded)."""
-    c = _t(spark, sf_dir, "customer").select(
+    c = load_table(spark, "customer", sf_dir).select(
         "c_custkey", "c_nationkey",
         F.round(F.col("c_acctbal") * 100).cast("long").alias("bal_c"),
     )
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
-    r = _t(spark, sf_dir, "region").select("r_regionkey", "r_name")
+    n = load_table(spark, "nation", sf_dir).select("n_nationkey", "n_regionkey")
+    r = load_table(spark, "region", sf_dir).select("r_regionkey", "r_name")
     buyers = (
-        _t(spark, sf_dir, "orders").select("o_custkey").distinct()
+        load_table(spark, "orders", sf_dir).select("o_custkey").distinct()
         .withColumn("is_buyer", F.lit(1))
     )
     base = (
@@ -6079,7 +6056,7 @@ def q130_cusum_changepoint(spark, sf_dir):
     map-combinable agg; the cumulative window runs over ~2.4k day
     rows — the q99 day-spine bound, documented there), and the argmax
     is one conditional aggregate, not a sort."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, "orders", sf_dir).select(
         F.to_date("o_orderdate").alias("day"),
         F.round(F.col("o_totalprice") * 100).cast("long").alias("rev_c"),
     )
@@ -6145,7 +6122,7 @@ def q131_burstiness(spark, sf_dir):
     integers), and the Fano ratio (nΣx² − (Σx)²) / (n·Σx) is the one
     float, rounded once. Days are the type's active days (zero-count
     days excluded — documented choice, keeps the spine join out)."""
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, "events", sf_dir).select(
         "event_type", F.to_date("ts").alias("day")
     )
     daily = e.groupBy("event_type", "day").agg(
@@ -6217,7 +6194,7 @@ def q132_mannwhitney_auc(spark, sf_dir):
     columns."""
     from .scale import distributed_prefix_sum
 
-    o = _t(spark, sf_dir, "orders").where(
+    o = load_table(spark, "orders", sf_dir).where(
         F.col("o_orderpriority").isin("1-URGENT", "5-LOW")
     ).select(
         F.round(F.col("o_totalprice") * 100).cast("long").alias("p"),
@@ -6317,11 +6294,11 @@ def q133_spearman_corr(spark, sf_dir):
     identical doubles. One float division, rounded once."""
     from .scale import distributed_prefix_sum
 
-    o = _t(spark, sf_dir, "orders").groupBy("o_custkey").agg(
+    o = load_table(spark, "orders", sf_dir).groupBy("o_custkey").agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
         .alias("rev_c")
     )
-    c = _t(spark, sf_dir, "customer").select(
+    c = load_table(spark, "customer", sf_dir).select(
         "c_custkey",
         (F.round(F.col("c_acctbal") * 100).cast("long") + F.lit(100_000))
         .alias("bal_c"),
@@ -6557,7 +6534,7 @@ def q135_dow_seasonality(spark, sf_dir):
     the per-weekday argmax is a rank window over 7 bounded partitions
     of the day spine."""
     daily = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, "orders", sf_dir)
         .groupBy(F.to_date("o_orderdate").alias("day"))
         .agg(
             F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
@@ -6640,7 +6617,7 @@ def q136_countmin_estimate(spark, sf_dir):
     the probe join broadcasts it legitimately (not a q69-class guess:
     4096 rows is a constant)."""
     depth, width = 4, 1024
-    ev = _t(spark, sf_dir, "events").select("user_id")
+    ev = load_table(spark, "events", sf_dir).select("user_id")
     exact = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("exact_n")
     )
@@ -6732,7 +6709,7 @@ def q137_hll_distinct(spark, sf_dir):
     distinct sketch (registers merge by max across partitions — what
     Spark's partial aggregation does for free here)."""
     m = 256
-    ev = _t(spark, sf_dir, "events").select("user_id")
+    ev = load_table(spark, "events", sf_dir).select("user_id")
     h = F.md5(F.concat(F.lit("hll_"), F.col("user_id").cast("string")))
     hashed = ev.select(
         F.conv(F.substring(h, 1, 2), 16, 10).cast("int").alias("bucket"),
@@ -6879,7 +6856,7 @@ def q138_bootstrap_ci(spark, sf_dir):
     9.3-13.2 s vs new 4.7-5.3 s across three sessions); results
     byte-identical at sf0.001/0.01/0.1."""
     B = 32
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, "orders", sf_dir).select(
         "o_orderkey",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("x"),
     )
@@ -7067,7 +7044,7 @@ def q140_autocorrelation(spark, sf_dir):
     from pyspark.sql import Window
 
     daily = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, "orders", sf_dir)
         .groupBy(F.to_date("o_orderdate").alias("day"))
         .agg(F.count(F.lit(1)).alias("y"))
     )
@@ -7162,10 +7139,10 @@ def q141_kl_divergence(spark, sf_dir):
     over the BOUNDED 25-cell table, never the fact rows."""
     from pyspark.sql import Window
 
-    o = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderpriority")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
-    r = _t(spark, sf_dir, "region").select("r_regionkey", "r_name")
+    o = load_table(spark, "orders", sf_dir).select("o_custkey", "o_orderpriority")
+    c = load_table(spark, "customer", sf_dir).select("c_custkey", "c_nationkey")
+    n = load_table(spark, "nation", sf_dir).select("n_nationkey", "n_regionkey")
+    r = load_table(spark, "region", sf_dir).select("r_regionkey", "r_name")
     cells = (
         o.join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
@@ -7245,7 +7222,7 @@ def q142_welch_t(spark, sf_dir):
     Scale shape: ONE map-combinable conditional aggregate over the
     customer scan — no join, no window, 1 output row."""
     seg_a, seg_b = "BUILDING", "MACHINERY"
-    c = _t(spark, sf_dir, "customer").where(
+    c = load_table(spark, "customer", sf_dir).where(
         F.col("c_mktsegment").isin(seg_a, seg_b)
     ).select(
         (F.col("c_mktsegment") == seg_a).alias("is_a"),
@@ -7364,7 +7341,7 @@ def q143_survival_table(spark, sf_dir):
     us = F.expr(
         "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
     )
-    e = _t(spark, sf_dir, "events").select("user_id", us.alias("t"))
+    e = load_table(spark, "events", sf_dir).select("user_id", us.alias("t"))
     users = e.groupBy("user_id").agg(
         F.min("t").alias("first_t"), F.max("t").alias("last_t")
     )
@@ -7509,7 +7486,7 @@ def q144_k_core(spark, sf_dir):
     projection); peeling itself is the ``bipartite_k_core`` kernel
     (property-tested against a brute-force peel)."""
     edges = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, "lineitem", sf_dir)
         .where(F.col("l_shipdate") < F.lit("1995-07-01").cast("timestamp"))
         .select(F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s"))
     )
@@ -7608,7 +7585,7 @@ def q145_runs_test(spark, sf_dir):
     kernel (property-tested against a brute-force scan) does the
     sign/run/z computation."""
     daily = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, "orders", sf_dir)
         .select(F.to_date("o_orderdate").alias("day"))
         .groupBy("day")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -7656,7 +7633,7 @@ def _daily_rev_cents(spark, sf_dir) -> DataFrame:
     One definition so a future rounding change cannot drift between
     the gates (and _DAILY_REV_CTE is its oracle twin)."""
     return (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, "orders", sf_dir)
         .select(
             F.to_date("o_orderdate").alias("day"),
             F.round(F.col("o_totalprice") * 100).cast("long").alias("rev"),
@@ -7745,13 +7722,13 @@ def q147_interarrival_hist(spark, sf_dir):
 
     Scale shape: one LAG window per user key (keyed shuffle — the
     legitimate per-key window), then a map-combinable agg over ≤ ~12
-    bucket cells. Epoch micros via timestampdiff against the NTZ epoch
-    (the q105 idiom — unix_timestamp would re-interpret in session
-    zone)."""
+    bucket cells. Epoch micros via timestampdiff against the epoch
+    literal (the q105 idiom — unix_timestamp would truncate to
+    seconds)."""
     us = F.expr(
         "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
     )
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, "events", sf_dir).select(
         "user_id", us.alias("t"), "event_id"
     )
     w = Window.partitionBy("user_id").orderBy("t", "event_id")
@@ -8080,10 +8057,10 @@ def q150_fk_integrity(spark, sf_dir):
     map-combinable; dims broadcast where small. Scalars are assembled
     by a tagged union + conditional agg — the q106/q123 join-free
     pattern (per-count crossJoins would stack nested loops)."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey")
+    li = load_table(spark, "lineitem", sf_dir).select("l_orderkey")
+    o = load_table(spark, "orders", sf_dir).select("o_orderkey", "o_custkey")
+    c = load_table(spark, "customer", sf_dir).select("c_custkey", "c_nationkey")
+    n = load_table(spark, "nation", sf_dir).select("n_nationkey")
 
     def tagged(df, tag):
         return df.select(F.lit(tag).alias("tag"))
@@ -8161,7 +8138,7 @@ def q151_survival_by_cohort(spark, sf_dir):
     us = F.expr(
         "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
     )
-    e = _t(spark, sf_dir, "events").select("user_id", us.alias("t"))
+    e = load_table(spark, "events", sf_dir).select("user_id", us.alias("t"))
     users = e.groupBy("user_id").agg(
         F.min("t").alias("first_t"), F.max("t").alias("last_t")
     )
@@ -8281,9 +8258,9 @@ def q152_lateral_topk(spark, sf_dir):
     write q90_latest_n_per_key's direct window (one hash shuffle, per
     -key local sort) instead; this gate pins the semantics of the
     lateral surface and PERF_NOTES records the plan delta."""
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("q152_customer")
-    _t(spark, sf_dir, "nation").createOrReplaceTempView("q152_nation")
-    _t(spark, sf_dir, "region").createOrReplaceTempView("q152_region")
+    load_table(spark, "customer", sf_dir).createOrReplaceTempView("q152_customer")
+    load_table(spark, "nation", sf_dir).createOrReplaceTempView("q152_nation")
+    load_table(spark, "region", sf_dir).createOrReplaceTempView("q152_region")
     return spark.sql("""
         SELECT r.r_name AS region, t.c_name AS c_name,
                t.c_acctbal AS c_acctbal
@@ -8335,7 +8312,7 @@ def q153_native_recursive_cte(spark, sf_dir):
     (q121) needs only O(log depth) rounds and is the 100 TB form for
     deep or unknown-depth graphs. Use the native surface for
     readability on shallow data; the kernel for scale."""
-    _t(spark, sf_dir, "part").select("p_partkey").createOrReplaceTempView(
+    load_table(spark, "part", sf_dir).select("p_partkey").createOrReplaceTempView(
         "q153_part"
     )
     return spark.sql("""
@@ -8387,7 +8364,7 @@ def q154_window_funnel(spark, sf_dir):
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id")
-    e = _t(spark, sf_dir, "events").select("user_id", "event_type", "ts")
+    e = load_table(spark, "events", sf_dir).select("user_id", "event_type", "ts")
     t1 = e.withColumn(
         "t1", F.min(F.when(F.col("event_type") == "view", F.col("ts"))).over(w)
     )
@@ -8475,7 +8452,7 @@ def q155_rfm_segments(spark, sf_dir):
     q108's two-phase exact-percentile split on the same cents values."""
     from pyspark.sql import Window
 
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, "orders", sf_dir).select(
         "o_custkey", "o_orderdate",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
@@ -8565,8 +8542,8 @@ def q156_decay_score(spark, sf_dir):
     aggregates with map-side combine — and an incremental refresh only
     rescales yesterday's total by exp(-1/30), which is the operational
     reason decay features use exponentials at all."""
-    o = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderdate")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    o = load_table(spark, "orders", sf_dir).select("o_custkey", "o_orderdate")
+    c = load_table(spark, "customer", sf_dir).select("c_custkey", "c_mktsegment")
     anchor = o.agg(F.max("o_orderdate")).collect()[0][0]
     weighted = o.select(
         "o_custkey",
@@ -8625,13 +8602,13 @@ def q157_price_volume_mix(spark, sf_dir):
     (bigram_lm/q156 precedent — a 1-row crossJoin would plan the BNLJ
     the 100x smoke bans), and the whole decomposition collapses in ONE
     conditional aggregate per brand — no second fact scan, no window."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, "lineitem", sf_dir).select(
         "l_partkey",
         F.unix_timestamp("l_shipdate").alias("ep"),
         F.round(F.col("l_quantity")).cast("long").alias("qty"),
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
     )
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    p = load_table(spark, "part", sf_dir).select("p_partkey", "p_brand")
     lo, hi = li.agg(F.min("ep"), F.max("ep")).collect()[0]
     tagged = (
         li.withColumn("p1", F.col("ep") >= F.lit((lo + hi) / 2))
@@ -8710,7 +8687,7 @@ def q158_new_vs_returning(spark, sf_dir):
     a broadcast-size daily rollup. The firsts table is user-bounded and
     fact-derived: its join back to the collapsed actives shares the
     user partitioning, so AQE keeps it to the same exchange."""
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, "events", sf_dir).select(
         "user_id", F.to_date("ts").alias("d")
     )
     active = e.distinct()
@@ -8761,7 +8738,7 @@ def q159_cusum_by_key(spark, sf_dir):
     partition — every window shares one exchange, and the spine is
     bounded by types × calendar days. Argmax per key is one struct
     extremum with the earliest-day tie-break; no sort, no self-join."""
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, "events", sf_dir).select(
         "event_type", F.to_date("ts").alias("day")
     )
     daily = e.groupBy("event_type", "day").agg(
@@ -8844,12 +8821,12 @@ def q160_share_of_parent(spark, sf_dir):
     hierarchy is dim-bounded), then region/total shares come from two
     windows over that bounded rollup — never a second fact pass. Dims
     broadcast; the rollup is the only fact shuffle."""
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation").select(
+    c = load_table(spark, "customer", sf_dir).select("c_custkey", "c_nationkey")
+    n = load_table(spark, "nation", sf_dir).select(
         "n_nationkey", "n_name", "n_regionkey"
     )
-    r = _t(spark, sf_dir, "region").select("r_regionkey", "r_name")
-    o = _t(spark, sf_dir, "orders").select(
+    r = load_table(spark, "region", sf_dir).select("r_regionkey", "r_name")
+    o = load_table(spark, "orders", sf_dir).select(
         "o_custkey",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
@@ -8923,7 +8900,7 @@ def q161_key_skew_profile(spark, sf_dir):
     Scale shape: one fact shuffle (the per-key count), then windows
     over the collapsed count-of-counts table, bounded by distinct
     per-key counts, not keys."""
-    e = _t(spark, sf_dir, "events").select("user_id")
+    e = load_table(spark, "events", sf_dir).select("user_id")
     per_key = e.groupBy("user_id").agg(F.count(F.lit(1)).alias("c"))
     dist = per_key.groupBy("c").agg(F.count(F.lit(1)).alias("keys"))
     w = Window.orderBy("c").rowsBetween(Window.unboundedPreceding, 0)
@@ -9030,7 +9007,7 @@ def q162_geo_radius_join(spark, sf_dir):
     symmetric under the endpoint swap (odd sin under squaring,
     commutative multiplies — identical doubles), asserted against the
     3×3 formulation in tests/test_optimization_r13.py."""
-    c = _t(spark, sf_dir, "customer").select("c_custkey")
+    c = load_table(spark, "customer", sf_dir).select("c_custkey")
     h1 = F.pmod(F.col("c_custkey") * F.lit(2654435761), F.lit(1 << 31))
     h2 = F.pmod(
         (F.col("c_custkey") + F.lit(7)) * F.lit(2246822519), F.lit(1 << 31)
@@ -9135,7 +9112,7 @@ def q163_agg_breadth(spark, sf_dir):
     how q35 treats PIVOT) — per order priority over orders. These are
     the idioms BI tools emit constantly; each is map-combinable, one
     shuffle total."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     big = F.col("o_totalprice") > 200_000
     return o.groupBy("o_orderpriority").agg(
         F.count_if(big).cast("long").alias("n_big"),
@@ -9174,8 +9151,8 @@ def q164_repeat_purchase_interval(spark, sf_dir):
 
     Scale shape: one shuffle on custkey (LAG), one map-combinable
     collapse, windows over the (segment × distinct gap) support."""
-    o = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderdate")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    o = load_table(spark, "orders", sf_dir).select("o_custkey", "o_orderdate")
+    c = load_table(spark, "customer", sf_dir).select("c_custkey", "c_mktsegment")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate")
     gaps = (
         o.withColumn("prev", F.lag("o_orderdate").over(w))
@@ -9253,13 +9230,13 @@ def q165_gini_by_region(spark, sf_dir):
     collapse, rank+cumsum windows over the REGION partition, and the
     Gini numerator/denominator (n+1−2·Σcum/Σrev forms) assembled from
     window sums — emitted as e6-floored ratio of two exact longs."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, "orders", sf_dir).select(
         "o_custkey",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
-    r = _t(spark, sf_dir, "region").select("r_regionkey", "r_name")
+    c = load_table(spark, "customer", sf_dir).select("c_custkey", "c_nationkey")
+    n = load_table(spark, "nation", sf_dir).select("n_nationkey", "n_regionkey")
+    r = load_table(spark, "region", sf_dir).select("r_regionkey", "r_name")
     per_cust = (
         o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
         .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
@@ -9347,7 +9324,7 @@ def q166_bounce_rate(spark, sf_dir):
     Scale shape: one shuffle on user_id for the LAG + break-sum windows
     (shared partition), one map-combinable session rollup keyed by
     (user, session no), one day rollup."""
-    e = _t(spark, sf_dir, "events").select("user_id", "ts")
+    e = load_table(spark, "events", sf_dir).select("user_id", "ts")
     w = Window.partitionBy("user_id").orderBy("ts")
     ep = F.unix_timestamp("ts")
     brk = F.when(
@@ -9418,7 +9395,7 @@ def q167_time_weighted_value(spark, sf_dir):
     Exactness: value collapses to cents (long), the holding duration is
     the exact epoch-MICROSECOND gap to the USER's next event (LEAD over
     the user partition — each user is an independent sensor stream; the
-    q101 tz-free NTZ timestampdiff ↔ DuckDB epoch_us, both exact
+    q101 epoch-literal timestampdiff ↔ DuckDB epoch_us, both exact
     BIGINTs — epoch-second truncation would diverge on these sub-second
     timestamps), and the
     weighted sum Σ(cents·dur_us) accumulates in DECIMAL(38,0) from the
@@ -9432,14 +9409,14 @@ def q167_time_weighted_value(spark, sf_dir):
     Scale shape: ONE shuffle on user_id for the LEAD window, then a
     map-combinable aggregate to the 5-row type table. No global window,
     no join."""
-    # tz-free epoch micros (the q101 NTZ pattern): events.ts is
-    # TIMESTAMP_NTZ, so unix_micros won't bind and unix_timestamp would
-    # re-interpret in the session zone; timestampdiff against the NTZ
-    # epoch matches DuckDB's epoch_us bit-for-bit
+    # exact epoch micros (the q101 pattern): events.ts is TIMESTAMP
+    # (load_table normalizes it); timestampdiff against the epoch
+    # literal, coerced to TIMESTAMP in the session zone (UTC), matches
+    # DuckDB's epoch_us bit-for-bit
     us = F.expr(
         "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
     )
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, "events", sf_dir).select(
         "user_id", "event_type", us.alias("us"),
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
@@ -9514,14 +9491,14 @@ def q168_gap_percentiles(spark, sf_dir):
 
     Scale shape: one shuffle on user_id for the LAG, one ~12-cell
     aggregate, windows over the cell table only. Output: 3 rows."""
-    # exact micros first (the q101 tz-free NTZ pattern ↔ DuckDB
+    # exact micros first (the q101 epoch-literal pattern ↔ DuckDB
     # epoch_us, both BIGINT — per-side second truncation would
     # mis-bucket sub-second stamps), then ONE floor to whole seconds;
     # gap_us < 2^53 so the double division is exact
     us = F.expr(
         "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
     )
-    e = _t(spark, sf_dir, "events").select("user_id", us.alias("us"))
+    e = load_table(spark, "events", sf_dir).select("user_id", us.alias("us"))
     w = Window.partitionBy("user_id").orderBy("us")
     gaps = e.select(
         (F.col("us") - F.lag("us", 1).over(w)).alias("g_us")
@@ -9628,7 +9605,7 @@ def q169_dau_mau_stickiness(spark, sf_dir):
     distinct collapse, one user-keyed LAG window over the collapsed
     table, the bounded-constant explode, and two map-combinable
     aggregates; the dau↔mau join is day-spine-sized."""
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, "events", sf_dir).select(
         "user_id", F.to_date("ts").alias("d")
     )
     active = e.distinct()
@@ -9703,7 +9680,7 @@ def q170_iso_week_rollup(spark, sf_dir):
     DuckDB's isoyear/weekofyear agree on the ISO-8601 definition, which
     is exactly what this gate pins. Exact cent sums; one
     map-combinable aggregate, output bounded by weeks."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, "orders", sf_dir).select(
         F.to_date("o_orderdate").alias("d"),
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
@@ -9757,7 +9734,7 @@ def q171_anova_f(spark, sf_dir):
     to k rows, a 1-row global rollup crossed back, and a k-row
     aggregate to the single output row. No join against base data, no
     window."""
-    c = _t(spark, sf_dir, "customer").select(
+    c = load_table(spark, "customer", sf_dir).select(
         "c_mktsegment",
         F.round(F.col("c_acctbal") * 100).cast("long").alias("x"),
     )
@@ -9874,7 +9851,7 @@ def q172_bloom_prefilter(spark, sf_dir):
     keys the same way. One map-combinable count aggregate to 1 row.
     At 100 TB the bitset (128 KiB at m=2^20) rides the same broadcast
     path Spark uses for its own runtime bloom filters."""
-    cust = _t(spark, sf_dir, "customer").where(
+    cust = load_table(spark, "customer", sf_dir).where(
         F.col("c_mktsegment") == BLOOM_SEGMENT
     ).select(F.col("c_custkey").alias("key"))
 
@@ -9888,7 +9865,7 @@ def q172_bloom_prefilter(spark, sf_dir):
         cust.select(F.explode(F.array(pos(0, F.col("key")), pos(1, F.col("key")))).alias("bit"))
         .distinct()
     )
-    probe = _t(spark, sf_dir, "orders").select(
+    probe = load_table(spark, "orders", sf_dir).select(
         F.col("o_custkey").alias("pkey"),
         pos(0, F.col("o_custkey")).alias("b0"),
         pos(1, F.col("o_custkey")).alias("b1"),
@@ -9981,7 +9958,7 @@ def q173_second_order_paths(spark, sf_dir):
     map-combinable trigram count (output ≤ |types|³ rows), a context
     rollup over that tiny table, and a broadcast join-back. The base
     events table is scanned once."""
-    e = _t(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
+    e = load_table(spark, "events", sf_dir).select("user_id", "event_type", "ts", "event_id")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     tri = (
         e.select(
@@ -10052,14 +10029,14 @@ def q174_moving_median(spark, sf_dir):
     |regions|·|days| rows), then the window runs PARTITIONED by region
     over the tiny rollup — never a global single-partition window and
     never a window over base facts."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, "orders", sf_dir).select(
         "o_custkey",
         F.col("o_orderdate").cast("date").alias("day"),
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
-    r = _t(spark, sf_dir, "region").select("r_regionkey", "r_name")
+    c = load_table(spark, "customer", sf_dir).select("c_custkey", "c_nationkey")
+    n = load_table(spark, "nation", sf_dir).select("n_nationkey", "n_regionkey")
+    r = load_table(spark, "region", sf_dir).select("r_regionkey", "r_name")
     daily = (
         o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
@@ -10130,7 +10107,7 @@ def q175_hour_entropy(spark, sf_dir):
     Scale shape: ONE map-combinable (type, hour) count aggregate —
     ≤ |types|·24 rows — then windows/rollups over that bounded table
     only. The events scan never shuffles raw rows."""
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, "events", sf_dir).select(
         "event_type", F.hour("ts").cast("int").alias("h")
     )
     c = e.groupBy("event_type", "h").agg(
@@ -10221,11 +10198,11 @@ def q176_lorenz_deciles(spark, sf_dir):
     documented single-exchange global sort, Spark's RangePartitioner
     form at cluster scale — then windows over the 10-row table. Facts
     never enter a window."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, "orders", sf_dir).select(
         "o_custkey",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    c = _t(spark, sf_dir, "customer").select("c_custkey")
+    c = load_table(spark, "customer", sf_dir).select("c_custkey")
     spend = (
         c.join(
             o.groupBy("o_custkey").agg(F.sum("cents").alias("sp")),
@@ -10329,14 +10306,14 @@ def q177_bollinger_breaches(spark, sf_dir):
     Scale shape: daily rollup first (map-combinable), RANGE-frame
     moment sums over the region-partitioned rollup, breach flags and
     counts over that tiny table. Facts never enter a window."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, "orders", sf_dir).select(
         "o_custkey",
         F.col("o_orderdate").cast("date").alias("day"),
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
-    r = _t(spark, sf_dir, "region").select("r_regionkey", "r_name")
+    c = load_table(spark, "customer", sf_dir).select("c_custkey", "c_nationkey")
+    n = load_table(spark, "nation", sf_dir).select("n_nationkey", "n_regionkey")
+    r = load_table(spark, "region", sf_dir).select("r_regionkey", "r_name")
     daily = (
         o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
@@ -10450,13 +10427,13 @@ def q178_tpch_q8_share(spark, sf_dir):
     (region/nation/supplier/part are dim-bounded; only
     lineitem⋈orders shuffles). Share is exact: conditional decimal
     sum over rev_u, _floor_div_dec against the year total."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
-    p = _t(spark, sf_dir, "part").where(F.col("p_type") == "PROMO")
+    li = load_table(spark, "lineitem", sf_dir)
+    o = load_table(spark, "orders", sf_dir)
+    c = load_table(spark, "customer", sf_dir)
+    s = load_table(spark, "supplier", sf_dir)
+    n = load_table(spark, "nation", sf_dir)
+    r = load_table(spark, "region", sf_dir)
+    p = load_table(spark, "part", sf_dir).where(F.col("p_type") == "PROMO")
     cn = n.alias("cn")
     sn = n.select(
         F.col("n_nationkey").alias("sn_key"),
@@ -10527,10 +10504,10 @@ def q179_tpch_q9_profit(spark, sf_dir):
     Q9's: fact fans to part + supplier→nation + orders-for-the-year).
     amount_u = rev_u − retail_c·qty·100, exact per row in longs
     (possibly negative), summed in decimal(38,0)."""
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    p = _t(spark, sf_dir, "part").where(F.col("p_name").contains("widget"))
+    li = load_table(spark, "lineitem", sf_dir)
+    s = load_table(spark, "supplier", sf_dir)
+    n = load_table(spark, "nation", sf_dir)
+    p = load_table(spark, "part", sf_dir).where(F.col("p_name").contains("widget"))
     amount = _rev_u() - (
         F.round(F.col("p_retailprice") * 100).cast("long")
         * F.round(F.col("l_quantity")).cast("long")
@@ -10542,7 +10519,7 @@ def q179_tpch_q9_profit(spark, sf_dir):
         .join(F.broadcast(s.select("s_suppkey", "s_nationkey")),
               F.col("l_suppkey") == F.col("s_suppkey"))
         .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(_t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate"),
+        .join(load_table(spark, "orders", sf_dir).select("o_orderkey", "o_orderdate"),
               F.col("l_orderkey") == F.col("o_orderkey"))
         .select(
             F.col("n_name").alias("nation"),
@@ -10593,7 +10570,7 @@ def q180_tpch_q11_important(spark, sf_dir):
     aggregates via grouping on p_partkey then re-aggregation — the
     per-part table IS the input to the total, so the fact scan runs
     once)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     per_part = truncate_lineage(
         li.select(F.col("l_partkey"), _rev_u().alias("rev_u"))
         .groupBy("l_partkey")
@@ -10627,11 +10604,11 @@ def q181_tpch_q14_promo(spark, sf_dir):
     (both shipdate bounds push to parquet), a broadcast part join, and
     ONE conditional aggregate; the share divides once via
     _floor_div_dec."""
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = load_table(spark, "lineitem", sf_dir).where(
         (F.col("l_shipdate") >= "1997-09-01")
         & (F.col("l_shipdate") < "1997-10-01")
     )
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
+    p = load_table(spark, "part", sf_dir).select("p_partkey", "p_type")
     g = (
         li.select("l_partkey", _rev_u().alias("rev_u"))
         .join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
@@ -10679,7 +10656,7 @@ def q182_tpch_q15_top_supplier(spark, sf_dir):
     aggregate of THAT view broadcast back as an equi-filter (ties
     included, per the spec). Exact integers end to end, so "equals
     max" is well-defined — no float max comparison."""
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = load_table(spark, "lineitem", sf_dir).where(
         (F.col("l_shipdate") >= "1998-01-01")
         & (F.col("l_shipdate") < "1998-04-01")
     )
@@ -10689,7 +10666,7 @@ def q182_tpch_q15_top_supplier(spark, sf_dir):
         .agg(F.sum(F.col("rev_u").cast("decimal(38,0)")).alias("total"))
     )  # reuse: feeds both the argmax and the filter
     mx = rev.agg(F.max("total").alias("mx"))
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    s = load_table(spark, "supplier", sf_dir).select("s_suppkey", "s_name")
     return (
         rev.crossJoin(F.broadcast(mx))
         .where(F.col("total") == F.col("mx"))
@@ -10723,8 +10700,8 @@ def q183_tpch_q17_small_qty(spark, sf_dir):
     (quantities are integral by fixture; rounded to long on both
     sides). The per-part averages table is part-bounded → broadcast
     back onto the same filtered scan."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").where(F.col("p_brand") == "Brand#4")
+    li = load_table(spark, "lineitem", sf_dir)
+    p = load_table(spark, "part", sf_dir).where(F.col("p_brand") == "Brand#4")
     lines = li.join(
         F.broadcast(p.select("p_partkey")),
         F.col("l_partkey") == F.col("p_partkey"),
@@ -10775,8 +10752,8 @@ def q184_tpch_q19_disjunctive(spark, sf_dir):
     the plan stays an equi-join with a residual disjunction, never a
     nested loop). Quantities compare as the fixture's integral
     doubles, identical in both engines."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
+    li = load_table(spark, "lineitem", sf_dir)
+    p = load_table(spark, "part", sf_dir).select("p_partkey", "p_brand", "p_size")
     q = F.col("l_quantity")
     bracket = (
         (
@@ -10829,7 +10806,7 @@ def q185_tpch_q22_antijoin(spark, sf_dir):
     is scalar-subquery threshold + anti-join + re-aggregation). The
     average threshold is exact cross-multiplied cents: bal_c·n_pos >
     sum_pos_c. The anti join streams orders once."""
-    c = _t(spark, sf_dir, "customer").select(
+    c = load_table(spark, "customer", sf_dir).select(
         "c_custkey",
         F.expr("right(c_name, 1)").alias("cohort"),
         F.round(F.col("c_acctbal") * 100).cast("long").alias("bal_c"),
@@ -10838,7 +10815,7 @@ def q185_tpch_q22_antijoin(spark, sf_dir):
         F.count(F.lit(1)).alias("n_pos"),
         F.sum(F.col("bal_c").cast("decimal(38,0)")).alias("sum_pos_c"),
     )
-    o = _t(spark, sf_dir, "orders").select("o_custkey")
+    o = load_table(spark, "orders", sf_dir).select("o_custkey")
     rich = (
         c.crossJoin(F.broadcast(pos))
         .where(
@@ -10887,7 +10864,7 @@ def q186_ohlc_bars(spark, sf_dir):
     plain min/max/count. No window function — min_by keeps the whole
     bar map-side combinable, where a row_number-per-partition form
     would shuffle every row to rank it."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, "events", sf_dir)
     ordkey = (
         F.expr(
             "timestampdiff(MICROSECOND, TIMESTAMP'1970-01-01 00:00:00', ts)"
@@ -10953,7 +10930,7 @@ def q187_cramers_v(spark, sf_dir):
     engine-portable by construction. Day-of-week is pure integer
     calendar math (epoch_days mod 7), immune to the Spark-vs-DuckDB
     dayofweek origin mismatch."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, "events", sf_dir)
     epoch_s = F.expr(
         "timestampdiff(SECOND, TIMESTAMP'1970-01-01 00:00:00', ts)"
     )
@@ -11046,7 +11023,7 @@ def q188_kendall_tau(spark, sf_dir):
     distributed). τ_b = (nc−nd)/√((n0−n1)(n0−n2)) evaluates in
     doubles whose operands are exact longs; sqrt and one division are
     IEEE-correctly-rounded, so the e6 floor is engine-portable."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, "events", sf_dir)
     daily = truncate_lineage(
         e.groupBy(F.to_date("ts").alias("day"))
         .agg(
@@ -11157,7 +11134,7 @@ def q189_merge_full(spark, sf_dir):
     flagged 'U' (updates + the %5==4 evens as inserts). Odd base rows
     not in the source DELETE — the BY SOURCE arm. The reprice factor
     is 2 (exact in binary) so ROUND never lands on a half-cent tie."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
     base = o.where(F.col("o_orderkey") % 5 != 4)
@@ -11205,7 +11182,7 @@ def q190_subtree_rollup(spark, sf_dir):
     away (22 generated rows per part → ~6; sf0.1: 4.7 s → ~1 s, same
     exact result since explode-then-filter ≡ filter-then-explode for
     a per-element predicate)."""
-    p = _t(spark, sf_dir, "part").select(
+    p = load_table(spark, "part", sf_dir).select(
         F.col("p_partkey").alias("node"),
         F.round(F.col("p_retailprice") * 100).cast("long").alias("price_c"),
     )
@@ -11285,8 +11262,8 @@ def q191_hits_scores(spark, sf_dir):
     Scale shape: each iteration is one equi-join + one map-combinable
     aggregate over the edge list (the q100 message-passing shape);
     the output is a TakeOrderedAndProject top-20."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_partkey")
+    o = load_table(spark, "orders", sf_dir).select("o_orderkey", "o_custkey")
     edges = truncate_lineage(
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
         .select(
@@ -11350,7 +11327,7 @@ def q192_equidepth_histogram(spark, sf_dir):
     engines, unlike row-ntile whose tie-splitting is order-dependent."""
     from .scale import distributed_prefix_sum
 
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, "orders", sf_dir).select(
         F.round(F.col("o_totalprice") * 100).cast("long").alias("v_c")
     )
     cells = o.groupBy("v_c").agg(F.count(F.lit(1)).alias("cnt"))
@@ -11416,7 +11393,7 @@ def q193_interval_range_frame(spark, sf_dir):
     roll = C − B folds in one map-combinable groupBy(event_id).
     Plan: 2 Exchanges (window + fold) instead of 1, but the window
     frame is accumulating, not sliding — sf0.1: 16.5 s → ~1.3 s."""
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, "events", sf_dir).select(
         "event_id", "event_type", "ts",
         F.round(F.col("value") * 100).cast("long").alias("v_c"),
     )
@@ -11492,7 +11469,7 @@ def q194_mode_per_key(spark, sf_dir):
     state at O(|types seen|), which is what survives a 100x key-count
     scale-up. Oracle replays the tie rule with a window; results
     agree because the order key is identical."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, "events", sf_dir)
     per = (
         e.groupBy("user_id", "event_type")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -11548,7 +11525,7 @@ def q195_crosscorr_daily(spark, sf_dir):
     num and the variances are the same exact integers in both engines,
     so their double casts, the sqrt, the division and the e6 floor are
     bit-identical."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, "events", sf_dir)
     v_c = F.round(F.col("value") * 100).cast("long")
     daily = truncate_lineage(
         e.groupBy(F.to_date("ts").alias("day"))
@@ -11665,7 +11642,7 @@ def q196_streak_islands(spark, sf_dir):
     Scale posture: per-user state is the DISTINCT-DAY array — bounded
     by the calendar (≤ 366/year), not by event count — so hot users
     cost the same as anyone and no skew salt is needed."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, "events", sf_dir)
     per = e.groupBy("user_id").agg(
         F.sort_array(F.collect_set(F.to_date("ts"))).alias("days")
     )
@@ -11738,7 +11715,7 @@ def q197_largest_remainder(spark, sf_dir):
     bounded rows — the q100 structural-boundedness case, not a data-
     sized global sort."""
     counts = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, "documents", sf_dir)
         .groupBy("source")
         .agg(F.count(F.lit(1)).alias("n_docs"))
     )
@@ -11897,7 +11874,7 @@ def q199_cohens_kappa(spark, sf_dir):
     by the CLASS vocabulary — without it Catalyst's pre-AQE estimate
     scales with the corpus scan and plans a sort-merge join for 3
     rows, caught by the 100x audit)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, "documents", sf_dir)
     ntok = F.size(
         F.filter(
             F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
@@ -11992,7 +11969,7 @@ def q200_sql_scripting_search(spark, sf_dir):
     the original scan-per-iteration scripting form. The integer
     comparisons use DIV so both engines agree exactly."""
     spark.conf.set("spark.sql.scripting.enabled", "true")
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     spine_row = o.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         *[
@@ -12062,8 +12039,8 @@ def q201_business_days(spark, sf_dir):
     fact join AQE plans as SMJ at scale) + one map-combinable
     aggregate; the closed form replaces both a 7-row dow lookup join
     and the naive per-day explode."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    o = _t(spark, sf_dir, "orders").select(
+    li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_shipdate")
+    o = load_table(spark, "orders", sf_dir).select(
         F.col("o_orderkey").alias("l_orderkey"), "o_orderdate"
     )
     joined = li.join(o, "l_orderkey").select(
@@ -12208,7 +12185,7 @@ def q203_try_arithmetic(spark, sf_dir):
 
     Map-only expressions over orders; one pass, no shuffle beyond the
     final aggregate-free projection."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     k = F.col("o_orderkey").cast("long")
     big = F.lit(9223372036854775807).cast("long")
     return o.select(
@@ -12277,7 +12254,7 @@ def q204_mase_forecast_error(spark, sf_dir):
     LAG windows over the tiny spine and a one-row reduce — the q174/
     q130 collapse-then-window discipline; fact size never reaches a
     window."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     daily = (
         o.groupBy(F.to_date("o_orderdate").alias("day"))
         .agg(
@@ -12362,7 +12339,7 @@ def q205_gini_split_scores(spark, sf_dir):
     q136 sketch-explode shape), one (threshold, side, class) hash
     aggregate — bounded by |thresholds|·2·|classes| cells — and
     algebra on that tiny cell table."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, "orders", sf_dir).select(
         F.floor(F.col("o_totalprice") * 100).cast("long").alias("cents"),
         F.col("o_orderstatus").alias("cls"),
     )

@@ -720,8 +720,6 @@ def text_phrase_search(spark, sf_dir):
     normalized document). A green row means index construction,
     position arithmetic, and the postings self-join reproduce exactly
     what a full-scan engine sees."""
-    from ..sources.registry import load_table
-
     return phrase_search(
         load_table(spark, "documents", sf_dir), PHRASE_PROBES
     )
@@ -771,8 +769,6 @@ def hapax_ratio(docs: DataFrame) -> DataFrame:
 
 def text_hapax_ratio(spark, sf_dir):
     """Gate: per-source hapax share of the source vocabulary."""
-    from ..sources.registry import load_table
-
     return hapax_ratio(load_table(spark, "documents", sf_dir))
 
 
@@ -854,8 +850,6 @@ def zipf_fit(docs: DataFrame, top_n: int = 100) -> DataFrame:
 
 def text_zipf_fit(spark, sf_dir):
     """Gate: corpus Zipf slope from exact micro-nat integer moments."""
-    from ..sources.registry import load_table
-
     return zipf_fit(load_table(spark, "documents", sf_dir))
 
 

@@ -26,8 +26,8 @@ from ..inference import auto_type
 #: engine round-trips microseconds (parquet precision) by default.
 #: TIMESTAMP and TIMESTAMP_NTZ columns are configured by DIFFERENT
 #: option names (timestampFormat vs timestampNTZFormat) — setting only
-#: the first silently ms-truncates NTZ columns (events.ts is NTZ: the
-#: testdata parquet stores local-semantics timestamps).
+#: the first silently ms-truncates NTZ columns (events.ts is TIMESTAMP
+#: once load_table normalizes it, but a caller's frame may carry NTZ).
 TS_FORMAT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
 TS_NTZ_FORMAT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
 

@@ -1,8 +1,11 @@
 """TESTDATA parquet registry (TESTDATA.md tables).
 
-Loads are plain ``spark.read.parquet`` — Catalyst pushes filters and prunes
-columns into the scan, which is the whole point of declaring queries on top
-of these instead of materializing intermediates.
+``load_table`` is the engine's one fixture reader: every gate reads its
+tables through it, so each table has one schema engine-wide (``events.ts``
+is normalized to ``timestamp``). Loads are plain ``spark.read.parquet`` —
+Catalyst pushes filters and prunes columns into the scan, which is the
+whole point of declaring queries on top of these instead of materializing
+intermediates.
 """
 
 from __future__ import annotations
@@ -19,11 +22,10 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-#: rows per partition for driver-side literal relations — see
-#: core._LOCAL_SLICE_ROWS (same constant, same rationale: createDataFrame
+#: rows per partition for driver-side literal relations: createDataFrame
 #: over a python list parallelizes into defaultParallelism slices
 #: regardless of size, so every job over a few-row literal schedules a
-#: full wave of pickled-python tasks).
+#: full wave of pickled-python tasks.
 _LOCAL_SLICE_ROWS = 10_000
 
 

@@ -32,6 +32,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..sources.registry import load_table
+
 OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
@@ -165,8 +167,6 @@ def stream_user_milestones(spark, sf_dir):
     """Gate query (batch form of S6): milestone rows for the events table.
     The streaming form is asserted equal in
     tests/test_streaming.py::test_s6_stateful_milestones_match_batch."""
-    from ..sources.registry import load_table
-
     return user_milestones(load_table(spark, "events", sf_dir), streaming=False)
 
 

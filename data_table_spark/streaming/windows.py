@@ -23,6 +23,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.registry import load_table
+
 WATERMARK = "10 minutes"
 
 
@@ -212,8 +214,6 @@ def stream_attribution(spark, sf_dir):
     """Gate: batch form of the S7 stream-stream attribution join (the
     streaming application is batch-equivalence-tested in
     tests/test_streaming.py::test_s7_attribution_join)."""
-    from ..sources.registry import load_table
-
     return attribution_join(load_table(spark, "events", sf_dir))
 
 
@@ -228,8 +228,6 @@ def stream_dedup_counts(spark, sf_dir):
     The fixture's event_id is unique at every sf (verified 0.001-0.1),
     so the oracle's per-event_id MIN() collapse is deterministic AND
     equal to what any dedup survivor policy would produce."""
-    from ..sources.registry import load_table
-
     out = deduped_windowed_counts(
         load_table(spark, "events", sf_dir), streaming=False
     )
@@ -245,8 +243,6 @@ def stream_left_attribution(spark, sf_dir):
     """Gate: batch form of the S7b LEFT OUTER stream-stream join (the
     streaming application — watermark-delayed NULL emission — is
     batch-equivalence-tested in tests/test_streaming.py)."""
-    from ..sources.registry import load_table
-
     return left_attribution_join(load_table(spark, "events", sf_dir))
 
 
@@ -335,8 +331,6 @@ def trending_topk(events, k: int = TRENDING_K):
 
 def stream_topk_trending(spark, sf_dir):
     """Gate: batch form of the hourly trending-top-TRENDING_K transform."""
-    from ..sources.registry import load_table
-
     return trending_topk(load_table(spark, "events", sf_dir))
 
 
@@ -355,7 +349,6 @@ def stream_upsert_snapshot(spark, sf_dir):
     import shutil
     import tempfile
 
-    from ..sources.registry import load_table
     from .upsert import latest_per_key_merge, run_streaming_upsert
 
     events = load_table(spark, "events", sf_dir)
@@ -411,8 +404,6 @@ def stream_sliding_counts(spark, sf_dir):
     windows; the oracle replays F.window's epoch-aligned slide
     arithmetic with a 2-offset UNNEST. Epoch-seconds projection keeps
     the window bounds engine-neutral, as in stream_dedup_counts."""
-    from ..sources.registry import load_table
-
     out = sliding_counts(load_table(spark, "events", sf_dir))
     return out.select(
         F.unix_timestamp("w_start").cast("long").alias("w_start_epoch"),
@@ -448,8 +439,6 @@ def stream_session_counts(spark, sf_dir):
     epoch() doubles lose sub-microsecond exactness at 2024 magnitudes.
     Session end = last event + gap, floored to epoch seconds the same
     way unix_timestamp floors."""
-    from ..sources.registry import load_table
-
     out = session_counts(load_table(spark, "events", sf_dir))
     return out.select(
         F.unix_timestamp("w_start").cast("long").alias("w_start_epoch"),
@@ -514,8 +503,6 @@ def stream_tumbling_distinct(spark, sf_dir):
     """Gate: batch form of S2b through the SAME two-stage transform the
     stream runs; the oracle replays tumbling epoch alignment with a
     plain COUNT(DISTINCT)."""
-    from ..sources.registry import load_table
-
     out = tumbling_distinct_users(load_table(spark, "events", sf_dir))
     return out.select(
         F.unix_timestamp("w_start").cast("long").alias("w_start_epoch"),
@@ -589,8 +576,6 @@ def stream_static_enrich(spark, sf_dir):
     """Gate: batch form of the S9 stream-static enrichment (the
     streaming application is batch-equivalence-tested in
     tests/test_streaming.py::test_s9_stream_static_enrich)."""
-    from ..sources.registry import load_table
-
     out = static_enriched_counts(
         load_table(spark, "events", sf_dir),
         load_table(spark, "customer", sf_dir),
@@ -657,8 +642,6 @@ def stream_full_attribution(spark, sf_dir):
     """Gate: batch form of the S7c FULL OUTER stream-stream interval
     join (the streaming application — both-sides watermark-delayed NULL
     emission — is batch-equivalence-tested in tests/test_streaming.py)."""
-    from ..sources.registry import load_table
-
     return full_attribution_join(load_table(spark, "events", sf_dir))
 
 
@@ -798,8 +781,6 @@ def late_drop_counts(
 def stream_late_drop_counts(spark, sf_dir):
     """Gate: watermark drop accounting over the deterministic arrival
     replay of the events table."""
-    from ..sources.registry import load_table
-
     return late_drop_counts(load_table(spark, "events", sf_dir))
 
 
@@ -905,8 +886,6 @@ def stream_ohlc_bars(spark, sf_dir):
     projection keeps window bounds engine-neutral. Oracle replays the
     epoch-day tumbling alignment + arg-min/max over the same packed
     ordering key."""
-    from ..sources.registry import load_table
-
     out = ohlc_bars_stream(load_table(spark, "events", sf_dir))
     return out.select(
         F.unix_timestamp("w_start").cast("long").alias("w_start_epoch"),
@@ -994,8 +973,6 @@ def stream_latest_state(spark, sf_dir):
     """Gate: batch form of S11 through the same transform the stream
     runs. Oracle replays the arg-max over the identical packed ordering
     key."""
-    from ..sources.registry import load_table
-
     return latest_state_stream(load_table(spark, "events", sf_dir))
 
 

@@ -24,15 +24,15 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _CHILD = r"""
-import json, os, sys, time
+import json, sys, time
 sys.path.insert(0, {repo!r})
 from data_table_spark.session import get_spark
+from data_table_spark.sources.registry import DEFAULT_SF_DIR as sf_dir, load_table
 import __spark_entry__ as entry_mod
 spark = get_spark(app_name="bench_gate")
-sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 fn = entry_mod.queries()[{gate!r}]
 # same warmup bench.py uses so codegen compile is not billed
-spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
+load_table(spark, "region", sf_dir).count()
 best = None
 for _ in range(2):
     t0 = time.perf_counter()

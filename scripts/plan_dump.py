@@ -20,6 +20,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from data_table_spark.session import get_spark  # noqa: E402
+from data_table_spark.sources.registry import DEFAULT_SF_DIR  # noqa: E402
 
 
 def main() -> int:
@@ -30,14 +31,13 @@ def main() -> int:
     import __spark_entry__ as entry_mod
 
     spark = get_spark(app_name="plan_dump")
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     qs = entry_mod.queries()
     out_dir = os.path.join(
         REPO, "plans", os.environ.get("SPARK_GRAFT_PLANS_DIR", "r14")
     )
     os.makedirs(out_dir, exist_ok=True)
     for g in gates:
-        df = qs[g](spark, sf_dir)
+        df = qs[g](spark, DEFAULT_SF_DIR)
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")

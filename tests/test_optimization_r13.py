@@ -18,6 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 import __spark_entry__ as entry  # noqa: E402
+from data_table_spark.sources.registry import load_table  # noqa: E402
 
 
 def _rows(df, order_cols):
@@ -30,9 +31,7 @@ def test_q193_matches_interval_frame_window(spark, sf_smoke):
     CURRENT ROW` over raw timestamps) row for row — this is also the
     test that keeps the INTERVAL-frame SQL surface exercised now that
     the gate itself runs the O(rows) plan."""
-    from data_table_spark.operators.relational import _t
-
-    e = _t(spark, sf_smoke, "events").select(
+    e = load_table(spark, "events", sf_smoke).select(
         "event_id", "event_type", "ts",
         F.round(F.col("value") * 100).cast("long").alias("v_c"),
     )
@@ -88,10 +87,8 @@ def test_q200_matches_scan_per_iteration_scripting(spark, sf_smoke):
     """The power-spine scripting form must return exactly what the
     original scan-per-iteration WHILE loop returns — the scripting
     surface over the raw fact table stays exercised here."""
-    from data_table_spark.operators.relational import _t
-
     spark.conf.set("spark.sql.scripting.enabled", "true")
-    _t(spark, sf_smoke, "orders").createOrReplaceTempView(
+    load_table(spark, "orders", sf_smoke).createOrReplaceTempView(
         "orders_script_ref"
     )
     reference = spark.sql(
@@ -258,10 +255,8 @@ def test_q138_matches_explode_window_form(spark, sf_dir):
     doubles, not merely close."""
     from pyspark.sql import Window
 
-    from data_table_spark.operators.relational import _t
-
     B = 32
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, "orders", sf_dir).select(
         "o_orderkey",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("x"),
     )
@@ -326,9 +321,7 @@ def test_q162_matches_full_neighborhood_form(spark, sf_dir):
     original 3x3 form pair-for-pair INCLUDING the floored meter
     distance — the haversine must be exactly symmetric under the
     endpoint swap the (least, greatest) emission performs."""
-    from data_table_spark.operators.relational import _t
-
-    c = _t(spark, sf_dir, "customer").select("c_custkey")
+    c = load_table(spark, "customer", sf_dir).select("c_custkey")
     h1 = F.pmod(F.col("c_custkey") * F.lit(2654435761), F.lit(1 << 31))
     h2 = F.pmod(
         (F.col("c_custkey") + F.lit(7)) * F.lit(2246822519), F.lit(1 << 31)

@@ -17,6 +17,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 import __spark_entry__ as entry  # noqa: E402
+from data_table_spark.sources.registry import load_table  # noqa: E402
 
 
 def _rows(df, order_cols):
@@ -64,9 +65,7 @@ def test_q79_matches_self_join_form(spark, sf_dir):
     distinct → self-join → groupBy formulation row for row (each order
     contributes each unordered distinct-part pair exactly once in both
     forms)."""
-    from data_table_spark.operators.relational import _t
-
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, "lineitem", sf_dir).select(
         "l_orderkey", "l_partkey"
     ).distinct()
     a, b = li.alias("a"), li.alias("b")
@@ -94,9 +93,9 @@ def test_q117_matches_self_join_form(spark, sf_dir):
     three-consumer distinct-li formulation (self-join pair counts, item
     counts, basket count) on every column, including the floored
     confidence/lift integer ratios."""
-    from data_table_spark.operators.relational import _floor_div_dec, _t
+    from data_table_spark.operators.relational import _floor_div_dec
 
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, "lineitem", sf_dir).select(
         "l_orderkey", "l_partkey"
     ).distinct()
     n_baskets = li.select("l_orderkey").distinct().count()

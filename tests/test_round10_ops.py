@@ -46,14 +46,12 @@ def _h32(s: str) -> int:
 
 
 def _epoch_s(ts) -> int:
-    """TZ-independent epoch seconds of a NAIVE datetime (round-10
-    ADVICE): the gates run timestampdiff over TIMESTAMP_NTZ — i.e. the
-    naive value read as UTC — while ``.timestamp()`` on a naive
-    datetime interprets it in the HOST's local zone, shifting every
-    replayed epoch by the UTC offset on a non-UTC host."""
-    import datetime as _dt
-
-    return int((ts - _dt.datetime(1970, 1, 1)).total_seconds())
+    """Epoch seconds of a collected ``events.ts`` value. The column is
+    TIMESTAMP (``load_table`` normalizes it), which ``collect()`` returns
+    as a naive datetime in the host's local zone; ``.timestamp()`` reads
+    a naive datetime in that same zone, so the replayed epoch equals the
+    gates' timestampdiff on any host."""
+    return int(ts.timestamp())
 
 
 # --------------------------------------------------------------------------
