@@ -32,6 +32,7 @@ from pyspark.sql import types as T
 
 from .config import GUESSING_TYPES_SAMPLE_SIZE, LARGEST_NUMBER
 from .functions.cleaning import _NUMERIC_JUNK, relaxed_double, trim_and_nullify
+from .sources.registry import local_df
 
 _INT_RE = r"^[+-]?[0-9]+$"
 _TS_RE = r"^\d{4}-\d{2}-\d{2}([ T]\d{2}:\d{2}(:\d{2}(\.\d+)?)?)?$"
@@ -154,12 +155,8 @@ def _guess_with_counters(
         rows = df.select(*columns).rdd.takeSample(False, sample_size, seed=42)
         if not rows:
             return {c: T.StringType() for c in columns}, dict.fromkeys(columns, 0)
-        # ≤1000 sampled rows ride one slice: a default-parallelized
-        # literal costs one python-worker round trip PER CORE per job
-        sample = df.sparkSession.createDataFrame(
-            df.sparkSession.sparkContext.parallelize(rows, 1),
-            df.select(*columns).schema,
-        )
+        # ≤1000 sampled rows: one Arrow LocalRelation, no python worker
+        sample = local_df(df.sparkSession, rows, df.select(*columns).schema)
     else:
         sample = df.select(*columns).limit(sample_size)
     exprs = [e for c in columns for e in _candidate_exprs(c)]

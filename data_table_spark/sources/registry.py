@@ -12,7 +12,10 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import _make_type_verifier
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -22,10 +25,10 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-#: rows per partition for driver-side literal relations: createDataFrame
-#: over a python list parallelizes into defaultParallelism slices
-#: regardless of size, so every job over a few-row literal schedules a
-#: full wave of pickled-python tasks.
+#: rows per slice for driver-side literal relations, and the cutoff
+#: between their two builds: a literal of at most this many rows is one
+#: Arrow ``LocalRelation``; a larger one is parallelized into
+#: ``local_slices`` slices (PERF_NOTES.md, "Literal relations").
 _LOCAL_SLICE_ROWS = 10_000
 
 
@@ -44,22 +47,51 @@ def local_slices(spark: SparkSession, n_rows: int) -> int:
 
 
 def local_df(spark: SparkSession, data, schema) -> DataFrame:
-    """``createDataFrame`` for DRIVER-SIDE literals with the partition
-    count derived from input size. ``schema`` must be COMPLETE (a DDL
-    string or StructType, or per-row verification would re-infer) —
-    the data rides one ``parallelize(data, local_slices(...))`` RDD, so
-    every job over the frame pays ONE python-worker round trip instead
-    of one per core (measured 0.16 s vs 0.33 s warm per job on
-    local[32] for a 5-row table, and the difference compounds for every
-    downstream job that rescans the literal). NOT a coalesce: coalescing
-    a default-parallelized literal runs its sub-partitions' python
-    round trips SEQUENTIALLY inside one task (measured 4.4 s/job).
-    NOT the pandas/Arrow path (0.03 s) either: pandas would route
-    None-bearing int columns through float64, silently corrupting
-    longs past 2^53 — the engine-wide overflow class this repo bans."""
+    """``createDataFrame`` for DRIVER-SIDE literals, built by size.
+    ``schema`` must be COMPLETE (a DDL string or StructType); rows may
+    be tuples, lists, dicts or ``Row`` objects.
+
+    A literal of at most ``_LOCAL_SLICE_ROWS`` rows becomes an
+    exactly-typed ``pyarrow.Table``, which ``createDataFrame`` turns into
+    a ``LocalRelation``: jobs over it start no Python worker, and
+    Catalyst folds projections and filters over it on the driver
+    (``ConvertToLocalRelation``), so most facade cell reads run no job.
+    Each row passes PySpark's own type verifier (eagerly: a bad cell
+    raises here) and ``schema.toInternal``, the two steps the RDD build
+    runs per row, and each column is built straight from those internal
+    values with its Arrow type — never through pandas, whose float64
+    would corrupt None-bearing longs past 2^53, and never from naive
+    datetimes, which Arrow would read as UTC where ``toInternal`` reads
+    them in the host zone. Values Arrow cannot hold exactly (a Decimal
+    finer than its field's scale, which the JVM rounds HALF_UP) take
+    the RDD build.
+
+    A larger literal rides one ``parallelize(data, local_slices(...))``
+    Python RDD: the driver-side fold of a large ``LocalRelation`` costs
+    more per query than the worker round trip (2.4x per cell read at
+    100k rows)."""
     data = list(data) if not isinstance(data, list) else data
     if not data:
         return spark.createDataFrame(data, schema)
+    if len(data) <= _LOCAL_SLICE_ROWS:
+        if isinstance(schema, str):
+            schema = spark._parse_ddl(schema)
+        verify = _make_type_verifier(schema)
+        for row in data:
+            verify(row)
+        internal = [schema.toInternal(row) for row in data]
+        try:
+            table = pa.Table.from_arrays(
+                [
+                    pa.array(col, type=to_arrow_type(f.dataType))
+                    for f, col in zip(schema.fields, zip(*internal))
+                ],
+                names=schema.names,
+            )
+        except pa.ArrowInvalid:
+            pass
+        else:
+            return spark.createDataFrame(table, schema)
     return spark.createDataFrame(
         spark.sparkContext.parallelize(data, local_slices(spark, len(data))),
         schema,

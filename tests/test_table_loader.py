@@ -1,6 +1,7 @@
 """``sources.registry.load_table`` is the one fixture reader, so each
 fixture table has one schema engine-wide — in particular ``events.ts``
-is ``timestamp`` in every gate, never ``timestamp_ntz``."""
+is ``timestamp`` in every gate, never ``timestamp_ntz``. Its neighbour
+``local_df`` is the one builder of driver-side literal relations."""
 
 from __future__ import annotations
 
@@ -50,6 +51,17 @@ def test_no_parquet_read_outside_registry():
             local_imports.append(f"{rel}:{no}")
     assert not reads, f"parquet reads bypassing load_table: {reads}"
     assert not local_imports, f"function-local registry imports: {local_imports}"
+
+
+def test_no_parallelize_outside_registry():
+    """``registry.local_df`` is the one literal builder: no other module
+    parallelizes driver-side rows into a Python RDD of its own."""
+    stray = [
+        f"{rel}:{no}"
+        for rel, no, line in _package_lines()
+        if ".parallelize(" in line and rel != "sources/registry.py"
+    ]
+    assert not stray, f"literal RDDs bypassing local_df: {stray}"
 
 
 def _types(dtype):
