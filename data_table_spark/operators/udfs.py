@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from ..sources.registry import load_table
+from ..sources.registry import load_table, sql_gate
 
 
 def _round_half_up_i64(s: "pd.Series") -> "pd.Series":
@@ -158,11 +158,11 @@ def udf_python_udtf_words(spark, sf_dir):
                 yield w, len(w)
 
     spark.udtf.register("dt_words", Words)
-    load_table(spark, "documents", sf_dir).createOrReplaceTempView("docs_udtf")
-    return spark.sql(
+    return sql_gate(
+        spark, sf_dir,
         """
         SELECT doc_id, w.word, w.wlen
-        FROM docs_udtf, LATERAL dt_words(text) w
+        FROM documents, LATERAL dt_words(text) w
         WHERE doc_id < 20
         """
     )
@@ -480,13 +480,11 @@ def udf_arrow_udtf_words(spark, sf_dir):
                 yield w, len(w)
 
     spark.udtf.register("dt_words_arrow", ArrowWords)
-    load_table(spark, "documents", sf_dir).createOrReplaceTempView(
-        "docs_udtf_arrow"
-    )
-    return spark.sql(
+    return sql_gate(
+        spark, sf_dir,
         """
         SELECT doc_id, w.word, w.wlen
-        FROM docs_udtf_arrow, LATERAL dt_words_arrow(text) w
+        FROM documents, LATERAL dt_words_arrow(text) w
         WHERE doc_id >= 20 AND doc_id < 40
         """
     )
@@ -709,13 +707,11 @@ def udf_udtf_dynamic_schema(spark, sf_dir):
             )
 
     spark.udtf.register("dt_head_cols", udtf(HeadCols))
-    load_table(spark, "documents", sf_dir).createOrReplaceTempView(
-        "docs_udtf_dyn"
-    )
-    return spark.sql(
+    return sql_gate(
+        spark, sf_dir,
         """
         SELECT doc_id, h.n_toks, h.w0, h.w1, h.w2
-        FROM docs_udtf_dyn, LATERAL dt_head_cols(text, 3) h
+        FROM documents, LATERAL dt_head_cols(text, 3) h
         WHERE doc_id >= 40 AND doc_id < 60
         """
     )

@@ -11,6 +11,7 @@ intermediates.
 from __future__ import annotations
 
 import os
+import re
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -134,9 +135,23 @@ def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, 
     return {t: load_table(spark, t, sf_dir) for t in TABLES}
 
 
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register every TESTDATA table as a temp view so ``spark.sql`` queries
-    (the engine's get-data-table equivalent, clsql-data-table.lisp:13-19)
-    can reference them by name."""
-    for t in TABLES:
+def register_views(
+    spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, tables=TABLES
+) -> None:
+    """Register TESTDATA tables (all by default) as temp views so
+    ``spark.sql`` queries (the engine's get-data-table equivalent,
+    clsql-data-table.lisp:13-19) can reference them by name."""
+    for t in tables:
         load_table(spark, t, sf_dir).createOrReplaceTempView(t)
+
+
+def sql_gate(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
+    """Run ``sql`` over the fixture tables at ``sf_dir``: each table the
+    text names is bound to a temp view of that name, then ``spark.sql``.
+    Analysis is eager, so the returned plan holds this call's relations;
+    a later call at another ``sf_dir`` rebinds the views, not this
+    frame."""
+    register_views(
+        spark, sf_dir, [t for t in TABLES if re.search(rf"\b{t}\b", sql)]
+    )
+    return spark.sql(sql)

@@ -1,32 +1,56 @@
-"""Generate PLANS.md: per-gate-query physical-plan characteristics.
+"""Physical-plan evidence per gate query: PLANS.md, or explain dumps.
 
-Counts the plan features that matter at 100 TB — shuffle exchanges,
-broadcast joins, sort-merge joins, Python eval nodes, whole-stage codegen
-coverage — straight from each query's executedPlan. Run from the repo
-root: ``python scripts/plan_report.py``.
+Run from the repo root::
+
+    python scripts/plan_report.py                     # regenerate PLANS.md
+    python scripts/plan_report.py --dump SUFFIX GATE [GATE ...]
+
+The report counts the plan features that matter at 100 TB — shuffle
+exchanges, broadcast joins, sort-merge joins, Python eval nodes,
+whole-stage codegen coverage — straight from each query's executedPlan.
+``--dump`` writes ``explain("formatted")`` for the named gates to
+``plans/$SPARK_GRAFT_PLANS_DIR (default r14)/<gate>_<SUFFIX>.txt``, the
+before/after plan capture of an optimization change (plans show
+isFinalPlan=false). Both read the fixtures at ``registry.DEFAULT_SF_DIR``
+(``$SPARK_GRAFT_SF_DIR``).
 """
 
 from __future__ import annotations
 
+import argparse
+import io
 import os
 import sys
+from contextlib import redirect_stdout
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from data_table_spark.session import get_spark  # noqa: E402
+from data_table_spark.sources.registry import DEFAULT_SF_DIR  # noqa: E402
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+
+def dump(spark, qs, suffix: str, gates: list[str]) -> None:
+    out_dir = os.path.join(
+        REPO, "plans", os.environ.get("SPARK_GRAFT_PLANS_DIR", "r14")
+    )
+    os.makedirs(out_dir, exist_ok=True)
+    for g in gates:
+        df = qs[g](spark, DEFAULT_SF_DIR)
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            df.explain("formatted")
+        path = os.path.join(out_dir, f"{g}_{suffix}.txt")
+        with open(path, "w") as f:
+            f.write(buf.getvalue())
+        print(f"wrote {path} ({buf.getvalue().count('Exchange')} Exchange refs)")
 
 
-def main() -> None:
-    import __spark_entry__ as entry_mod
-
-    spark = get_spark(app_name="plan_report", shuffle_partitions=8)
-    qs = entry_mod.queries()
+def report(spark, qs) -> None:
     lines = [
         "# PLANS — physical-plan characteristics per gate query",
         "",
-        f"Auto-generated by `scripts/plan_report.py` at sf dir `{SF_DIR}`.",
+        f"Auto-generated by `scripts/plan_report.py` at sf dir `{DEFAULT_SF_DIR}`.",
         "Columns: shuffle exchanges / broadcast exchanges / broadcast-hash",
         "joins / sort-merge joins / Python eval nodes / codegen stage",
         "spans. Streaming-only and driver-side operators are not listed.",
@@ -36,7 +60,7 @@ def main() -> None:
     ]
     for name in sorted(qs):
         try:
-            df = qs[name](spark, SF_DIR)
+            df = qs[name](spark, DEFAULT_SF_DIR)
             p = df._jdf.queryExecution().executedPlan().toString()
             lines.append(
                 f"| {name} | {p.count('Exchange hashpartitioning')} "
@@ -80,11 +104,28 @@ def main() -> None:
         "  prefix-sum/max in scale.py — no global window touches fact",
         "  cardinality anywhere in the registry.",
     ]
-    out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
+    out = os.path.join(REPO, "PLANS.md")
     with open(out, "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote {out} ({len(qs)} queries)")
 
 
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--dump", nargs="+", metavar=("SUFFIX", "GATE"),
+                    help="write explain('formatted') of the named gates")
+    args = ap.parse_args(argv)
+    if args.dump is not None and len(args.dump) < 2:
+        ap.error("--dump needs SUFFIX and at least one GATE")
+    import __spark_entry__ as entry_mod
+
+    qs = entry_mod.queries()
+    if args.dump:
+        dump(get_spark(app_name="plan_dump"), qs, args.dump[0], args.dump[1:])
+    else:
+        report(get_spark(app_name="plan_report", shuffle_partitions=8), qs)
+    return 0
+
+
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

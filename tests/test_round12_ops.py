@@ -393,18 +393,18 @@ def test_udtf_dynamic_schema_is_polymorphic(spark, sf_smoke):
     out = UDF_QUERIES["udf_udtf_dynamic_schema"](spark, sf_smoke)
     assert out.columns == ["doc_id", "n_toks", "w0", "w1", "w2"]
     one = spark.sql(
-        "SELECT h.* FROM docs_udtf_dyn, LATERAL dt_head_cols(text, 1) h "
+        "SELECT h.* FROM documents, LATERAL dt_head_cols(text, 1) h "
         "WHERE doc_id = 40"
     )
     assert one.columns == ["n_toks", "w0"]
     (r,) = one.collect()
     first = spark.sql(
-        "SELECT text FROM docs_udtf_dyn WHERE doc_id = 40"
+        "SELECT text FROM documents WHERE doc_id = 40"
     ).collect()[0][0]
     toks = first.split()
     assert (r["n_toks"], r["w0"]) == (len(toks), toks[0] if toks else None)
     with _pytest.raises(Exception, match="constant"):
         spark.sql(
-            "SELECT h.* FROM docs_udtf_dyn, "
+            "SELECT h.* FROM documents, "
             "LATERAL dt_head_cols(text, CAST(doc_id AS INT)) h"
         ).collect()

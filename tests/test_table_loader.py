@@ -1,19 +1,28 @@
 """``sources.registry.load_table`` is the one fixture reader, so each
 fixture table has one schema engine-wide — in particular ``events.ts``
-is ``timestamp`` in every gate, never ``timestamp_ntz``. Its neighbour
-``local_df`` is the one builder of driver-side literal relations."""
+is ``timestamp`` in every gate, never ``timestamp_ntz``. Its neighbours
+are ``local_df``, the one builder of driver-side literal relations, and
+``sql_gate``, the one binder of fixture tables to SQL view names."""
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 import sys
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import pytest  # noqa: E402
 from pyspark.sql import types as T  # noqa: E402
 
 import __spark_entry__ as entry  # noqa: E402
+from data_table_spark.operators.relational import (  # noqa: E402
+    RELATIONAL_ORACLE,
+    RELATIONAL_QUERIES,
+)
+from data_table_spark.sources import registry  # noqa: E402
 
 PKG = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -62,6 +71,83 @@ def test_no_parallelize_outside_registry():
         if ".parallelize(" in line and rel != "sources/registry.py"
     ]
     assert not stray, f"literal RDDs bypassing local_df: {stray}"
+
+
+def _calls_load_table(node) -> bool:
+    return any(
+        isinstance(n, ast.Call)
+        and getattr(n.func, "id", getattr(n.func, "attr", None)) == "load_table"
+        for n in ast.walk(node)
+    )
+
+
+def test_no_fixture_view_outside_registry():
+    """``registry.sql_gate`` is the one binder of fixture tables to view
+    names: no ``load_table(...)...createOrReplaceTempView(`` chain
+    elsewhere (views over derived frames are fine)."""
+    stray = []
+    for root, _, files in os.walk(PKG):
+        for fn in files:
+            path = os.path.join(root, fn)
+            rel = os.path.relpath(path, PKG)
+            if not fn.endswith(".py") or rel == "sources/registry.py":
+                continue
+            with open(path) as f:
+                tree = ast.parse(f.read())
+            stray += [
+                f"{rel}:{n.lineno}"
+                for n in ast.walk(tree)
+                if isinstance(n, ast.Call)
+                and getattr(n.func, "attr", None) == "createOrReplaceTempView"
+                and _calls_load_table(n.func.value)
+            ]
+    assert not stray, f"fixture views bypassing sql_gate: {stray}"
+
+
+#: the relational gates defined as their own oracle SQL
+SQL_GATES = sorted(
+    n for n, fn in RELATIONAL_QUERIES.items()
+    if isinstance(fn, partial) and fn.func is registry.sql_gate
+)
+
+
+def test_sql_gate_count():
+    assert len(SQL_GATES) == 87
+
+
+@pytest.mark.parametrize("name", SQL_GATES)
+def test_sql_gate_runs_its_own_oracle(name):
+    fn = RELATIONAL_QUERIES[name]
+    assert fn.args == ()
+    assert fn.keywords == {"sql": RELATIONAL_ORACLE[name]}
+
+
+def test_sql_gate_binds_only_the_tables_it_names(spark, sf_smoke, monkeypatch):
+    seen = []
+    load = registry.load_table
+
+    def spy(spark, name, sf_dir=registry.DEFAULT_SF_DIR):
+        seen.append(name)
+        return load(spark, name, sf_dir)
+
+    monkeypatch.setattr(registry, "load_table", spy)
+    for gate, tables in (
+        ("q05_multiway_join", {"customer", "nation", "region"}),
+        ("q10_cross_join", {"region"}),
+    ):
+        seen.clear()
+        RELATIONAL_QUERIES[gate](spark, sf_smoke)
+        assert set(seen) == tables, gate
+
+
+def test_sql_gate_frame_survives_a_rebind(spark, sf_smoke, sf_dir):
+    """Analysis is eager: building q04 again at another scale rebinds the
+    views, not a frame already built."""
+    q04 = RELATIONAL_QUERIES["q04_inner_join"]
+    small = q04(spark, sf_smoke)
+    n_small = small.count()
+    assert q04(spark, sf_dir).count() != n_small
+    assert small.count() == n_small
 
 
 def _types(dtype):
