@@ -148,10 +148,19 @@ def register_views(
 def sql_gate(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
     """Run ``sql`` over the fixture tables at ``sf_dir``: each table the
     text names is bound to a temp view of that name, then ``spark.sql``.
-    Analysis is eager, so the returned plan holds this call's relations;
-    a later call at another ``sf_dir`` rebinds the views, not this
-    frame."""
-    register_views(
-        spark, sf_dir, [t for t in TABLES if re.search(rf"\b{t}\b", sql)]
-    )
-    return spark.sql(sql)
+    Analysis is eager, so the returned plan holds this call's relations,
+    and the views are unbound again before returning: a temp view the
+    session already had under one of these names (``open_testdata``'s,
+    say) is put back, the others are dropped."""
+    names = [t for t in TABLES if re.search(rf"\b{t}\b", sql)]
+    catalog = spark._jsparkSession.sessionState().catalog()
+    held = {t: catalog.getRawTempView(t) for t in names}
+    register_views(spark, sf_dir, names)
+    try:
+        return spark.sql(sql)
+    finally:
+        for t, view in held.items():
+            if view.isDefined():
+                catalog.createTempView(t, view.get(), True)
+            else:
+                catalog.dropTempView(t)

@@ -389,22 +389,25 @@ def test_udtf_dynamic_schema_is_polymorphic(spark, sf_smoke):
     import pytest as _pytest
 
     from data_table_spark.operators.udfs import UDF_QUERIES
+    from data_table_spark.sources.registry import sql_gate
 
     out = UDF_QUERIES["udf_udtf_dynamic_schema"](spark, sf_smoke)
     assert out.columns == ["doc_id", "n_toks", "w0", "w1", "w2"]
-    one = spark.sql(
+    one = sql_gate(
+        spark, sf_smoke,
         "SELECT h.* FROM documents, LATERAL dt_head_cols(text, 1) h "
-        "WHERE doc_id = 40"
+        "WHERE doc_id = 40",
     )
     assert one.columns == ["n_toks", "w0"]
     (r,) = one.collect()
-    first = spark.sql(
-        "SELECT text FROM documents WHERE doc_id = 40"
+    first = sql_gate(
+        spark, sf_smoke, "SELECT text FROM documents WHERE doc_id = 40"
     ).collect()[0][0]
     toks = first.split()
     assert (r["n_toks"], r["w0"]) == (len(toks), toks[0] if toks else None)
     with _pytest.raises(Exception, match="constant"):
-        spark.sql(
+        sql_gate(
+            spark, sf_smoke,
             "SELECT h.* FROM documents, "
-            "LATERAL dt_head_cols(text, CAST(doc_id AS INT)) h"
+            "LATERAL dt_head_cols(text, CAST(doc_id AS INT)) h",
         ).collect()
