@@ -21,6 +21,7 @@ relational surface (operators/relational.py), which never touches _row_id.
 
 from __future__ import annotations
 
+from operator import itemgetter
 from typing import Any, Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -36,7 +37,13 @@ from .inference import (
     guess_types,
     guess_types_with_audit,
 )
-from .names import dedupe_names, resolve_column, spark_safe_name, symbolize_name
+from .names import (
+    dedupe_names,
+    resolve_column,
+    spark_safe_name,
+    sql_name,
+    symbolize_name,
+)
 from .sources.registry import local_df
 
 ROW_ID = "_row_id"
@@ -331,10 +338,7 @@ class DataTable:
             return rows[0][0] if rows else None
         if col is not None:
             name = self.column_names[self.column_index(col)]
-            return [
-                r[0]
-                for r in self._df.orderBy(ROW_ID).select(name).collect()
-            ]
+            return [r[0] for r in self._ordered_rows([name])]
         if row_idx is not None:
             rows = (
                 self._df.where(F.col(ROW_ID) == row_idx)
@@ -715,19 +719,19 @@ class DataTable:
     def to_records(self) -> list[dict]:
         """table → list of dicts in row order (data-table-to-alists,
         data-table.lisp:523-537). Driver-side; small results only."""
-        rows = self._df.orderBy(ROW_ID).select(*self.column_names).collect()
-        return [r.asDict() for r in rows]
+        names = self.column_names
+        return [dict(zip(names, r)) for r in self._ordered_rows(names)]
 
     def rows(self) -> list[list]:
-        return [list(r) for r in
-                self._df.orderBy(ROW_ID).select(*self.column_names).collect()]
+        return [list(r) for r in self._ordered_rows(self.column_names)]
 
     def to_arrow(self):
         """table → pyarrow.Table in row order (Spark 4 ``df.toArrow``) —
         the zero-copy interchange surface toward pandas/polars/duckdb,
         the columnar sibling of to_records. Driver-side; small results
         only (same contract as to_records)."""
-        return self._df.orderBy(ROW_ID).select(*self.column_names).toArrow()
+        table = self._select_with_row_id(self.column_names).toArrow()
+        return table.sort_by(ROW_ID).drop_columns([ROW_ID])
 
     @classmethod
     def from_arrow(
@@ -784,6 +788,18 @@ class DataTable:
         return DataTable(
             df, config=self.config, _has_row_id=True, _n_rows=n_rows
         )
+
+    def _select_with_row_id(self, names: Sequence[str]) -> DataFrame:
+        return self._df.selectExpr(ROW_ID, *[sql_name(n) for n in names])
+
+    def _ordered_rows(self, names: Sequence[str]) -> list[tuple]:
+        """The ``names`` cells of every row, in row order, for reads that
+        end on the driver anyway. The rows are sorted by row id there, so
+        no global sort is planned: over a literal table Catalyst folds the
+        read into the literal and runs no job at all."""
+        rows = self._select_with_row_id(names).collect()
+        rows.sort(key=itemgetter(0))
+        return [r[1:] for r in rows]
 
     def cache(self) -> "DataTable":
         self._df = self._df.cache()

@@ -3,7 +3,9 @@
 Everything here is built from ``pyspark.sql.functions`` so it stays inside
 whole-stage codegen — no Python UDFs on the hot path. Each function also has
 a SQL-text twin (``*_sql``) so the same semantics can be spliced into
-``spark.sql`` strings (a zero-cost alternative to UDF registration).
+Spark SQL text (a zero-cost alternative to UDF registration, and one
+py4j call for a whole projection where Column building makes one per
+``F.*`` node). Both forms are built from the same regex constants.
 
 Reference citations (into /root/reference/):
 - trim-whitespace / trim-and-nullify: data-table.lisp:40-56
@@ -22,6 +24,9 @@ _TRIM_EDGE = r"^[\s ]+|[\s ]+$"
 
 #: Characters stripped by relaxed numeric parsing (data-table.lisp:86).
 _NUMERIC_JUNK = r"[\s $,%]"
+
+#: Integer syntax after the junk strip (parse-integer, data-table.lisp:322).
+_INT_SYNTAX = r"^[+-]?[0-9]+$"
 
 
 def trim_whitespace(col: Column | str) -> Column:
@@ -52,20 +57,38 @@ def relaxed_long(col: Column | str) -> Column:
     stripped = F.regexp_replace(c, _NUMERIC_JUNK, "")
     # invariant: only strings matching an integer literal parse; the regex
     # guard makes that explicit rather than relying on string→long cast
-    # behavior, which differs across Spark versions and ANSI modes.
-    is_int = stripped.rlike(r"^[+-]?\d+$")
-    return F.when(is_int, stripped.cast("long")).otherwise(F.lit(None).cast("long"))
+    # behavior, which differs across Spark versions and ANSI modes, and
+    # try_cast keeps an out-of-range integer NULL under ANSI.
+    return F.when(stripped.rlike(_INT_SYNTAX), stripped.try_cast("long")).otherwise(
+        F.lit(None).cast("long")
+    )
 
 
-# --- SQL-text twins (for splicing into spark.sql / DuckDB oracle strings) ---
+# --- SQL-text twins (for splicing into Spark SQL text) ---
+# Each formats the same regex constants as its Column twin above.
+
+def sql_string(text: str) -> str:
+    """``text`` as a Spark SQL string literal (backslash escapes are
+    processed, the default of ``spark.sql.parser.escapedStringLiterals``)."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
 
 def trim_and_nullify_sql(expr: str) -> str:
-    return (
-        "CASE WHEN LOWER(REGEXP_REPLACE({e}, '^[\\\\s\\u00a0]+|[\\\\s\\u00a0]+$', '')) "
-        "IN ('', 'nil') THEN NULL "
-        "ELSE REGEXP_REPLACE({e}, '^[\\\\s\\u00a0]+|[\\\\s\\u00a0]+$', '') END"
-    ).format(e=expr)
+    t = f"REGEXP_REPLACE({expr}, {sql_string(_TRIM_EDGE)}, '')"
+    return f"CASE WHEN LOWER({t}) IN ('', 'nil') THEN NULL ELSE {t} END"
+
+
+def strip_numeric_junk_sql(expr: str) -> str:
+    return f"REGEXP_REPLACE({expr}, {sql_string(_NUMERIC_JUNK)}, '')"
 
 
 def relaxed_double_sql(expr: str) -> str:
-    return f"CAST(REGEXP_REPLACE({expr}, '[\\\\s$,%]', '') AS DOUBLE)"
+    return f"TRY_CAST({strip_numeric_junk_sql(expr)} AS DOUBLE)"
+
+
+def relaxed_long_sql(expr: str) -> str:
+    s = strip_numeric_junk_sql(expr)
+    return (
+        f"CASE WHEN {s} RLIKE {sql_string(_INT_SYNTAX)} "
+        f"THEN TRY_CAST({s} AS BIGINT) END"
+    )

@@ -5,7 +5,8 @@ cost: Spark 4's ``CREATE TEMPORARY FUNCTION … RETURN <expr>`` registers a
 pure-Catalyst SQL function — the body inlines into the caller's plan and
 stays inside whole-stage codegen.
 
-Functions (all NULL-propagating like their Column twins in cleaning.py):
+Functions (all NULL-propagating like their Column twins in cleaning.py,
+whose ``*_sql`` text forms are their bodies):
 - dt_trim_nullify(s): NBSP-aware trim; ''/'nil' → NULL (data-table.lisp:48-56)
 - dt_relaxed_double(s): strip \\s $ , % then double (data-table.lisp:74-90)
 - dt_relaxed_bigint(s): integer-syntax variant
@@ -16,26 +17,20 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-_TRIM = "REGEXP_REPLACE({s}, '^[\\\\s\\u00a0]+|[\\\\s\\u00a0]+$', '')"
-_STRIP = "REGEXP_REPLACE({s}, '[\\\\s$,% ]', '')"
+from .cleaning import relaxed_double_sql, relaxed_long_sql, trim_and_nullify_sql
 
 _DEFS = [
     (
         "dt_trim_nullify",
-        "(s STRING) RETURNS STRING RETURN "
-        f"CASE WHEN LOWER({_TRIM.format(s='s')}) IN ('', 'nil') THEN NULL "
-        f"ELSE {_TRIM.format(s='s')} END",
+        f"(s STRING) RETURNS STRING RETURN {trim_and_nullify_sql('s')}",
     ),
     (
         "dt_relaxed_double",
-        "(s STRING) RETURNS DOUBLE RETURN "
-        f"TRY_CAST({_STRIP.format(s='s')} AS DOUBLE)",
+        f"(s STRING) RETURNS DOUBLE RETURN {relaxed_double_sql('s')}",
     ),
     (
         "dt_relaxed_bigint",
-        "(s STRING) RETURNS BIGINT RETURN "
-        f"CASE WHEN {_STRIP.format(s='s')} RLIKE '^[+-]?[0-9]+$' "
-        f"THEN TRY_CAST({_STRIP.format(s='s')} AS BIGINT) END",
+        f"(s STRING) RETURNS BIGINT RETURN {relaxed_long_sql('s')}",
     ),
     (
         "dt_fmt2",

@@ -26,16 +26,24 @@ with the cast projection. No collect() of data, only of per-column counters.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from .config import GUESSING_TYPES_SAMPLE_SIZE, LARGEST_NUMBER
-from .functions.cleaning import _NUMERIC_JUNK, relaxed_double, trim_and_nullify
+from .functions.cleaning import (
+    _INT_SYNTAX,
+    relaxed_double_sql,
+    relaxed_long_sql,
+    sql_string,
+    strip_numeric_junk_sql,
+    trim_and_nullify_sql,
+)
+from .names import sql_name
 from .sources.registry import local_df
 
-_INT_RE = r"^[+-]?[0-9]+$"
 _TS_RE = r"^\d{4}-\d{2}-\d{2}([ T]\d{2}:\d{2}(:\d{2}(\.\d+)?)?)?$"
+#: 2^63 as DECIMAL(38,0): it does not fit a Java long literal
+_BIG = f"CAST('{LARGEST_NUMBER}' AS DECIMAL(38,0))"
 
 
 class BadTypeGuess(ValueError):
@@ -62,51 +70,57 @@ def simplify_type(value) -> str:
     return "string"
 
 
-def _candidate_exprs(col: str) -> list[Column]:
+def _facts_sql(i: int) -> list[str]:
+    """Per-column facts over the trimmed-and-nullified value ``v<i>``,
+    each computed once in the projection under the guess aggregate. The
+    double, long and timestamp are ``_cast_sql`` itself, the cast the
+    coercion audit applies, so the guess-side failure counters count
+    exactly what that audit would."""
+    v = f"v{i}"
+    s = strip_numeric_junk_sql(v)
+    return [
+        f"{v} IS NOT NULL AS nn{i}",
+        f"{s} RLIKE {sql_string(_INT_SYNTAX)} AS int{i}",
+        # 2^63 range check on integer syntax without overflow
+        f"COALESCE(ABS(TRY_CAST({s} AS DECIMAL(38,0))) < {_BIG}, FALSE) AS rng{i}",
+        f"{_cast_sql(v, T.DoubleType())} AS dbl{i}",
+        f"{_cast_sql(v, T.LongType())} AS lng{i}",
+        f"{v} RLIKE {sql_string(_TS_RE)} AS tsyn{i}",
+        f"{_cast_sql(v, T.TimestampType())} AS ts{i}",
+    ]
+
+
+def _counters_sql(i: int) -> list[str]:
     """Counting expressions for one column's candidate types (runs over the
     sample; equivalent of assign-types-to-column, data-table.lisp:309-329).
 
-    The last three counters (round-14) count strict-coercion FAILURES per
-    candidate type, built from the very ``_cast_value_expr`` the coercion
-    audit applies — so when the sample provably covers the whole table
+    The last three (round-14) count strict-coercion FAILURES per
+    candidate type, so when the sample provably covers the whole table
     (facade row-count hint ≤ sample size) the audit's answer is already
     in the guess result and its separate full-table agg job can be
     skipped with a byte-identical outcome (guess_types_with_audit)."""
-    v = trim_and_nullify(F.col(col))
-    stripped = F.regexp_replace(v, _NUMERIC_JUNK, "")
-    is_int_syntax = stripped.rlike(_INT_RE)
-    # 2^63 range check on integer syntax without overflow: decimal(38,0)
-    # (2^63 itself doesn't fit a Java long, so the literal goes in as a
-    # string cast to decimal)
-    big = F.lit(str(LARGEST_NUMBER)).cast(T.DecimalType(38, 0))
-    in_long_range = F.abs(stripped.try_cast(T.DecimalType(38, 0))) < big
-    is_int_ok = is_int_syntax & F.coalesce(in_long_range, F.lit(False))
-    dbl = relaxed_double(v)
-    is_dbl_ok = dbl.isNotNull() & (F.abs(dbl) < F.lit(float(LARGEST_NUMBER)))
-    is_ts = v.rlike(_TS_RE) & F.try_to_timestamp(v).isNotNull()
-    non_null = v.isNotNull()
-    bad = non_null & ~is_dbl_ok & ~is_int_ok & ~is_ts
+    nn = f"nn{i}"
+    is_int_ok = f"(int{i} AND rng{i})"
+    is_dbl_ok = f"(dbl{i} IS NOT NULL AND ABS(dbl{i}) < {float(LARGEST_NUMBER)!r})"
+    is_ts = f"(tsyn{i} AND ts{i} IS NOT NULL)"
     # ints with |v| >= 2^63 parse fine as doubles; the reference still
     # demotes them to string (data-table.lisp:274-276)
-    bad = bad | (is_int_syntax & ~F.coalesce(in_long_range, F.lit(False)))
-    non_int = non_null & is_dbl_ok & ~is_int_ok & ~is_ts
-    c = F.count
+    bad = (
+        f"({nn} AND NOT {is_dbl_ok} AND NOT {is_int_ok} AND NOT {is_ts})"
+        f" OR (int{i} AND NOT rng{i})"
+    )
+    non_int = f"{nn} AND {is_dbl_ok} AND NOT {is_int_ok} AND NOT {is_ts}"
     return [
-        c(F.when(non_null, 1)).alias(f"{col}__nn"),
-        c(F.when(bad, 1)).alias(f"{col}__bad"),
-        c(F.when(non_int, 1)).alias(f"{col}__nonint"),
-        c(F.when(non_null & ~is_ts, 1)).alias(f"{col}__nonts"),
-        c(
-            F.when(non_null & _cast_value_expr(v, T.LongType()).isNull(), 1)
-        ).alias(f"{col}__lbad"),
-        c(
-            F.when(non_null & _cast_value_expr(v, T.DoubleType()).isNull(), 1)
-        ).alias(f"{col}__dbad"),
-        c(
-            F.when(
-                non_null & _cast_value_expr(v, T.TimestampType()).isNull(), 1
-            )
-        ).alias(f"{col}__tbad"),
+        f"COUNT(CASE WHEN {cond} THEN 1 END) AS {name}{i}"
+        for name, cond in [
+            ("nn", nn),
+            ("bad", bad),
+            ("nonint", non_int),
+            ("nonts", f"{nn} AND NOT {is_ts}"),
+            ("lbad", f"{nn} AND lng{i} IS NULL"),
+            ("dbad", f"{nn} AND dbl{i} IS NULL"),
+            ("tbad", f"{nn} AND ts{i} IS NULL"),
+        ]
     ]
 
 
@@ -151,34 +165,48 @@ def _guess_with_counters(
     """guess_types' engine: one agg job over the sample; returns the
     resolved types AND the sample-side strict-coercion failure count for
     each column's PICKED type (0 for string picks — strings never fail)."""
+    picked = df.selectExpr(*[sql_name(c) for c in columns])
     if sample_mode == "reservoir":
-        rows = df.select(*columns).rdd.takeSample(False, sample_size, seed=42)
+        rows = picked.rdd.takeSample(False, sample_size, seed=42)
         if not rows:
             return {c: T.StringType() for c in columns}, dict.fromkeys(columns, 0)
         # ≤1000 sampled rows: one Arrow LocalRelation, no python worker
-        sample = local_df(df.sparkSession, rows, df.select(*columns).schema)
+        sample = local_df(df.sparkSession, rows, picked.schema)
     else:
-        sample = df.select(*columns).limit(sample_size)
-    exprs = [e for c in columns for e in _candidate_exprs(c)]
-    row = sample.agg(*exprs).collect()[0].asDict()
+        sample = picked.limit(sample_size)
+    # SQL text, one selectExpr per plan level: the trimmed values, the
+    # facts over them, the counters over the facts
+    idx = range(len(columns))
+    row = (
+        sample.selectExpr(
+            *[
+                f"{trim_and_nullify_sql(sql_name(c))} AS v{i}"
+                for i, c in enumerate(columns)
+            ]
+        )
+        .selectExpr(*[e for i in idx for e in _facts_sql(i)])
+        .selectExpr(*[e for i in idx for e in _counters_sql(i)])
+        .collect()[0]
+        .asDict()
+    )
     out: dict[str, T.DataType] = {}
     bad_counts: dict[str, int] = {}
-    for c in columns:
+    for i, c in enumerate(columns):
         nn, bad, nonint, nonts = (
-            row[f"{c}__nn"], row[f"{c}__bad"], row[f"{c}__nonint"], row[f"{c}__nonts"],
+            row[f"nn{i}"], row[f"bad{i}"], row[f"nonint{i}"], row[f"nonts{i}"],
         )
         if nn == 0 or bad > 0:
             out[c] = T.StringType()       # any string candidate wins (lisp:337-338, 343)
             bad_counts[c] = 0
         elif infer_dates and nonts == 0:
             out[c] = T.TimestampType()    # documented improvement (SURVEY §1.3)
-            bad_counts[c] = row[f"{c}__tbad"]
+            bad_counts[c] = row[f"tbad{i}"]
         elif nonint == 0:
             out[c] = T.LongType()         # exactly {integer} (lisp:339-340)
-            bad_counts[c] = row[f"{c}__lbad"]
+            bad_counts[c] = row[f"lbad{i}"]
         else:
             out[c] = T.DoubleType()       # {int,double} mix (lisp:341-342)
-            bad_counts[c] = row[f"{c}__dbad"]
+            bad_counts[c] = row[f"dbad{i}"]
     return out, bad_counts
 
 
@@ -193,7 +221,7 @@ def guess_types_with_audit(
     at most ``sample_size`` rows (then the head sample IS the table, so
     the per-type failure counters equal what coerce_table's audit agg
     would count over the full table; the counter expressions are built
-    from the same ``_cast_value_expr`` the audit uses, so the identity
+    from the same ``_cast_sql`` the audit uses, so the identity
     is textual). Callers with unknown or larger row counts must keep
     the two-job guess-then-audit path."""
     columns = columns or [
@@ -229,26 +257,21 @@ def ensure_column_types(
     return guessed
 
 
-def _cast_value_expr(v: Column, dtype: T.DataType) -> Column:
-    """Strict-coercion cast over an already trim-and-nullified value —
-    the ONE definition both the coercion audit and the guess-side
-    failure counters use (their equivalence is textual, not proven)."""
+def _cast_sql(v: str, dtype: T.DataType) -> str:
+    """Strict-coercion cast over an already trim-and-nullified SQL value —
+    the ONE definition the coercion projection, its audit and the
+    guess-side failure counters all use."""
     if isinstance(dtype, T.DoubleType):
-        return relaxed_double(v)
-    if isinstance(dtype, (T.LongType, T.IntegerType)):
-        stripped = F.regexp_replace(v, _NUMERIC_JUNK, "")
-        return F.when(stripped.rlike(_INT_RE), stripped.try_cast(dtype)).otherwise(
-            F.lit(None).cast(dtype)
-        )
+        return relaxed_double_sql(v)
+    if isinstance(dtype, T.LongType):
+        return relaxed_long_sql(v)
+    if isinstance(dtype, T.IntegerType):
+        return f"TRY_CAST({relaxed_long_sql(v)} AS INT)"
     if isinstance(dtype, T.TimestampType):
-        return F.try_to_timestamp(v)
+        return f"TRY_TO_TIMESTAMP({v})"
     if isinstance(dtype, T.StringType):
         return v
-    return v.try_cast(dtype)
-
-
-def _cast_expr(col: str, dtype: T.DataType) -> Column:
-    return _cast_value_expr(trim_and_nullify(F.col(col)), dtype)
+    return f"TRY_CAST({v} AS {dtype.simpleString()})"
 
 
 def coerce_table(
@@ -297,17 +320,14 @@ def coerce_table(
             # fewer full-table agg job
             bad = {c: _audit_counts.get(c, 0) for c in targets}
         else:
-            audits = [
-                F.count(
-                    F.when(
-                        trim_and_nullify(F.col(c)).isNotNull()
-                        & _cast_expr(c, t).isNull(),
-                        1,
-                    )
-                ).alias(c)
-                for c, t in targets.items()
-            ]
-            bad = df.agg(*audits).collect()[0].asDict()
+            audits = []
+            for c, t in targets.items():
+                v = trim_and_nullify_sql(sql_name(c))
+                audits.append(
+                    f"COUNT(CASE WHEN {v} IS NOT NULL AND {_cast_sql(v, t)} IS NULL"
+                    " THEN 1 END)"
+                )
+            bad = dict(zip(targets, df.selectExpr(*audits).collect()[0]))
         for c, cnt in bad.items():
             if cnt and cnt > 0:
                 if on_error == "raise":
@@ -316,13 +336,15 @@ def coerce_table(
                 str_cols.append(c)
     out_cols = []
     for f in df.schema.fields:
+        n = sql_name(f.name)
         if f.name in targets:
-            out_cols.append(_cast_expr(f.name, targets[f.name]).alias(f.name))
+            v = trim_and_nullify_sql(n)
+            out_cols.append(f"{_cast_sql(v, targets[f.name])} AS {n}")
         elif f.name in str_cols:
-            out_cols.append(trim_and_nullify(F.col(f.name)).alias(f.name))
+            out_cols.append(f"{trim_and_nullify_sql(n)} AS {n}")
         else:
-            out_cols.append(F.col(f.name))
-    return df.select(*out_cols)
+            out_cols.append(n)
+    return df.selectExpr(*out_cols)
 
 
 def auto_type(

@@ -56,6 +56,12 @@ def spark_safe_name(name: str) -> str:
     return s
 
 
+def sql_name(name: str) -> str:
+    """Any column name as a Spark SQL identifier: backticks around it,
+    a backtick inside doubled (``x.y`` stays one column, not a field)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def dedupe_names(names: list[str], on_duplicate: str = "suffix") -> list[str]:
     """Repair duplicate names with numeric suffixes, case-insensitively:
     ``d, d, x, d`` → ``d, d_1, x, d_2`` (clsql-data-table.lisp:145-181).

@@ -344,18 +344,22 @@ def stream_upsert_snapshot(spark, sf_dir):
     an order-insensitive max(struct(ts, event_id, …)) per user — any
     batch split converges to the same latest-per-key table (the q59
     pattern, proven batch==stream in tests/test_streaming.py). The
-    work dir is a fixed path cleaned at entry so repeated gate runs
-    (driver, bench best-of-2) never collide or leak unboundedly."""
+    work dir is one per process and scale, cleaned at entry, so repeated
+    gate runs (driver, bench best-of-2) never leak unboundedly and two
+    processes building the gate at once never share it."""
+    import atexit
     import shutil
     import tempfile
 
     from .upsert import latest_per_key_merge, run_streaming_upsert
 
     events = load_table(spark, "events", sf_dir)
-    work = os.path.join(
-        tempfile.gettempdir(), "dts_stream_upsert_gate",
-        os.path.basename(os.path.normpath(sf_dir)),
+    root = os.path.join(
+        tempfile.gettempdir(), "dts_stream_upsert_gate", str(os.getpid())
     )
+    if not os.path.isdir(root):
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+    work = os.path.join(root, os.path.basename(os.path.normpath(sf_dir)))
     shutil.rmtree(work, ignore_errors=True)
     src = os.path.join(work, "src")
     events.repartition(4).write.parquet(src)

@@ -818,10 +818,12 @@ def materialize(df) -> None:
 
 
 def main() -> None:
-    # same heap policy as bench.py: the sf10 fact joins (q106's wedge
-    # pass in particular) spill-then-OOM on the 8g default heap under
-    # an unlucky AQE layout; half of physical RAM, capped, is safe
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
+    # bench.py's heap policy: the sf10 fact joins (q106's wedge pass in
+    # particular) spill-then-OOM on the 8g default heap under an unlucky
+    # AQE layout; half of physical RAM, capped at 24g, is safe
+    from bench import _default_heap_gb
+
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{_default_heap_gb()}g")
     import __spark_entry__ as entry_mod
     from data_table_spark.session import get_spark
 
