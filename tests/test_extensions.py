@@ -19,6 +19,10 @@ from data_table_spark.operators.dedup import (  # noqa: E402
     DEDUP_QUERIES,
     PAIR_BOUND,
 )
+from data_table_spark.operators.evalmetrics import (  # noqa: E402
+    EVAL_ORACLE,
+    EVAL_QUERIES,
+)
 from data_table_spark.operators.similarity import (  # noqa: E402
     SIMILARITY_ORACLE,
     SIMILARITY_QUERIES,
@@ -38,12 +42,12 @@ from data_table_spark.streaming.windows import (  # noqa: E402
 from tests.oracle_util import compare_to_oracle, duck_connection  # noqa: E402
 
 ALL_QUERIES = {
-    **DEDUP_QUERIES, **SIMILARITY_QUERIES, **TEXTSTATS_QUERIES,
-    **STATEFUL_QUERIES, **STREAMJOIN_QUERIES,
+    **DEDUP_QUERIES, **EVAL_QUERIES, **SIMILARITY_QUERIES,
+    **TEXTSTATS_QUERIES, **STATEFUL_QUERIES, **STREAMJOIN_QUERIES,
 }
 ALL_ORACLE = {
-    **DEDUP_ORACLE, **SIMILARITY_ORACLE, **TEXTSTATS_ORACLE,
-    **STATEFUL_ORACLE, **STREAMJOIN_ORACLE,
+    **DEDUP_ORACLE, **EVAL_ORACLE, **SIMILARITY_ORACLE,
+    **TEXTSTATS_ORACLE, **STATEFUL_ORACLE, **STREAMJOIN_ORACLE,
 }
 
 
