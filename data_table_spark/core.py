@@ -333,7 +333,9 @@ class DataTable:
         if row_idx is not None and col is not None:
             name = self.column_names[self.column_index(col)]
             rows = (
-                self._df.where(F.col(ROW_ID) == row_idx).select(name).collect()
+                self._df.where(F.col(ROW_ID) == row_idx)
+                .select(sql_name(name))
+                .collect()
             )
             return rows[0][0] if rows else None
         if col is not None:
@@ -342,7 +344,7 @@ class DataTable:
         if row_idx is not None:
             rows = (
                 self._df.where(F.col(ROW_ID) == row_idx)
-                .select(*self.column_names)
+                .select(*[sql_name(n) for n in self.column_names])
                 .collect()
             )
             return list(rows[0]) if rows else None
@@ -381,7 +383,7 @@ class DataTable:
                 val_rows, schema=[ROW_ID, "_dt_new"]
             )
             vals_df = local_df(spark, val_rows, vals_df.schema)
-            old_c, new_c = F.col(name), F.col("_dt_new")
+            old_c, new_c = F.col(sql_name(name)), F.col("_dt_new")
             if dict(dt._df.dtypes)[name] != dict(vals_df.dtypes)["_dt_new"]:
                 # untyped-cell model: mixing value types demotes the column
                 # to string rather than corrupting either side with a cast
@@ -417,9 +419,8 @@ class DataTable:
         so same-type and numeric↔numeric (widening) assignments stay
         native, everything else demotes. NULL keeps the column type."""
         df = self._df if df is None else df
-        natural = F.when(F.col(ROW_ID) == row_idx, F.lit(value)).otherwise(
-            F.col(name)
-        )
+        cell = F.col(sql_name(name))
+        natural = F.when(F.col(ROW_ID) == row_idx, F.lit(value)).otherwise(cell)
         if value is None:
             return natural
         lit_t = df.select(F.lit(value)).schema[0].dataType  # analysis only
@@ -430,7 +431,7 @@ class DataTable:
             return natural
         return F.when(
             F.col(ROW_ID) == row_idx, F.lit(value).cast("string")
-        ).otherwise(F.col(name).cast("string"))
+        ).otherwise(cell.cast("string"))
 
     def _ensure_rows(self, n: int) -> "DataTable":
         """Append NULL rows until the table has >= n rows (ensure-rows,
@@ -670,7 +671,8 @@ class DataTable:
             F.col(ROW_ID),
             *[
                 format_value(
-                    F.col(f.name), f.dataType, self.config.list_delimiter
+                    F.col(sql_name(f.name)), f.dataType,
+                    self.config.list_delimiter,
                 ).alias(f.name)
                 for f in self._df.schema.fields
                 if f.name != ROW_ID

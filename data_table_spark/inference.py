@@ -132,6 +132,7 @@ def guess_types(
     sample_mode: str = "head",
 ) -> dict[str, T.DataType]:
     """Infer a Spark type per (string) column from a bounded sample.
+    ``columns=None`` guesses every string column; ``[]`` guesses none.
 
     One job: sample → single agg of 4 counters per column
     (guess-types-for-data-table, data-table.lisp:331-343).
@@ -144,9 +145,11 @@ def guess_types(
       but scans the full table once; opt in when head rows are biased
       (e.g. a sorted file whose early rows are all-numeric).
     """
-    columns = columns or [
-        f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)
-    ]
+    if columns is None:
+        columns = [
+            f.name for f in df.schema.fields
+            if isinstance(f.dataType, T.StringType)
+        ]
     if not columns:
         return {}
     types, _ = _guess_with_counters(
@@ -224,9 +227,11 @@ def guess_types_with_audit(
     from the same ``_cast_sql`` the audit uses, so the identity
     is textual). Callers with unknown or larger row counts must keep
     the two-job guess-then-audit path."""
-    columns = columns or [
-        f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)
-    ]
+    if columns is None:
+        columns = [
+            f.name for f in df.schema.fields
+            if isinstance(f.dataType, T.StringType)
+        ]
     if not columns:
         return {}, {}
     return _guess_with_counters(df, columns, sample_size, infer_dates, "head")

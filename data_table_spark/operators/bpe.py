@@ -37,6 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.text import tokens
 from ..lineage import truncate_lineage
 from ..sources.registry import load_table, local_df
 
@@ -50,9 +51,7 @@ def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
     convention); one explode + one count aggregate."""
     return (
         docs.select(
-            F.explode(
-                F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-            ).alias("word")
+            F.explode(tokens(text_col)).alias("word")
         )
         .where(F.col("word") != "")
         .groupBy("word")
@@ -160,9 +159,7 @@ def bpe_encode(docs: DataFrame, merges: list, text_col: str = "text") -> DataFra
     the expression chain's depth is the documented limit here."""
     out = docs.select(
         "doc_id",
-        F.explode(
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-        ).alias("word"),
+        F.explode(tokens(text_col)).alias("word"),
     ).where(F.col("word") != "").withColumn(
         "symbols", F.split("word", "")
     )

@@ -31,6 +31,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import ngrams, tokens
 from ..lineage import truncate_lineage
 from ..sources.registry import load_table, local_df
 
@@ -46,35 +47,9 @@ LSH_ROWS = 4
 JACCARD_THRESHOLD = 0.5
 
 
-def _tokens(col) -> Column:
-    return F.split(F.lower(F.trim(col)), r"\s+")
-
-
-def _bigram_shingles(col) -> Column:
-    """Distinct word-bigram shingles of a text column (pure expression).
-
-    Built as zip_with over two shifted slices — NOT transform over an
-    index sequence with element_at: per-index element_at inside a
-    higher-order function degrades to O(tokens²) per document (measured
-    12× slower at sf0.1: 7.3 s vs 0.5 s for the corpus explode).
-    """
-    t = _tokens(col)
-    # guard: slice(len-1) is invalid for single-token texts — return an
-    # empty shingle set instead
-    return F.when(F.size(t) < 2, F.array().cast("array<string>")).otherwise(
-        F.array_distinct(
-            F.zip_with(
-                F.slice(t, 1, F.size(t) - 1),
-                F.slice(t, 2, F.size(t) - 1),
-                lambda a, b: F.concat_ws(" ", a, b),
-            )
-        )
-    )
-
-
 def _jaccard(a: Column, b: Column) -> Column:
     """Jaccard of two DISTINCT arrays (every caller passes
-    _bigram_shingles output, which is array_distinct'ed).
+    array_distinct'ed bigram shingles).
 
     Round-13 optimization (guide §1.2 per-task work): the union size
     comes from inclusion-exclusion — |A∪B| = |A|+|B|−|A∩B| holds
@@ -134,7 +109,9 @@ def dedup_ngram_jaccard_pairs(spark, sf_dir):
     O(n²) by construction — bounded so it stays an oracle/verification
     tool; the unbounded scale path is dedup_minhash_lsh_pairs."""
     d = load_table(spark, "documents", sf_dir).where(F.col("doc_id") < PAIR_BOUND)
-    sh = d.select(F.col("doc_id"), _bigram_shingles(F.col("text")).alias("s"))
+    sh = d.select(
+        F.col("doc_id"), F.array_distinct(ngrams(tokens("text"), 2)).alias("s")
+    )
     a = sh.select(F.col("doc_id").alias("a"), F.col("s").alias("sa"))
     b = sh.select(F.col("doc_id").alias("b"), F.col("s").alias("sb"))
     pairs = a.join(b, F.col("a") < F.col("b"))
@@ -160,7 +137,8 @@ def minhash_signatures(docs: DataFrame, k: int = MINHASH_K) -> DataFrame:
     aggregates map-side, so the shuffle carries one (doc_id, k longs)
     row per doc per partition — O(docs), never the exploded shingles."""
     sh = docs.select(
-        "doc_id", F.explode(_bigram_shingles(F.col("text"))).alias("shingle")
+        "doc_id",
+        F.explode(F.array_distinct(ngrams(tokens("text"), 2))).alias("shingle"),
     )
     aggs = [
         F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
@@ -260,7 +238,7 @@ def minhash_verified_pairs(
     # without truncation each side re-runs the bigram shingling of the
     # whole corpus (the prefix_filter_pairs lesson).
     sh = truncate_lineage(
-        d.select("doc_id", _bigram_shingles(F.col("text")).alias("s"))
+        d.select("doc_id", F.array_distinct(ngrams(tokens("text"), 2)).alias("s"))
     )
     return (
         cand.join(sh.select(F.col("doc_id").alias("a"), F.col("s").alias("sa")), "a")
@@ -306,7 +284,7 @@ def simhash_expr(text: Column, bits: int = SIMHASH_BITS) -> Column:
 
     Per token: xxhash64 → bit vector → +1/-1 votes; per doc: elementwise
     vote sum via aggregate/zip_with; sign → bit; pack to long."""
-    toks = F.array_distinct(_tokens(text))
+    toks = F.array_distinct(tokens(text))
     # bit b of token t = parity of an independent hash xxhash64(b, t)
     # (shiftright/shiftleft need literal shift amounts, so per-bit hashes
     # are both simpler and statistically cleaner than slicing one hash)
@@ -408,13 +386,6 @@ def simhash_pairs_df(
         )
         .where(F.col("hamming") <= max_hamming)
     )
-
-
-def simhash_near_pairs(spark, sf_dir, max_hamming: int = 3):
-    """Near-dup pairs by SimHash over the documents table (see
-    simhash_pairs_df for the guarded band-join machinery)."""
-    d = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    return simhash_pairs_df(d, max_hamming=max_hamming)
 
 
 #: doc_id offset for dedup_simhash_planted_pairs' exact copies.
@@ -890,35 +861,6 @@ DEDUP_ORACLE["dedup_clusters_recursive_sql"] = DEDUP_ORACLE["dedup_clusters_boun
 # Prefix filtering (AllPairs/PPJoin) — EXACT similarity join, unbounded
 # --------------------------------------------------------------------------
 
-def _trigram_shingles(col) -> Column:
-    """Distinct word-trigram shingles — the prefix-filter join's token
-    universe. Trigrams, not bigrams, deliberately: selectivity of
-    prefix filtering is governed by the document-frequency of the
-    RAREST tokens, and this synthetic corpus has a ~31-word vocabulary
-    whose bigrams all have df in the hundreds at sf0.1 (measured: the
-    bigram form produced ~33M candidates and a 172 s gate — the
-    filter's premise, Zipfian rarity, simply absent). Trigram vocab is
-    27k with max df 25 at sf0.1 — rarity restored, candidates
-    near-linear in true pairs. Built with chained zip_with over
-    shifted slices (the _bigram_shingles lesson: no per-index
-    element_at)."""
-    t = _tokens(col)
-    n = F.size(t)
-    bi = F.zip_with(
-        F.slice(t, 1, n - 2),
-        F.slice(t, 2, n - 2),
-        lambda a, b: F.concat_ws(" ", a, b),
-    )
-    return F.when(n < 3, F.array().cast("array<string>")).otherwise(
-        F.array_distinct(
-            F.zip_with(
-                bi, F.slice(t, 3, n - 2),
-                lambda ab, c: F.concat_ws(" ", ab, c),
-            )
-        )
-    )
-
-
 def prefix_filter_pairs(
     docs: DataFrame,
     t_num: int = 1,
@@ -939,6 +881,13 @@ def prefix_filter_pairs(
     tokens — and only candidates pay the exact verify. Rarest-first
     ordering makes prefixes maximally selective: the hot tokens every
     document shares sit at the END of the ordering and never join.
+
+    The token universe is distinct word TRIGRAMS, not bigrams:
+    selectivity is governed by the document-frequency of the rarest
+    tokens, and this synthetic corpus has a ~31-word vocabulary whose
+    bigrams all have df in the hundreds at sf0.1 (measured: the bigram
+    form produced ~33M candidates and a 172 s gate). Trigram vocab is
+    27k with max df 25 at sf0.1 — candidates near-linear in true pairs.
 
     Plan shape: token explode (map-side) → df counts (one agg) → global
     token ranking (a window over the VOCABULARY — bounded by distinct
@@ -962,7 +911,7 @@ def prefix_filter_pairs(
     sets = truncate_lineage(
         docs.select(
             F.col(id_col).alias("doc"),
-            _trigram_shingles(F.col(text_col)).alias("s"),
+            F.array_distinct(ngrams(tokens(text_col), 3)).alias("s"),
         )
     )
     toks = sets.select(
@@ -1460,7 +1409,7 @@ def containment_pairs(
     sets = truncate_lineage(
         docs.select(
             F.col(id_col).alias("doc"),
-            _trigram_shingles(F.col(text_col)).alias("s"),
+            F.array_distinct(ngrams(tokens(text_col), 3)).alias("s"),
         )
     )
     toks = sets.select(
@@ -1575,28 +1524,18 @@ def winnowing_fingerprints(
     of alignment — the property random sampling lacks and full shingle
     sets pay ~w/2× storage for.
 
-    Built O(tokens) per doc: trigram array via zip_with over three
-    shifted slices (the _bigram_shingles lesson — element_at inside
-    transform is O(n²)), ONE posexplode, and a doc-keyed ROWS window for
+    Built O(tokens) per doc: the text kernel's trigram array (see
+    functions.text.ngrams), ONE posexplode, and a doc-keyed ROWS window for
     the min — no self-join, no UDF. Hash = md5 → first 8 hex → long
     (the cross-engine _hash_bucket derivation, pipeline.py:37).
 
     Scale shape: map-side shingle+hash, one shuffle on doc for the
     window, one distinct. Fingerprint count ≈ 2·tokens/(w+1) per doc."""
-    t = _tokens(F.col(text_col))
-    n = F.size(t)
-    kg = F.zip_with(
-        F.zip_with(
-            F.slice(t, 1, n - 2),
-            F.slice(t, 2, n - 2),
-            lambda a, b: F.concat_ws(" ", a, b),
-        ),
-        F.slice(t, 3, n - 2),
-        lambda ab, c: F.concat_ws(" ", ab, c),
-    )
+    t = tokens(text_col)
+    kg = ngrams(t, 3)
     from pyspark.sql import Window
 
-    g = docs.where(n >= 6).select(
+    g = docs.where(F.size(t) >= 6).select(
         F.col(id_col).alias("doc"), F.posexplode(kg).alias("pos0", "kgram")
     )
     h = F.conv(F.substring(F.md5(F.col("kgram")), 1, 8), 16, 10).cast("long")
@@ -1731,7 +1670,8 @@ def bbit_minhash_bits(docs: DataFrame, k: int = BBIT_K) -> DataFrame:
         .select(F.col("id").cast("int").alias("p"))
     )
     sh = docs.select(
-        F.col("doc_id"), F.explode(_bigram_shingles(F.col("text"))).alias("s")
+        F.col("doc_id"),
+        F.explode(F.array_distinct(ngrams(tokens("text"), 2))).alias("s"),
     ).distinct()
     h = F.conv(
         F.substring(
@@ -1769,7 +1709,7 @@ def dedup_bbit_minhash_est(spark, sf_dir):
     )
     bits = bbit_minhash_bits(d)
     sh = d.select(
-        "doc_id", F.array_distinct(_bigram_shingles(F.col("text"))).alias("s")
+        "doc_id", F.array_distinct(ngrams(tokens("text"), 2)).alias("s")
     )
     x = bits.join(sh, "doc_id")
     a = x.select(
@@ -1876,7 +1816,8 @@ def oph_minhash_slots(docs: DataFrame, k: int = OPH_K) -> DataFrame:
     hash/shingle — k× cheaper than bbit_minhash_bits' per-permutation
     digests) → bounded k-spine join. Two skinny shuffles."""
     sh = docs.select(
-        F.col("doc_id"), F.explode(_bigram_shingles(F.col("text"))).alias("s")
+        F.col("doc_id"),
+        F.explode(F.array_distinct(ngrams(tokens("text"), 2))).alias("s"),
     ).distinct()
     h = F.conv(
         F.substring(F.md5(F.concat(F.lit("oph␟"), F.col("s"))), 1, 12),
@@ -1937,7 +1878,7 @@ def dedup_oph_minhash_est(spark, sf_dir):
         )
     )
     sh = d.select(
-        "doc_id", F.array_distinct(_bigram_shingles(F.col("text"))).alias("s")
+        "doc_id", F.array_distinct(ngrams(tokens("text"), 2)).alias("s")
     )
     # structural broadcast: sh is PAIR_BOUND-bounded BY CONSTRUCTION,
     # but Catalyst's pre-AQE estimate scales with the file size and
@@ -2048,12 +1989,7 @@ def weighted_jaccard_pairs(docs: DataFrame, stride: int = WJ_STRIDE) -> DataFram
     toks = (
         docs.select(
             "doc_id",
-            F.explode(
-                F.filter(
-                    F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-                    lambda x: x != "",
-                )
-            ).alias("tok"),
+            F.explode(tokens("text", drop_empty=True)).alias("tok"),
         )
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
@@ -2159,7 +2095,7 @@ def sorted_neighborhood_pairs(
     base = docs.select(
         "doc_id",
         norm.alias("norm"),
-        _bigram_shingles(F.col("text")).alias("s"),
+        F.array_distinct(ngrams(tokens("text"), 2)).alias("s"),
     )
     spark = docs.sparkSession
     nparts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))

@@ -26,10 +26,11 @@ from __future__ import annotations
 
 from collections.abc import Callable, Iterator
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.text import ngrams, tokens
 from ..lineage import truncate_lineage
 from ..sources.registry import load_table
 
@@ -41,15 +42,6 @@ EVAL_STRIDE = 50
 #: ROUGE_CAP² cells regardless of document length (documented
 #: truncation — eval harnesses cap generation length the same way)
 ROUGE_CAP = 200
-
-
-def _ws_toks(col: Column) -> Column:
-    """Lowercased whitespace tokens, empties dropped — the corpus-wide
-    token definition (pipeline.ws_tokens), restated here so this
-    module imports nothing Spark-session-bound at import time."""
-    return F.filter(
-        F.split(F.lower(F.trim(col)), r"\s+"), lambda x: x != ""
-    )
 
 
 def _stride_docs(docs: DataFrame, stride: int):
@@ -82,7 +74,7 @@ def token_f1_pairs(docs: DataFrame, stride: int = EVAL_STRIDE) -> DataFrame:
     )
     per = (
         both.select(
-            "doc_id", F.explode(_ws_toks(F.col("text"))).alias("tok")
+            "doc_id", F.explode(tokens("text", drop_empty=True)).alias("tok")
         )
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
@@ -154,12 +146,12 @@ def bleu2_pairs(docs: DataFrame, stride: int = EVAL_STRIDE) -> DataFrame:
     m1·m2, len·(len−1) stay exact integers; the single float op is
     FLOOR(1e6·√(m1·m2 / (len·(len−1)))) — IEEE-identical cross-engine.
     Same join geometry as token_f1_pairs plus one bigram aggregate
-    (multiplicity-preserving zip_with shingles, NOT array_distinct)."""
+    (multiplicity-preserving ngrams, NOT array_distinct)."""
     ref, hyp = _stride_docs(docs, stride)
     both = ref.select("doc_id", "text").unionByName(
         hyp.select("doc_id", "text")
     )
-    t = _ws_toks(F.col("text"))
+    t = tokens("text", drop_empty=True)
     # r13: the (t1, t2) gram table feeds FOUR consumers (both n-gram
     # count aggregates and the length spine's two sides), and `t`
     # itself is referenced five times in this one select — untruncated,
@@ -169,15 +161,7 @@ def bleu2_pairs(docs: DataFrame, stride: int = EVAL_STRIDE) -> DataFrame:
         both.select(
             "doc_id",
             t.alias("t1"),
-            F.when(
-                F.size(t) < 2, F.array().cast("array<string>")
-            ).otherwise(
-                F.zip_with(
-                    F.slice(t, 1, F.size(t) - 1),
-                    F.slice(t, 2, F.size(t) - 1),
-                    lambda a, b: F.concat_ws(" ", a, b),
-                )
-            ).alias("t2"),
+            ngrams(t, 2).alias("t2"),
         )
     )
     counts = {}
@@ -265,11 +249,11 @@ def rouge_l_pairs(
     ref, hyp = _stride_docs(docs, stride)
     a = ref.select(
         F.col("doc_id").alias("pair"),
-        F.slice(_ws_toks(F.col("text")), 1, cap).alias("ta"),
+        F.slice(tokens("text", drop_empty=True), 1, cap).alias("ta"),
     )
     b = hyp.select(
         (F.col("doc_id") - 1).alias("pair"),
-        F.slice(_ws_toks(F.col("text")), 1, cap).alias("tb"),
+        F.slice(tokens("text", drop_empty=True), 1, cap).alias("tb"),
     )
     joined = a.join(b, "pair")
     schema = T.StructType(
@@ -532,7 +516,7 @@ def ece_bins(docs: DataFrame) -> DataFrame:
     Scale: one expression pass over the corpus into a 10-bin hash
     aggregate (map-combinable); nothing after the aggregate touches
     the corpus."""
-    ntok = F.size(_ws_toks(F.col("text")))
+    ntok = F.size(tokens("text", drop_empty=True))
     nstop = F.size(
         F.expr(
             f"regexp_extract_all(lower(text), '\\\\b{_ECE_STOP}\\\\b', 0)"
@@ -863,7 +847,7 @@ def average_precision(docs: DataFrame) -> DataFrame:
     engines sum identical integers."""
     from .scale import distributed_prefix_sum
 
-    ntok = F.size(_ws_toks(F.col("text")))
+    ntok = F.size(tokens("text", drop_empty=True))
     nstop = F.size(
         F.expr(
             f"regexp_extract_all(lower(text), '\\\\b{_ECE_STOP}\\\\b', 0)"

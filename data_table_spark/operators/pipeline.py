@@ -24,6 +24,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import ngrams, tokens
 from ..sources.registry import load_table
 
 #: bucket space for hash-based splitting/sampling. 1e6 buckets give
@@ -44,20 +45,12 @@ def hash_bucket(key: Column, buckets: int = HASH_BUCKETS) -> Column:
     return F.conv(hex8, 16, 10).cast("bigint") % buckets
 
 
-def ws_tokens(text: Column) -> Column:
-    """THE whitespace token definition every pipe_* token count shares
-    (lowercase, trim, split on \\s+, drop empties) — one definition so
-    a tokenizer tweak cannot silently desynchronize gates; the paired
-    DuckDB rendering is ``list_filter(string_split_regex(lower(trim(t)),
-    '\\s+'), x -> x <> '')``."""
-    return F.filter(
-        F.split(F.lower(F.trim(text)), r"\s+"), lambda x: x != ""
-    )
-
-
 def n_tokens(text: Column) -> Column:
-    """Non-empty whitespace token count (long) over :func:`ws_tokens`."""
-    return F.size(ws_tokens(text)).cast("long")
+    """Non-empty whitespace token count (long) — every pipe_* token
+    count shares it; the paired DuckDB rendering is
+    ``len(list_filter(string_split_regex(lower(trim(t)), '\\s+'),
+    x -> x <> ''))``."""
+    return F.size(tokens(text, drop_empty=True)).cast("long")
 
 
 def _bucket_sql(key_sql: str, buckets: int = HASH_BUCKETS) -> str:
@@ -310,7 +303,7 @@ def chunk_documents(
     if overlap >= chunk_tokens:
         raise ValueError("overlap must be < chunk_tokens")
     stride = chunk_tokens - overlap
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = tokens(text_col, lower=False)
     starts = F.sequence(F.lit(0), F.size(toks) - 1, F.lit(stride))
     exploded = df.select(
         F.col(id_col), toks.alias("_toks"), F.posexplode(starts)
@@ -348,16 +341,13 @@ def contamination_check(
     could be sha2-shortened like dedup_exact if shingles were long; for
     word bigrams the string itself is already short. No O(n²) stage.
     """
-    from .dedup import _bigram_shingles
-
+    shingles = F.explode(F.array_distinct(ngrams(tokens(text_col), 2)))
     train_sh = (
-        train.select(F.explode(_bigram_shingles(F.col(text_col))).alias("s"))
+        train.select(shingles.alias("s"))
         .distinct()
         .withColumn("hit", F.lit(1))
     )
-    eval_sh = eval_.select(
-        F.col(id_col), F.explode(_bigram_shingles(F.col(text_col))).alias("s")
-    )
+    eval_sh = eval_.select(F.col(id_col), shingles.alias("s"))
     joined = eval_sh.join(train_sh, "s", "left")
     n_sh = F.count("*")
     n_hit = F.count("hit")
@@ -840,7 +830,7 @@ def dedup_spans(docs: DataFrame, span_tokens: int = SPAN_TOKENS) -> DataFrame:
 
 def _doc_spans(docs: DataFrame, span_tokens: int) -> DataFrame:
     """(doc_id, span_idx, span_text): non-overlapping token windows."""
-    t = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    t = tokens("text")
     return (
         docs.select("doc_id", t.alias("t"))
         .where(F.size("t") >= span_tokens)
@@ -1576,7 +1566,7 @@ def tokenize_pad(
 
     toks = docs.select(
         "doc_id",
-        F.posexplode(ws_tokens(F.col("text"))).alias("pos", "token"),
+        F.posexplode(tokens("text", drop_empty=True)).alias("pos", "token"),
     )
     top = (
         toks.groupBy("token")
@@ -2516,7 +2506,7 @@ def dedup_quota(
     h = F.md5(
         F.concat_ws(
             " ",
-            F.slice(ws_tokens(F.col("text")), 1, prefix_tokens),
+            F.slice(tokens("text", drop_empty=True), 1, prefix_tokens),
         )
     )
     w = Window.partitionBy("h").orderBy("doc_id")
@@ -2671,7 +2661,7 @@ def gopher_rules(docs: DataFrame) -> DataFrame:
     """Per-source Gopher-rule quality audit: how many documents pass
     the composite filter, and which rule each failure trips — the
     repair-priority readout a corpus curator reads before rerunning a
-    crawl. Four rules, all expression-level over ONE ws_tokens pass
+    crawl. Four rules, all expression-level over ONE tokens pass
     (map-only; whole-stage codegen; no UDF):
 
     - word count in [GOPHER_MIN_WORDS, GOPHER_MAX_WORDS]
@@ -2683,7 +2673,7 @@ def gopher_rules(docs: DataFrame) -> DataFrame:
     Output: per source, n_docs / n_pass plus per-rule failure counts
     (a doc can fail several rules; counts are per rule, not
     partitioned). Exact BIGINTs only."""
-    t = ws_tokens(F.col("text"))
+    t = tokens("text", drop_empty=True)
     n = F.size(t)
     sumlen = F.aggregate(
         t, F.lit(0).cast("long"), lambda acc, w: acc + F.length(w)
@@ -2780,7 +2770,7 @@ def kfold_assign(docs: DataFrame, k: int = KFOLD_K) -> DataFrame:
     zipWithIndex). Output per fold: member count, token mass, and the
     train-side size when that fold is held out (total − fold, via a
     window over the K-row fold table — never a second corpus scan)."""
-    t = ws_tokens(F.col("text"))
+    t = tokens("text", drop_empty=True)
     per_fold = (
         docs.select(
             hash_bucket(
@@ -2866,7 +2856,7 @@ def dp_sums(
 
     Scale shape: clip is a map-side least(); one combinable sum per
     group; one md5 per group."""
-    t = ws_tokens(F.col("text"))
+    t = tokens("text", drop_empty=True)
     clipped = F.least(
         F.size(t).cast("long"), F.lit(DP_SUM_CLIP).cast("long")
     )
@@ -3025,7 +3015,7 @@ def neyman_allocation(docs: DataFrame, budget: int = NEYMAN_BUDGET) -> DataFrame
 
     Scale shape: one map-combinable moment aggregate per stratum, then
     windows over the |strata|-row table."""
-    t = ws_tokens(F.col("text"))
+    t = tokens("text", drop_empty=True)
     m = (
         docs.select("source", F.size(t).cast("long").alias("x"))
         .groupBy("source")
@@ -3104,14 +3094,12 @@ def tokenizer_fertility(docs: DataFrame) -> DataFrame:
     Scale shape: pure map-side counting (two regex passes per doc, no
     explode — size(regexp_extract_all) never materializes the token
     array past the expression), ONE combinable aggregate on source."""
-    low = F.lower(F.trim(F.col("text")))
-    words = F.size(
-        F.filter(F.split(low, r"\s+"), lambda x: x != "")
-    ).cast("long")
-    subs = F.size(F.regexp_extract_all(low, F.lit(SUBTOK_RE), 0)).cast(
-        "long"
-    )
-    chars = F.length(low).cast("long")
+    # per-row counts are ints; the sums below are bigint
+    text = F.col("text")
+    low = F.lower(F.trim(text))
+    words = F.size(tokens(text, drop_empty=True))
+    subs = F.size(F.regexp_extract_all(low, F.lit(SUBTOK_RE), 0))
+    chars = F.length(low)
     g = (
         docs.select(
             "source",
@@ -3182,7 +3170,7 @@ def span_corruption(docs: DataFrame, seed: str = SPANC_SEED) -> DataFrame:
     Scale shape: the explode is n_tokens/SPANC_LEN rows per doc with a
     map-side md5 each; ONE groupBy(doc_id) folds the ledger. No
     windows, no joins."""
-    n = F.size(ws_tokens(F.col("text"))).cast("long")
+    n = F.size(tokens("text", drop_empty=True)).cast("long")
     d = docs.select("doc_id", n.alias("n")).where(F.col("n") > 0)
     spans = d.select(
         "doc_id", "n",
@@ -3465,7 +3453,7 @@ def loss_mask_spans(docs: DataFrame) -> DataFrame:
     Positions are assigned BEFORE empty-segment filtering (posexplode
     over the raw split), so a double terminator cannot shift the
     role parity of later turns. All column expressions — split,
-    posexplode, token counts via the shared :func:`ws_tokens` — stay
+    posexplode, token counts via the shared :func:`n_tokens` — stay
     JVM-side; one partial-aggregable groupBy(doc_id), no Python."""
     segs = docs.select(
         "doc_id",

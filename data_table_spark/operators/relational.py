@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.cleaning import relaxed_double, trim_and_nullify
+from ..functions.text import tokens
 from ..lineage import truncate_lineage
 from ..sources.registry import load_table, local_df, sql_gate
 
@@ -10132,8 +10133,8 @@ def q196_streak_islands(spark, sf_dir):
 
     Technique: ONE hash aggregate — ``sort_array(collect_set(day))``
     per user — then pure array algebra: consecutive-day gaps via
-    zip_with over shifted slices (the _bigram_shingles discipline, no
-    per-index element_at), longest run via one aggregate() fold,
+    zip_with over shifted slices (the functions.text.ngrams discipline,
+    no per-index element_at), longest run via one aggregate() fold,
     streak count = 1 + gaps≠1. The textbook day−row_number anchor
     trick would be a second exchange plus a per-user window sort
     (measured plan: distinct shuffles on (user, day), window
@@ -10376,12 +10377,7 @@ def q199_cohens_kappa(spark, sf_dir):
     scales with the corpus scan and plans a sort-merge join for 3
     rows, caught by the 100x audit)."""
     d = load_table(spark, "documents", sf_dir)
-    ntok = F.size(
-        F.filter(
-            F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-            lambda x: x != "",
-        )
-    )
+    ntok = F.size(tokens("text", drop_empty=True))
     ca = (
         F.when(F.col("n_chars") < 200, 0)
         .when(F.col("n_chars") < 400, 1)

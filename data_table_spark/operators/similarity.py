@@ -1147,8 +1147,8 @@ def sim_quantized_covariance(spark, sf_dir):
     sums money in e4 integers).
 
     Each row map-side expands to its dim·(dim+1)/2 (i, j≤i) products
-    (nested transform over a sliced prefix — the zip_with lesson from
-    _bigram_shingles: no per-index element_at) and ONE partial-
+    (nested transform over a sliced prefix — the lesson of
+    functions.text.ngrams: no per-index element_at) and ONE partial-
     aggregable groupBy(i, j) sums products and marginals. The dim²×
     expansion is the documented cost (64d ⇒ 2080 pairs/row); past
     ~1k dims you'd switch to Arrow-batched BLAS syrk per partition +

@@ -18,6 +18,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import ngrams, sentences, tokens
 from ..lineage import truncate_lineage
 from ..sources.registry import load_table, local_df
 
@@ -50,16 +51,21 @@ def text_token_stats(spark, sf_dir):
     """Whitespace tokens, BPE-ish tokens, chars, and mean token length."""
     d = load_table(spark, "documents", sf_dir)
     t = F.col("text")
-    ws_tokens = F.size(F.split(F.trim(t), r"\s+"))
+    n_words = F.size(tokens(t, lower=False))
     bpe_tokens = _count_re(t, BPE_RE)
     chars = F.length(t)
     return d.select(
         "doc_id",
-        ws_tokens.cast("long").alias("n_tokens"),
+        n_words.cast("long").alias("n_tokens"),
         bpe_tokens.cast("long").alias("n_bpe_tokens"),
         chars.cast("long").alias("n_chars_m"),
-        F.round(chars.cast("double") / ws_tokens, 4).alias("chars_per_token"),
+        F.round(chars.cast("double") / n_words, 4).alias("chars_per_token"),
     )
+
+
+def _word_pair(a: Column, b: Column) -> Column:
+    """``ngrams`` combiner for bigrams kept as ``(w1, w2)`` structs."""
+    return F.struct(a.alias("w1"), b.alias("w2"))
 
 
 def _trunc4(c: Column) -> Column:
@@ -76,7 +82,7 @@ def quality_parts(t: Column) -> tuple[Column, Column, Column, Column]:
     and quality-weighted sampling (operators/pipeline.py). Every ratio is
     floor-truncated to 4 decimals (see _trunc4) so both engines agree."""
     n_chars = F.length(t)
-    n_tokens = F.size(F.split(F.trim(t), r"\s+"))
+    n_tokens = F.size(tokens(t, lower=False))
     n_punct = _count_re(t, r"[^\sA-Za-z0-9]")
     n_stop = _word_count(t, STOPWORDS)
     punct_ratio = _trunc4(n_punct.cast("double") / n_chars)
@@ -266,25 +272,6 @@ TEXTSTATS_ORACLE["text_scrub"] = (
 # repetition detection (Gopher-style quality rule)
 # --------------------------------------------------------------------------
 
-def _word_trigrams(col: Column) -> Column:
-    """Word trigram list (WITH duplicates — counts matter here), built
-    from three shifted slices (zip_with composition, never per-index
-    element_at inside a lambda — see PERF_NOTES expression traps)."""
-    t = F.split(F.lower(F.trim(col)), r"\s+")
-    n = F.size(t)
-    return F.when(n < 3, F.array().cast("array<string>")).otherwise(
-        F.zip_with(
-            F.slice(t, 1, n - 2),
-            F.zip_with(
-                F.slice(t, 2, n - 2),
-                F.slice(t, 3, n - 2),
-                lambda b, c: F.concat_ws(" ", b, c),
-            ),
-            lambda a, bc: F.concat_ws(" ", a, bc),
-        )
-    )
-
-
 def text_repetition(spark, sf_dir):
     """Repeated-trigram quality signals per document — the "fraction of
     text inside the most common n-gram" family of corpus filters that
@@ -299,7 +286,7 @@ def text_repetition(spark, sf_dir):
     Documents with fewer than 3 tokens have no trigrams and are omitted
     (matching the oracle's WHERE len >= 3)."""
     d = load_table(spark, "documents", sf_dir)
-    tri = _word_trigrams(F.col("text"))
+    tri = ngrams(tokens("text"), 3)
     sorted_tri = F.array_sort(tri)
     # r13: ONE fold yields best-run, distinct and total together. The
     # old form referenced `tri` three times (the fold, size(tri),
@@ -341,7 +328,7 @@ def text_repetition(spark, sf_dir):
     # a second full build+sort+fold per row (plan-verified); a doc has
     # trigrams iff it has >= 3 tokens, so this predicate is identical
     # and costs one split per row.
-    has_tri = F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+")) >= 3
+    has_tri = F.size(tokens("text")) >= 3
     return (
         d.where(has_tri)
         .select("doc_id", stats.alias("st"))
@@ -411,7 +398,7 @@ def text_tfidf_top_terms(spark, sf_dir, k: int = TFIDF_TOP_K):
     d = load_table(spark, "documents", sf_dir)
     tok = d.select(
         "doc_id",
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("term"),
+        F.explode(tokens("text")).alias("term"),
     ).where(F.col("term") != "")
     tf = tok.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     df_ = tf.groupBy("term").agg(F.count("*").alias("df"))
@@ -488,7 +475,7 @@ def corpus_vocab(docs: DataFrame, vocab_size: int = VOCAB_SIZE) -> DataFrame:
     from pyspark.sql import Window
 
     tok = docs.select(
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("term"),
+        F.explode(tokens("text")).alias("term"),
         F.col("doc_id"),
     ).where(F.col("term") != "")
     counts = tok.groupBy("term").agg(
@@ -520,7 +507,7 @@ def oov_rate(docs: DataFrame, vocab_size: int = VOCAB_SIZE) -> DataFrame:
     vocab = corpus_vocab(docs, vocab_size).select("term")
     tok = docs.select(
         "doc_id",
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("term"),
+        F.explode(tokens("text")).alias("term"),
     ).where(F.col("term") != "")
     flagged = tok.join(
         F.broadcast(vocab.withColumn("in_vocab", F.lit(1))), "term", "left"
@@ -597,7 +584,7 @@ def unigram_lm_score(docs: DataFrame) -> DataFrame:
     The model is vocabulary-sized, never corpus-sized."""
     tok = docs.select(
         "doc_id",
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("term"),
+        F.explode(tokens("text")).alias("term"),
     ).where(F.col("term") != "")
     counts = tok.groupBy("term").agg(F.count("*").alias("cnt"))
     total = counts.agg(F.sum("cnt").alias("total"))
@@ -665,7 +652,7 @@ def build_postings(docs: DataFrame) -> DataFrame:
     Write it out partitioned/bucketed by term and every phrase/boolean
     query becomes joins on the term key; this is the IR layout every
     search engine shards by."""
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = tokens("text")
     return docs.select(
         "doc_id", F.posexplode(toks).alias("pos", "term")
     )
@@ -748,9 +735,7 @@ def hapax_ratio(docs: DataFrame) -> DataFrame:
     integer pair with one rounded division."""
     tok = docs.select(
         "source",
-        F.explode(
-            F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-        ).alias("term"),
+        F.explode(tokens("text")).alias("term"),
     ).where(F.col("term") != "")
     df_counts = tok.groupBy("source", "term").agg(
         F.count(F.lit(1)).alias("tf")
@@ -805,9 +790,7 @@ def zipf_fit(docs: DataFrame, top_n: int = 100) -> DataFrame:
 
     vocab = (
         docs.select(
-            F.explode(
-                F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-            ).alias("term")
+            F.explode(tokens("text")).alias("term")
         )
         .where(F.col("term") != "")
         .groupBy("term")
@@ -913,22 +896,13 @@ def bigram_lm_score(docs: DataFrame) -> DataFrame:
     key."""
     toks = docs.select(
         "doc_id",
-        F.filter(
-            F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-            lambda x: x != "",
-        ).alias("l"),
+        tokens("text", drop_empty=True).alias("l"),
     )
     bg = (
         toks.where(F.size("l") >= 2)
         .select(
             "doc_id",
-            F.explode(
-                F.zip_with(
-                    F.slice(F.col("l"), 1, F.size("l") - 1),
-                    F.slice(F.col("l"), 2, F.size("l") - 1),
-                    lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-                )
-            ).alias("p"),
+            F.explode(ngrams(F.col("l"), 2, _word_pair)).alias("p"),
         )
         .select("doc_id", "p.w1", "p.w2")
     )
@@ -1021,22 +995,13 @@ def ngram_novelty(docs: DataFrame) -> DataFrame:
     corpus."""
     toks = docs.select(
         "doc_id",
-        F.filter(
-            F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-            lambda x: x != "",
-        ).alias("l"),
+        tokens("text", drop_empty=True).alias("l"),
     )
     bgd = (
         toks.where(F.size("l") >= 2)
         .select(
             "doc_id",
-            F.explode(
-                F.zip_with(
-                    F.slice(F.col("l"), 1, F.size("l") - 1),
-                    F.slice(F.col("l"), 2, F.size("l") - 1),
-                    lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-                )
-            ).alias("p"),
+            F.explode(ngrams(F.col("l"), 2, _word_pair)).alias("p"),
         )
         .select("doc_id", "p.w1", "p.w2")
         .distinct()
@@ -1190,21 +1155,12 @@ def pmi_bigrams(docs: DataFrame, min_count: int = 5) -> DataFrame:
     scale and correctly shuffle at open-web vocab. Nothing in the plan
     touches the corpus twice."""
     toks = docs.select(
-        F.filter(
-            F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-            lambda x: x != "",
-        ).alias("l"),
+        tokens("text", drop_empty=True).alias("l"),
     )
     bg = (
         toks.where(F.size("l") >= 2)
         .select(
-            F.explode(
-                F.zip_with(
-                    F.slice(F.col("l"), 1, F.size("l") - 1),
-                    F.slice(F.col("l"), 2, F.size("l") - 1),
-                    lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-                )
-            ).alias("p"),
+            F.explode(ngrams(F.col("l"), 2, _word_pair)).alias("p"),
         )
         .select("p.w1", "p.w2")
     )
@@ -1279,28 +1235,21 @@ def sentence_stats(docs: DataFrame) -> DataFrame:
     terminator count as ONE sentence (the whole text).
 
     Scale shape: map-only."""
-    segs = F.filter(
-        F.transform(
-            F.split(F.col("text"), r"[.!?]+"),
-            lambda s: F.trim(s),
-        ),
-        lambda s: s != "",
-    )
-    words_per = F.transform(
-        segs, lambda s: F.size(F.split(s, r"\s+"))
-    )
+    segs = sentences("text")
+    words_per = F.transform(segs, lambda s: F.size(tokens(s, lower=False)))
     n_sent = F.size(segs)
     n_words = F.aggregate(
         words_per, F.lit(0), lambda acc, v: acc + v
     )
+    has_sent = n_sent > 0
     return docs.select(
         "doc_id",
         n_sent.cast("long").alias("n_sentences"),
         n_words.cast("long").alias("n_seg_words"),
-        F.when(n_sent > 0, _trunc4(n_words.cast("double") / n_sent))
+        F.when(has_sent, _trunc4(n_words.cast("double") / n_sent))
         .otherwise(None).alias("words_per_sentence"),
         F.when(
-            n_sent > 0, F.array_max(words_per).cast("long")
+            has_sent, F.array_max(words_per).cast("long")
         ).otherwise(None).alias("max_sentence_words"),
     )
 
@@ -1355,10 +1304,7 @@ def boilerplate_prefixes(docs: DataFrame, n_tokens: int = 3) -> DataFrame:
     prefixes per source)."""
     from pyspark.sql import Window
 
-    toks = F.filter(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-        lambda x: x != "",
-    )
+    toks = tokens("text", drop_empty=True)
     prefix = F.concat_ws(" ", F.slice(toks, 1, n_tokens))
     counts = (
         docs.select("source", prefix.alias("prefix"))
@@ -1554,12 +1500,7 @@ def vocab_coverage(docs: DataFrame, sizes=(5, 10, 20)) -> DataFrame:
     from pyspark.sql import Window
 
     toks = docs.select(
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-                lambda x: x != "",
-            )
-        ).alias("w")
+        F.explode(tokens("text", drop_empty=True)).alias("w")
     )
     counts = toks.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     w_rank = Window.orderBy(F.col("c").desc(), F.col("w").asc())
@@ -1657,12 +1598,7 @@ def bm25_topk(
 
     toks = docs.select(
         "doc_id",
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-                lambda x: x != "",
-            )
-        ).alias("w"),
+        F.explode(tokens("text", drop_empty=True)).alias("w"),
     )
     dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     corpus = dl.agg(
@@ -1771,13 +1707,8 @@ def readability_by_source(docs: DataFrame) -> DataFrame:
     Scale shape: map-side per-doc counting (pure expressions, no UDF)
     into ONE map-combinable aggregate — one shuffle to ≤|sources|
     rows."""
-    segs = F.filter(
-        F.transform(F.split(F.col("text"), r"[.!?]+"), lambda s: F.trim(s)),
-        lambda s: s != "",
-    )
-    words = F.filter(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+"), lambda x: x != ""
-    )
+    segs = sentences("text")
+    words = tokens("text", drop_empty=True)
     syl = F.size(F.regexp_extract_all(F.lower(F.col("text")), F.lit("[aeiouy]+"), 0))
     g = (
         docs.select(
@@ -1862,12 +1793,7 @@ def js_divergence_sources(docs: DataFrame) -> DataFrame:
     |pairs| rows. The corpus is scanned once."""
     toks = docs.select(
         "source",
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-                lambda x: x != "",
-            )
-        ).alias("w"),
+        F.explode(tokens("text", drop_empty=True)).alias("w"),
     )
     cnt = toks.groupBy("source", "w").agg(
         F.count(F.lit(1)).cast("long").alias("c")
@@ -2010,22 +1936,10 @@ def heaps_curve(docs: DataFrame) -> DataFrame:
     first), windows over the checkpoint table only."""
     from pyspark.sql import Window
 
-    t = F.filter(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-        lambda x: x != "",
-    )
+    t = tokens("text", drop_empty=True)
     n = F.size(t)
-    kg = F.zip_with(
-        F.zip_with(
-            F.slice(t, 1, n - 2),
-            F.slice(t, 2, n - 2),
-            lambda a, b: F.concat_ws(" ", a, b),
-        ),
-        F.slice(t, 3, n - 2),
-        lambda ab, c_: F.concat_ws(" ", ab, c_),
-    )
     toks = docs.where(n >= 3).select(
-        "doc_id", F.explode(kg).alias("w")
+        "doc_id", F.explode(ngrams(t, 3)).alias("w")
     )
     firsts = toks.groupBy("w").agg(
         F.min("doc_id").alias("first_doc"),
@@ -2049,7 +1963,7 @@ def heaps_curve(docs: DataFrame) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("vocab"))
     )
     # NOT named `t`: that name is the token-array Column above, still
-    # live inside kg/doc_tok closures (round-10 ADVICE — rebinding it
+    # live inside the doc_tok closure (round-10 ADVICE — rebinding it
     # to a DataFrame mid-function was reorder-fragile)
     tok_totals = (
         doc_tok.join(spine, F.col("doc_id") < F.col("c"))
@@ -2149,36 +2063,18 @@ def dup_ngram_stats(docs: DataFrame) -> DataFrame:
     Scale shape: the vocabulary aggregate is the same two-shuffle
     skinny-key plan the novelty/PMI family runs; the hottest n-gram
     is one vocabulary cell — no window, no driver state."""
-    t = F.filter(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-        lambda x: x != "",
-    )
-    n = F.size(t)
-    # 5-gram windows as a zip_with CHAIN over five shifted slices (the
-    # heaps_curve trigram idiom) — each slice references the token
-    # expression ONCE per row. The first cut built grams with
-    # transform(sequence, i -> concat_ws(element_at(t, i+k)...)), which
-    # inlines the full tokenization into every element_at inside the
-    # lambda: O(5·n) tokenizations of an n-token doc = quadratic per
-    # doc (measured: 28 s at sf0.01 → sub-second after this rewrite).
+    t = tokens("text", drop_empty=True)
     # Round-13 (guide §5): two materializations. (1) the token-array
-    # table — the 5 shifted slices each inline the tokenize expression,
-    # so building grams from a STORED array tokenizes once per doc
-    # instead of five times; (2) the exploded instance stream — it
-    # feeds BOTH the vocabulary aggregate and the join-back, which
+    # table — the 5 shifted slices of ngrams each inline the tokenize
+    # expression, so building grams from a STORED array tokenizes once
+    # per doc instead of five times; (2) the exploded instance stream —
+    # it feeds BOTH the vocabulary aggregate and the join-back, which
     # otherwise re-run the whole gram build.
     tk = truncate_lineage(
-        docs.where(n >= DUP_NGRAM_N).select("doc_id", "source", t.alias("t"))
+        docs.where(F.size(t) >= DUP_NGRAM_N)
+        .select("doc_id", "source", t.alias("t"))
     )
-    ts = F.col("t")
-    m = F.size(ts) - (DUP_NGRAM_N - 1)
-    grams = F.slice(ts, 1, m)
-    for k in range(1, DUP_NGRAM_N):
-        grams = F.zip_with(
-            grams,
-            F.slice(ts, 1 + k, m),
-            lambda a, b: F.concat_ws(" ", a, b),
-        )
+    grams = ngrams(F.col("t"), DUP_NGRAM_N)
     inst = truncate_lineage(
         tk.select("doc_id", "source", F.explode(grams).alias("g"))
     )
@@ -2186,18 +2082,15 @@ def dup_ngram_stats(docs: DataFrame) -> DataFrame:
         F.countDistinct("doc_id").alias("nd")
     )
     j = inst.join(gram_docs, "g")
+    # count, sum of ints and div of longs are all bigint already
     agg = j.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_ngrams"),
-        F.sum(F.when(F.col("nd") > 1, 1).otherwise(0))
-        .cast("long")
-        .alias("n_dup_instances"),
+        F.count(F.lit(1)).alias("n_ngrams"),
+        F.sum(F.when(F.col("nd") > 1, 1).otherwise(0)).alias("n_dup_instances"),
     )
     return agg.select(
         "source", "n_ngrams", "n_dup_instances",
         # exact floor: both operands long, quotient non-negative
-        F.expr("(1000000 * n_dup_instances) div n_ngrams")
-        .cast("long")
-        .alias("dup_rate_e6"),
+        F.expr("(1000000 * n_dup_instances) div n_ngrams").alias("dup_rate_e6"),
     )
 
 
@@ -2261,12 +2154,7 @@ def rake_keywords(docs: DataFrame) -> DataFrame:
 
     toks = docs.select(
         "doc_id",
-        F.posexplode(
-            F.filter(
-                F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-                lambda x: x != "",
-            )
-        ).alias("pos", "w"),
+        F.posexplode(tokens("text", drop_empty=True)).alias("pos", "w"),
     )
     nonstop = toks.where(~F.col("w").isin(*STOPWORDS))
     wnd = Window.partitionBy("doc_id").orderBy("pos")

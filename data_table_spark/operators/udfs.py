@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from ..functions.text import tokens
 from ..sources.registry import load_table, sql_gate
 
 
@@ -112,7 +113,7 @@ def udf_table_function_tokens(spark, sf_dir):
     """Table-function surface: posexplode of the token array (1 row in →
     N rows out). Bounded to doc_id < 50 to keep the gate result small."""
     d = load_table(spark, "documents", sf_dir).where(F.col("doc_id") < 50)
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = tokens("text", lower=False)
     return (
         d.select("doc_id", F.posexplode(toks).alias("pos", "token"))
         .select("doc_id", (F.col("pos") + 1).cast("long").alias("pos"), "token")

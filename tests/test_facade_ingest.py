@@ -128,6 +128,28 @@ def test_driver_bound_reads_over_a_literal_run_no_job(spark):
     assert t.render("csv").splitlines() == ["a,b", "1,x", "2,y", "3,z"]
 
 
+def test_explicit_types_run_no_guess(spark, monkeypatch):
+    """With an explicit type for every string column there is nothing to
+    guess: ``ensure_column_types`` must not build the guess job."""
+    import data_table_spark.inference as inference
+
+    calls = []
+
+    def spy(*args, **kwargs):
+        calls.append(args[1])
+        return _guess_with_counters(*args, **kwargs)
+
+    monkeypatch.setattr(inference, "_guess_with_counters", spy)
+    df = spark.createDataFrame([("1", "2.5")], "a string, b string")
+    types = inference.ensure_column_types(df, {"a": "bigint", "b": "double"})
+    assert {c: t.simpleString() for c, t in types.items()} == {
+        "a": "bigint", "b": "double",
+    }
+    assert calls == []
+    inference.ensure_column_types(df, {"a": "bigint"})
+    assert calls == [["b"]]
+
+
 def test_dotted_and_spaced_names_through_ingest(spark):
     t = DataTable.from_rows(spark, [["1", "2.5"], ["2", " 3 "]], ["x.y", "a b"])
     out = t.coerce_types()
@@ -136,6 +158,16 @@ def test_dotted_and_spaced_names_through_ingest(spark):
     ]
     assert out.to_records() == [{"x.y": 1, "a b": 2.5}, {"x.y": 2, "a b": 3.0}]
     assert out.value(col="x.y") == [1, 2]
+    assert out.value(1, "x.y") == 2
+    assert out.value(1) == [2, 3.0]
+    edited = out.set_value(7, 0, "x.y").set_value("z", 1, "a b")
+    assert edited.to_records() == [
+        {"x.y": 7, "a b": "2.5"}, {"x.y": 2, "a b": "z"},
+    ]
+    assert edited.set_value([5, 6], col="x.y").value(col="x.y") == [5, 6]
+    assert edited.format_for_output().to_records() == [
+        {"x.y": "7", "a b": "2.5"}, {"x.y": "2", "a b": "z"},
+    ]
     # rows that reach the driver out of order come back in row order
     shuffled = spark.range(40).selectExpr(
         "39 - id AS _row_id", "CAST(id AS STRING) AS `x.y`"

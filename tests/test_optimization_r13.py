@@ -201,14 +201,12 @@ def test_text_repetition_matches_distinct_size_form(spark, sf_smoke):
     n_trigrams > 0 filter) row for row: run starts in a sorted array
     count exactly its distinct elements, and a doc has trigrams iff it
     has >= 3 tokens."""
-    from data_table_spark.operators.textstats import (
-        _word_trigrams,
-        text_repetition,
-    )
+    from data_table_spark.functions.text import ngrams, tokens
+    from data_table_spark.operators.textstats import text_repetition
     from data_table_spark.sources.registry import load_table
 
     d = load_table(spark, "documents", sf_smoke)
-    tri = _word_trigrams(F.col("text"))
+    tri = ngrams(tokens("text"), 3)
     sorted_tri = F.array_sort(tri)
     run = F.aggregate(
         sorted_tri,
@@ -374,19 +372,18 @@ def test_q162_matches_full_neighborhood_form(spark, sf_dir):
 def test_jaccard_inclusion_exclusion(spark, sf_dir):
     """_jaccard's union-by-inclusion-exclusion must equal the literal
     array_union form on real shingle pairs — exact for DISTINCT arrays
-    (every caller passes _bigram_shingles output), and the division is
+    (every caller passes distinct bigram shingles), and the division is
     the identical integer pair, so the rounded jaccard is byte-equal."""
-    from data_table_spark.operators.dedup import (
-        PAIR_BOUND,
-        _bigram_shingles,
-        _jaccard,
-    )
+    from data_table_spark.functions.text import ngrams, tokens
+    from data_table_spark.operators.dedup import PAIR_BOUND, _jaccard
     from data_table_spark.sources.registry import load_table
 
     d = load_table(spark, "documents", sf_dir).where(
         F.col("doc_id") < PAIR_BOUND
     )
-    sh = d.select("doc_id", _bigram_shingles(F.col("text")).alias("s"))
+    sh = d.select(
+        "doc_id", F.array_distinct(ngrams(tokens("text"), 2)).alias("s")
+    )
     a = sh.select(F.col("doc_id").alias("a"), F.col("s").alias("sa"))
     b = sh.select(F.col("doc_id").alias("b"), F.col("s").alias("sb"))
     pairs = a.join(b, F.col("a") < F.col("b"))

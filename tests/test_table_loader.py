@@ -72,6 +72,18 @@ def test_no_parallelize_outside_registry():
     assert not stray, f"literal RDDs bypassing local_df: {stray}"
 
 
+def test_no_whitespace_split_outside_text_kernel():
+    """``functions.text.tokens`` is the one whitespace tokenizer: no
+    other module splits on ``\\s+`` itself."""
+    stray = [
+        f"{rel}:{no}"
+        for rel, no, line in _package_lines()
+        if rel != os.path.join("functions", "text.py")
+        and ('r"\\s+")' in line or ("F.split(" in line and "\\s+" in line))
+    ]
+    assert not stray, f"whitespace splits bypassing tokens: {stray}"
+
+
 def _calls_load_table(node) -> bool:
     return any(
         isinstance(n, ast.Call)
