@@ -24,6 +24,7 @@ from data_table_spark.functions.cleaning import (
     trim_and_nullify_sql,
 )
 from data_table_spark.functions.sql_functions import register_reference_functions
+from data_table_spark import inference
 from data_table_spark.inference import _guess_with_counters
 
 NB = "\xa0"
@@ -131,8 +132,6 @@ def test_driver_bound_reads_over_a_literal_run_no_job(spark):
 def test_explicit_types_run_no_guess(spark, monkeypatch):
     """With an explicit type for every string column there is nothing to
     guess: ``ensure_column_types`` must not build the guess job."""
-    import data_table_spark.inference as inference
-
     calls = []
 
     def spy(*args, **kwargs):
