@@ -12,7 +12,7 @@ All pure Column expressions — codegen-friendly, no UDFs.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -36,14 +36,3 @@ def format_value(col: Column, dtype: T.DataType, delimiter: str = LIST_DELIMITER
     else:
         formatted = col.cast("string")
     return F.coalesce(formatted, F.lit(""))
-
-
-def format_table_for_output(df: DataFrame, delimiter: str = LIST_DELIMITER) -> DataFrame:
-    """Map format_value over every column (coerce-data-table-values-for-output,
-    data-table.lisp:456-469) — returns an all-string DataFrame."""
-    return df.select(
-        *[
-            format_value(F.col(f.name), f.dataType, delimiter).alias(f.name)
-            for f in df.schema.fields
-        ]
-    )

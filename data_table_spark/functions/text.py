@@ -1,7 +1,8 @@
-"""The one text kernel: whitespace tokens, word n-grams and sentences.
+"""The one text kernel: whitespace tokens, word n-grams, sentences and
+whitespace normalization.
 
-Every operator that counts words, builds shingles or segments sentences
-goes through these three functions, so a tokenizer change reaches every
+Every operator that counts words, builds shingles, segments sentences
+or collapses whitespace goes through these four functions, so a tokenizer change reaches every
 gate at once. All are pure Column expressions (whole-stage codegen, no
 UDF) with no session state.
 
@@ -37,6 +38,14 @@ def tokens(
     t = F.trim(F.col(text) if isinstance(text, str) else text)
     toks = F.split(F.lower(t) if lower else t, _WS)
     return F.filter(toks, lambda x: x != "") if drop_empty else toks
+
+
+def normalize_ws(text: Column | str, *, lower: bool = True) -> Column:
+    """``text`` with every whitespace run collapsed to one space and the
+    ends trimmed, lowercased first unless ``lower=False``: the key that
+    exact and near-duplicate detection compare."""
+    c = F.col(text) if isinstance(text, str) else text
+    return F.trim(F.regexp_replace(F.lower(c) if lower else c, _WS, " "))
 
 
 def ngrams(

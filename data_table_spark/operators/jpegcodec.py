@@ -6,7 +6,7 @@ import guard with no golden anywhere it can run, this module implements
 ITU-T T.81 baseline sequential DCT from the public spec — exactly like
 the vendored netpbm/WAV/Y4M/PNG decoders (multimodal.py) — so
 ``decode_media(fake=False)`` handles ``FF D8`` blobs codec-free and the
-round-trip golden tests in tests/test_multimodal.py actually execute in
+round-trip golden tests in tests/test_sources_sinks.py actually execute in
 this container.
 
 Scope (asserted, fail-loud on anything else):

@@ -24,7 +24,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import ngrams, tokens
+from ..functions.text import ngrams, normalize_ws, tokens
 from ..sources.registry import load_table
 
 #: bucket space for hash-based splitting/sampling. 1e6 buckets give
@@ -477,7 +477,7 @@ def filter_corpus(spark, sf_dir) -> DataFrame:
     q = text_quality(spark, sf_dir).select("doc_id", "quality_score", "n_tokens")
     lang = text_langid(spark, sf_dir).select("doc_id", "pred_lang")
     d = load_table(spark, "documents", sf_dir)
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
+    norm = normalize_ws("text")
     survivors = (
         d.select("doc_id", F.sha2(norm, 256).alias("h"))
         .groupBy("h")
@@ -2850,7 +2850,7 @@ def dp_sums(
     floors log-based noise at +0.5, and F.log vs DuckDB LN are both
     libm (not correctly rounded): portability therefore REQUIRES every
     per-group noise value to sit away from a floor boundary, which
-    tests/test_round11_ops.py::test_dp_sum_noise_exact_and_bounded
+    tests/test_pipeline.py::test_dp_sum_noise_exact_and_bounded
     asserts at fixture time (>1e-6 from any integer; reseed
     DP_SUM_SEED if a fixture change ever trips it).
 

@@ -18,7 +18,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import ngrams, sentences, tokens
+from ..functions.text import ngrams, normalize_ws, sentences, tokens
 from ..lineage import truncate_lineage
 from ..sources.registry import load_table, local_df
 
@@ -145,7 +145,7 @@ def text_fingerprint(spark, sf_dir):
     """MD5 fingerprint of normalized text (lowercase, collapsed
     whitespace) — standard MD5, so engines agree byte-for-byte."""
     d = load_table(spark, "documents", sf_dir)
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
+    norm = normalize_ws("text")
     return d.select("doc_id", F.md5(norm).alias("fingerprint"))
 
 
@@ -238,7 +238,7 @@ def scrub_text(col: Column) -> Column:
     map-side, codegen, identical regex dialect in DuckDB (oracle)."""
     c = F.regexp_replace(col, URL_RE, "<URL>")
     c = F.regexp_replace(c, EMAIL_RE, "<EMAIL>")
-    return F.trim(F.regexp_replace(c, r"\s+", " "))
+    return normalize_ws(c, lower=False)
 
 
 def text_scrub(spark, sf_dir):

@@ -35,14 +35,6 @@ def get_spark(
     - Arrow on: every pandas_udf / toPandas crossing is Arrow-batched.
     - UTC session timezone: deterministic timestamp semantics across
       executors in different zones.
-    - ``SPARK_GRAFT_ROCKSDB_STATE=1`` switches Structured Streaming's
-      state store to the RocksDB provider: the default HDFS-backed store
-      keeps every key's state ON-HEAP per executor, which is the thing
-      that falls over first when a 100 TB stream's dedup/session state
-      outgrows executor memory; RocksDB spills to local disk with
-      bounded memory (and unlocks changelog checkpointing). Off by
-      default locally only because tiny test streams don't need the
-      native-lib startup cost — the cluster profile should set it.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -72,12 +64,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    if os.environ.get("SPARK_GRAFT_ROCKSDB_STATE") == "1":
-        builder = builder.config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -8,6 +8,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from data_table_spark.session import get_spark  # noqa: E402
+from tests.oracle_util import duck_connection  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.01")
@@ -27,3 +28,10 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def sf_smoke():
     return SF_SMOKE
+
+
+@pytest.fixture(scope="session")
+def duck(sf_dir):
+    con = duck_connection(sf_dir)
+    yield con
+    con.close()

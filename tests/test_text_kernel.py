@@ -1,5 +1,5 @@
 """``functions.text`` is the one definition of whitespace tokens, word
-n-grams and sentences. Each function must give exactly what the inline
+n-grams, sentences and whitespace normalization. Each function must give exactly what the inline
 expressions it replaced gave; those expressions are restated here as
 the reference."""
 
@@ -14,7 +14,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from data_table_spark.functions.text import ngrams, sentences, tokens  # noqa: E402
+from data_table_spark.functions.text import (  # noqa: E402
+    ngrams,
+    normalize_ws,
+    sentences,
+    tokens,
+)
 
 TEXTS = [
     "",
@@ -78,6 +83,10 @@ def _old_5grams(t):
     )
 
 
+def _old_normalize_ws(c):
+    return F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
+
+
 def _old_sentences(c):
     return F.filter(
         F.transform(F.split(c, r"[.!?]+"), lambda s: F.trim(s)),
@@ -124,6 +133,17 @@ def test_tokens_keep_nbsp_and_empty_token(texts):
     assert got["   "] == ([""], [])
     assert got["\u00a0nbsp\u00a0 word\u00a0"][0] == ["\u00a0nbsp\u00a0", "word\u00a0"]
     assert got[None] == (None, None)
+
+
+def test_normalize_ws(texts):
+    c = F.col("text")
+    _same(texts, normalize_ws(c), _old_normalize_ws(c))
+    _same(texts, normalize_ws("text"), _old_normalize_ws(c))
+    _same(
+        texts,
+        normalize_ws(c, lower=False),
+        F.trim(F.regexp_replace(c, r"\s+", " ")),
+    )
 
 
 def test_ngrams(texts):
