@@ -2,9 +2,9 @@
 whitespace normalization.
 
 Every operator that counts words, builds shingles, segments sentences
-or collapses whitespace goes through these four functions, so a tokenizer change reaches every
-gate at once. All are pure Column expressions (whole-stage codegen, no
-UDF) with no session state.
+or collapses whitespace goes through these four functions, so a
+tokenizer change reaches every gate at once. All are pure Column
+expressions (whole-stage codegen, no UDF) with no session state.
 
 ``tokens`` trims with ``F.trim``, which strips spaces only, not the NBSP
 that ``cleaning.trim_whitespace`` also strips: the oracles render the
@@ -43,7 +43,8 @@ def tokens(
 def normalize_ws(text: Column | str, *, lower: bool = True) -> Column:
     """``text`` with every whitespace run collapsed to one space and the
     ends trimmed, lowercased first unless ``lower=False``: the key that
-    exact and near-duplicate detection compare."""
+    exact and near-duplicate detection compare, and the last step of
+    text scrubbing (``lower=False``)."""
     c = F.col(text) if isinstance(text, str) else text
     return F.trim(F.regexp_replace(F.lower(c) if lower else c, _WS, " "))
 
