@@ -1,7 +1,8 @@
-"""Every gate the driver grades matches its DuckDB oracle at sf0.01.
+"""Every gate in ``__spark_entry__.oracle_sql()`` matches its DuckDB
+oracle at sf0.01.
 
-Parametrized over ``__spark_entry__.oracle_sql()`` itself, so a gate
-added to any family is compared here without a per-family list.
+One id per key of that dict, so a gate added to any family is
+compared here without a per-family list.
 """
 
 from __future__ import annotations

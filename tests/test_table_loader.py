@@ -101,7 +101,7 @@ def _oracle_refs(node, names=frozenset()) -> bool:
 
 def test_test_files_are_named_by_family():
     """Tests are filed by the operator family they check, not by the
-    grading round that added them."""
+    round that added them."""
     stray = [
         fn for fn in os.listdir(TESTS)
         if fn.startswith("test_") and fn.endswith(".py")
