@@ -60,7 +60,7 @@ def _jaccard(a: Column, b: Column) -> Column:
     lookups. The double quotient is the identical division as before
     (same integer numerator and denominator), so every rounded jaccard
     is byte-identical; equivalence vs the array_union form is pinned in
-    tests/test_dedup.py::test_jaccard_inclusion_exclusion.
+    tests/test_optimization_r13.py::test_jaccard_inclusion_exclusion.
     """
     inter = F.size(F.array_intersect(a, b))
     union = F.size(a) + F.size(b) - inter
@@ -261,7 +261,7 @@ def dedup_minhash_pairs_bounded(spark, sf_dir):
     exact-verify stage then removes any sub-threshold candidates), so
     output ≡ bounded brute force, forever, for a fixed fixture. Recall
     1.0 on the slice is also pinned by
-    tests/test_dedup.py::test_minhash_bounded_recall_exact.
+    tests/test_extensions.py::test_minhash_bounded_recall_exact.
     The UNBOUNDED operator stays dedup_minhash_lsh_pairs (rows-only by
     nature, recall asserted statistically in tests)."""
     d = (
@@ -407,7 +407,7 @@ def dedup_simhash_planted_pairs(spark, sf_dir):
     1068 hamming-0 pairs among 600 docs at sf0.01, 108 of them with
     UNEQUAL token sets) — exactly the ADVICE-r2 pattern of asserting
     the planted structure instead of fixture luck. Natural-pair
-    behavior stays pytest-covered (tests/test_dedup.py)."""
+    behavior stays pytest-covered (tests/test_extensions.py)."""
     d = (
         load_table(spark, "documents", sf_dir)
         .where(F.col("doc_id") < PAIR_BOUND)
@@ -483,7 +483,7 @@ def dedup_embedding_pairs(spark, sf_dir, threshold: float = EMBED_DUP_THRESHOLD)
     probabilistic, which is what makes a hash oracle possible for an LSH
     operator: the result is precisely one (v, twin) pair per vector.
     Probabilistic near-miss recall (perturbed vectors) is asserted in
-    tests/test_dedup.py::test_embedding_near_pairs_recall instead.
+    tests/test_extensions.py::test_embedding_near_pairs_recall instead.
     cos_sim is dropped from the output (it is 1.0 up to float rounding;
     keeping it would hash engine fp noise, not semantics)."""
     e = load_table(spark, "embeddings", sf_dir).select("vec_id", "embedding")
@@ -499,7 +499,7 @@ def dedup_embedding_pairs(spark, sf_dir, threshold: float = EMBED_DUP_THRESHOLD)
     # cosine ≈ 0.51 at sf0.01 « 0.95). The b−a filter pins the gate to
     # the planted pairs so a fixture regrow or larger sf can't flip it;
     # the no-natural-pairs property itself is separately asserted in
-    # tests/test_dedup.py::test_embedding_fixture_has_no_natural_dups.
+    # tests/test_extensions.py::test_embedding_fixture_has_no_natural_dups.
     return (
         embedding_near_pairs(e.unionByName(twins), threshold=threshold)
         .where(F.col("b") - F.col("a") == TWIN_OFFSET)
@@ -554,7 +554,7 @@ DEDUP_ORACLE: dict[str, str] = {
     # dedup_minhash_lsh_pairs / dedup_simhash (unbounded, natural):
     # hash-function-dependent — rows-only, kept OUT of the driver
     # window; recall vs the brute-force oracle asserted in
-    # tests/test_dedup.py::test_minhash_recall.
+    # tests/test_extensions.py::test_minhash_recall.
     "dedup_simhash_planted_pairs":
         f"SELECT doc_id AS a, doc_id + {SIMHASH_COPY_OFFSET} AS b, "
         "0::INTEGER AS hamming "
@@ -632,7 +632,7 @@ def dedup_clusters(spark, sf_dir):
     keep themselves). Runs the star-contraction form — O(log² n) rounds
     and measured 3× faster cold than label propagation on the unbounded
     sf0.1 pair set (12.2 s → 4.4 s; identical fixpoint, asserted in
-    tests/test_dedup.py) — which is also the 100 TB-correct choice
+    tests/test_extensions.py) — which is also the 100 TB-correct choice
     for adversarial chain/mesh dup graphs."""
     pairs = dedup_minhash_lsh_pairs(spark, sf_dir)
     return duplicate_clusters_star(pairs)
@@ -641,7 +641,7 @@ def dedup_clusters(spark, sf_dir):
 DEDUP_QUERIES["dedup_clusters"] = dedup_clusters
 # dedup_clusters (unbounded): hash-derived pairs → rows-only, kept OUT
 # of the driver window; transitivity and canonical-min properties
-# asserted in tests/test_dedup.py. The deterministic-oracle form
+# asserted in tests/test_extensions.py. The deterministic-oracle form
 # is dedup_clusters_bounded below.
 
 

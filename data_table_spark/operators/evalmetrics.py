@@ -244,7 +244,7 @@ def rouge_l_pairs(
     standard generation-length cap), the pair join happens BEFORE the
     UDF so Python sees exactly one row per pair, and the DP runs as a
     numpy rolling-row inside mapInPandas. Rows-only gate; the full
-    pure-Python golden (tests/test_evalmetrics.py) pins every value.
+    pure-Python golden (tests/test_round13_ops.py) pins every value.
     """
     ref, hyp = _stride_docs(docs, stride)
     a = ref.select(
@@ -391,7 +391,7 @@ EVAL_ORACLE: dict[str, str] = {
         "LEFT JOIN m2 ON m2.pair = p.pair"
     ),
     # eval_rouge_l_pairs: LCS dynamic program — rows-only by nature,
-    # full pure-Python golden in tests/test_evalmetrics.py
+    # full pure-Python golden in tests/test_round13_ops.py
 }
 
 

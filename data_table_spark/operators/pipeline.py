@@ -2850,7 +2850,7 @@ def dp_sums(
     floors log-based noise at +0.5, and F.log vs DuckDB LN are both
     libm (not correctly rounded): portability therefore REQUIRES every
     per-group noise value to sit away from a floor boundary, which
-    tests/test_pipeline.py::test_dp_sum_noise_exact_and_bounded
+    tests/test_round11_ops.py::test_dp_sum_noise_exact_and_bounded
     asserts at fixture time (>1e-6 from any integer; reseed
     DP_SUM_SEED if a fixture change ever trips it).
 

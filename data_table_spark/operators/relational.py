@@ -1506,7 +1506,7 @@ def q79_cooccurrence(spark, sf_dir):
     map-combinable aggregate — 2 exchanges, no join, no sort. Same
     multiset of pairs by construction (each order contributes each
     unordered distinct-part pair exactly once either way); equivalence
-    vs the self-join form pinned in tests/test_relational.py."""
+    vs the self-join form pinned in tests/test_optimization_r14.py."""
     li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_partkey")
     baskets = (
         li.groupBy("l_orderkey")
@@ -3600,7 +3600,7 @@ def q117_association_rules(spark, sf_dir):
     n_baskets = basket rows, n_item = one explode + count, n_ab = the
     C(n,2) struct explode + count. No join of the line stream against
     itself anywhere; equivalence vs the self-join form pinned in
-    tests/test_relational.py."""
+    tests/test_optimization_r14.py."""
     li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_partkey")
     baskets = truncate_lineage(
         li.groupBy("l_orderkey").agg(
@@ -5392,7 +5392,7 @@ def q138_bootstrap_ci(spark, sf_dir):
     no shuffle beyond 66 accumulator cells; state stays B cells,
     independent of corpus size. Equivalence to the explode/window
     formulation is pinned row-for-row in
-    tests/test_relational.py::test_q138_matches_explode_window_form.
+    tests/test_optimization_r13.py::test_q138_matches_explode_window_form.
     Measured ~1.9× (interleaved same-session A/B at sf0.1: old
     9.3-13.2 s vs new 4.7-5.3 s across three sessions); results
     byte-identical at sf0.001/0.01/0.1."""
@@ -7508,7 +7508,7 @@ def q162_geo_radius_join(spark, sf_dir):
     are emitted as (least, greatest); the haversine is exactly
     symmetric under the endpoint swap (odd sin under squaring,
     commutative multiplies — identical doubles), asserted against the
-    3×3 formulation in tests/test_relational.py."""
+    3×3 formulation in tests/test_optimization_r13.py."""
     c = load_table(spark, "customer", sf_dir).select("c_custkey")
     h1 = F.pmod(F.col("c_custkey") * F.lit(2654435761), F.lit(1 << 31))
     h2 = F.pmod(
@@ -9875,7 +9875,7 @@ def q193_interval_range_frame(spark, sf_dir):
     RANGE BETWEEN INTERVAL 7 DAYS PRECEDING AND CURRENT ROW)`, result
     = top-20 events by (rolling sum, event_id). The INTERVAL-frame SQL
     surface itself stays proven by
-    tests/test_relational.py::test_q193_matches_interval_frame_window,
+    tests/test_optimization_r13.py::test_q193_matches_interval_frame_window,
     which pins this plan's output row-for-row against the literal
     INTERVAL-frame window.
 
@@ -10462,7 +10462,7 @@ def q200_sql_scripting_search(spark, sf_dir):
     statements) is exercised unchanged, but each iteration now costs a
     sub-ms probe of a 40-row table instead of a fact-table aggregate:
     ~log2(threshold) × 2 fact scans → 1 fact scan (sf0.1: 5.4 s →
-    ~0.9 s). tests/test_relational.py pins this result against
+    ~0.9 s). tests/test_optimization_r13.py pins this result against
     the original scan-per-iteration scripting form. The integer
     comparisons use DIV so both engines agree exactly."""
     spark.conf.set("spark.sql.scripting.enabled", "true")

@@ -239,7 +239,7 @@ SIMILARITY_ORACLE: dict[str, str] = {
         "SELECT label, ROUND(SQRT(SUM(c*c)), 6) AS centroid_norm "
         "FROM cent GROUP BY label",
     # sim_lsh_topk: hash-derived buckets — rows-only; recall asserted in
-    # tests/test_similarity.py::test_lsh_signature_recall_on_planted_neighbors.
+    # tests/test_extensions.py::test_lsh_signature_recall_on_planted_neighbors.
 }
 
 
@@ -347,7 +347,7 @@ def sim_lsh_topk_twins(spark, sf_dir):
     Every twin's signature equals the query's (hamming 0 ≤ probe), and
     cosine(query, twin) rounds to exactly 1.0 — while no natural fixture
     pair reaches 0.999999+ (max random cosine ≈ 0.51, asserted in
-    tests/test_dedup.py). The top-k is therefore exactly the TOP_K
+    tests/test_extensions.py). The top-k is therefore exactly the TOP_K
     twins ordered by vec_id, regardless of which natural vectors pass
     the hamming probe: a hash-stable result from a hash-bucketed
     operator. Probabilistic recall on perturbed vectors stays in pytest.
@@ -391,7 +391,7 @@ SIMILARITY_ORACLE["sim_lsh_topk_twins"] = (
 )
 # sim_lsh_topk itself (natural corpus, probabilistic recall) stays
 # rows-only BY NATURE and is kept out of the driver window; its recall
-# is asserted in tests/test_similarity.py.
+# is asserted in tests/test_extensions.py.
 
 
 # --------------------------------------------------------------------------
@@ -583,7 +583,7 @@ def sim_knn_join_twins(spark, sf_dir):
     asserted in tests). The top-3 per query is therefore exactly its
     three twins ordered by c_id — hash-stable output through the full
     sign → band → multi-probe → join → window-rank pipeline.
-    Probabilistic neighbor recall stays in tests/test_similarity.py."""
+    Probabilistic neighbor recall stays in tests/test_extensions.py."""
     e = load_table(spark, "embeddings", sf_dir).select("vec_id", "embedding")
 
     # single-parameter lambda factory: a 2-parameter lambda (even with a
@@ -750,7 +750,7 @@ def sim_ivf_kmeans_topk(spark, sf_dir, k_clusters: int = 8, n_probe: int = 2):
 
 SIMILARITY_QUERIES["sim_ivf_kmeans_topk"] = sim_ivf_kmeans_topk
 # sim_ivf_kmeans_topk: learned quantizer — rows-only for the driver;
-# exactness-within-probed-clusters asserted in tests/test_similarity.py.
+# exactness-within-probed-clusters asserted in tests/test_extensions.py.
 # Its serving path (codebook_assign + _ivf_probe_topk) earns hard green
 # rows through the pinned-codebook twins below.
 
@@ -772,7 +772,7 @@ def pinned_codebook(dim: int = 64, k: int = PINNED_K) -> "np.ndarray":
     − 6) / 8 ∈ {−0.75 … +0.75}. The mod-13 lattice decorrelates the k
     rows (pairwise |cosine| ≤ 0.57 at dim 64) so nearest-centroid argmin
     gaps on the fixture corpus are many orders of magnitude above fp
-    summation noise (gap ≥ 1e-3, asserted in tests/test_similarity.py)."""
+    summation noise (gap ≥ 1e-3, asserted in tests/test_extensions.py)."""
     return np.array(
         [[((17 * (j + 1) + 31 * d) % 13 - 6) / 8.0 for d in range(dim)]
          for j in range(k)]
@@ -1243,7 +1243,7 @@ SIMILARITY_ORACLE["sim_quantized_covariance"] = (
 #: dyadic rationals (int/8) from pure integer arithmetic — exact in
 #: float64 on both engines (the pinned_codebook argument). 16×8 beats
 #: coarser splits on this corpus (ADC top-10 overlap 4/10 with exact,
-#: mean true rank 79/500 — tests/test_similarity.py pins the fidelity
+#: mean true rank 79/500 — tests/test_extensions.py pins the fidelity
 #: floor) while keeping every subspace argmin gap ≥ 4e-4; larger K on
 #: the mod-13 lattice would repeat code vectors (exact ties — still
 #: deterministic first-index in both engines, but gapless).
@@ -1254,7 +1254,7 @@ def pq_codebooks() -> "np.ndarray":
     """Deterministic (PQ_M × PQ_K × PQ_SUBDIM) codebooks on the mod-13
     lattice, salted per subspace so the M argmins decorrelate. The
     corpus-wide argmin runner-up gap per subspace is asserted ≫ fp
-    noise in tests/test_similarity.py (the same guarantee that makes
+    noise in tests/test_extensions.py (the same guarantee that makes
     the pinned IVF gates hash-safe)."""
     return np.array(
         [[[((17 * (j + 1) + 31 * d + 41 * s) % 13 - 6) / 8.0

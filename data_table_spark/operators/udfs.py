@@ -207,7 +207,7 @@ def ewma_per_key(
     breaks reset the recurrence, and each row runs the identical
     float64 ops (python float IS the same IEEE-754 double), so the
     output is row-identical to the grouped-map form (pinned in
-    tests/test_udfs.py). The grouped-map surface itself
+    tests/test_optimization_r14.py). The grouped-map surface itself
     stays proven by udf_grouped_map_stats / udf_cogrouped_merge /
     udf_arrow_grouped_map. Hot-key cost is unchanged (one in-memory
     pass over that key's rows; state is O(1))."""
@@ -313,7 +313,7 @@ def capped_sessions(
     cap-split recurrence iterates once per emitted SESSION (a
     searchsorted jump per split), not once per event. Same shuffle,
     identical output (pinned row-for-row against the grouped-map form
-    in tests/test_udfs.py); the grouped-map surface itself
+    in tests/test_optimization_r13.py); the grouped-map surface itself
     stays proven by udf_grouped_map_stats / udf_cogrouped_merge /
     udf_arrow_grouped_map. sf0.1: 5.6 s → ~1.5 s. Memory note: the fold
     concatenates its partition's batches (complete key groups land in

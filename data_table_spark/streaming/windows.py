@@ -676,7 +676,7 @@ STREAMJOIN_ORACLE["stream_full_attribution"] = (
 #: matched the Structured Streaming guide's wording but the memory-sink
 #: window counts disproved it: a row later than the freshly-advanced
 #: watermark still aggregates for one more batch; the per-batch
-#: minimal experiments are in tests/test_streaming.py). An event is
+#: minimal experiments are in tests/test_round10_ops.py). An event is
 #: dropped iff its hour-window END ≤ that filter watermark. Jitter is
 #: ±24 h because under lag-2 lateness must exceed TWO batch spans
 #: (~11 h each at N=64) to ever trip: 444 drops across 62/64 batches

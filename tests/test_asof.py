@@ -1,7 +1,7 @@
-"""As-of join: directional and tolerance units.
+"""As-of join: DuckDB ASOF JOIN oracle gate + directional/tolerance units.
 
-The gates are compared to DuckDB's native ASOF LEFT JOIN in
-test_oracles.py; these tests pin the semantics pandas.merge_asof users
+The gated query (asof_join_events) is hash-compared against DuckDB's native
+ASOF LEFT JOIN; the unit tests pin the semantics pandas.merge_asof users
 expect (inclusive backward match, forward direction, tolerance voiding,
 left-outer survival).
 """
@@ -10,7 +10,17 @@ from __future__ import annotations
 
 import datetime as dt
 
-from data_table_spark.operators.asof import asof_join
+import sys, os
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from pyspark.sql import functions as F  # noqa: E402
+
+from data_table_spark.operators.asof import (  # noqa: E402
+    ASOF_ORACLE,
+    ASOF_QUERIES,
+    asof_join,
+)
+from tests.oracle_util import compare_to_oracle  # noqa: E402
 
 
 def _ts(s):
@@ -86,3 +96,9 @@ def test_tolerance_boundary_inclusive(spark):
     got = {r["trade_id"]: r["bid"] for r in out.collect()}
     assert got[1] == 99.7   # gap exactly 2.0s — inclusive
 
+
+def test_asof_gate_matches_duckdb(spark, sf_dir, duck):
+    for name, sql in ASOF_ORACLE.items():
+        df = ASOF_QUERIES[name](spark, sf_dir)
+        ok, msg = compare_to_oracle(df, duck, sql)
+        assert ok, f"{name}: {msg}"

@@ -28,13 +28,13 @@ import __spark_entry__ as entry  # noqa: E402
 #: Each maps to the test (``file::function`` under tests/) that pins it.
 ROWS_ONLY_BY_NATURE = {
     "q17_approx_count_distinct": "test_relational.py::test_q17_tolerance",
-    "dedup_minhash_lsh_pairs": "test_dedup.py::test_minhash_recall",
-    "dedup_simhash": "test_dedup.py::test_simhash_identical_text_same_hash",
-    "dedup_clusters": "test_dedup.py::test_dedup_clusters_on_fixture",
-    "sim_lsh_topk": "test_similarity.py::test_lsh_topk_is_subset_semantics",
+    "dedup_minhash_lsh_pairs": "test_extensions.py::test_minhash_recall",
+    "dedup_simhash": "test_extensions.py::test_simhash_identical_text_same_hash",
+    "dedup_clusters": "test_extensions.py::test_dedup_clusters_on_fixture",
+    "sim_lsh_topk": "test_extensions.py::test_lsh_topk_is_subset_semantics",
     "sim_knn_join": "test_plans.py::test_lsh_knn_join_invariants",
     "sim_ivf_kmeans_topk":
-        "test_similarity.py::test_ivf_kmeans_exact_within_probed_clusters",
+        "test_extensions.py::test_ivf_kmeans_exact_within_probed_clusters",
     # GK quantile sketch has no DuckDB replay. Gap: the golden test
     # checks the helper scale.ntile_approx (≥99% agreement with exact
     # ntile), not the registered gate itself.
@@ -46,11 +46,11 @@ ROWS_ONLY_BY_NATURE = {
     "pipe_bpe_merges": "test_pipeline.py::test_bpe_train_matches_reference",
     # zlib deflate size has no SQL replay; the golden compares the FULL
     # output against Python zlib directly
-    "text_compression_ratio": "test_textstats.py::test_compression_ratio_golden",
+    "text_compression_ratio": "test_extensions.py::test_compression_ratio_golden",
     # LCS is an O(n*m) dynamic program, not a single-statement SQL
     # expression; the golden pins every value, and the two oracle-backed
     # siblings (token F1, BLEU-2) share its pair geometry
-    "eval_rouge_l_pairs": "test_evalmetrics.py::test_rouge_l_python_golden",
+    "eval_rouge_l_pairs": "test_round13_ops.py::test_rouge_l_python_golden",
 }
 
 

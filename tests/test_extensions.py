@@ -39,7 +39,7 @@ from data_table_spark.streaming.windows import (  # noqa: E402
     STREAMJOIN_ORACLE,
     STREAMJOIN_QUERIES,
 )
-from tests.oracle_util import compare_to_oracle, duck_connection  # noqa: E402
+from tests.oracle_util import compare_to_oracle  # noqa: E402
 
 ALL_QUERIES = {
     **DEDUP_QUERIES, **EVAL_QUERIES, **SIMILARITY_QUERIES,
@@ -49,13 +49,6 @@ ALL_ORACLE = {
     **DEDUP_ORACLE, **EVAL_ORACLE, **SIMILARITY_ORACLE,
     **TEXTSTATS_ORACLE, **STATEFUL_ORACLE, **STREAMJOIN_ORACLE,
 }
-
-
-@pytest.fixture(scope="module")
-def duck(sf_dir):
-    con = duck_connection(sf_dir)
-    yield con
-    con.close()
 
 
 @pytest.mark.parametrize("name", sorted(ALL_ORACLE))

@@ -204,59 +204,3 @@ def test_cleaning_column_and_sql_forms_agree(spark):
         ("abc", None, None), (None, None, None),
         ("99999999999999999999", 1e20, None), (None, None, None),
     ]
-
-
-def test_fused_coerce_matches_two_job_path(spark):
-    """guess_types_with_audit (one job) must resolve the same types and
-    the same demotions as the guess-then-audit two-job path, including
-    the case the audit EXISTS for: a column the lattice types as LONG
-    whose values can't all cast (mixed int + date under
-    infer_dates=False) must still demote to string."""
-    from data_table_spark.core import DataTable
-    from data_table_spark.inference import BadTypeGuess
-
-    rows = [
-        ["1", "26.2", "2020-01-01", "2020-01-01"],
-        ["2", "37", "2021-06-30", "17"],
-        ["3", "42.1", "2022-12-25", "2022-12-25"],
-    ]
-    cols = ["i", "d", "ts", "mixed"]
-    dt = DataTable.from_rows(spark, rows, cols)
-    assert dt._n_rows == 3  # fused path eligible
-
-    # infer_dates=False: 'ts' and 'mixed' both reach the LONG pick and
-    # must both demote via the audit counters
-    out = dt.coerce_types(infer_dates=False)
-    got_types = {f.name: f.dataType.simpleString() for f in out.df.schema.fields}
-    assert got_types == {
-        "i": "bigint", "d": "double", "ts": "string", "mixed": "string"
-    }
-
-    # infer_dates=True: 'ts' types as timestamp; 'mixed' still demotes
-    out2 = dt.coerce_types(infer_dates=True)
-    got2 = {f.name: f.dataType.simpleString() for f in out2.df.schema.fields}
-    assert got2 == {
-        "i": "bigint", "d": "double", "ts": "timestamp", "mixed": "string"
-    }
-
-    # on_error='raise' must raise from the fused counters too
-    try:
-        dt.coerce_types(on_error="raise", infer_dates=False)
-    except BadTypeGuess as e:
-        assert e.bad_count > 0
-    else:
-        raise AssertionError("fused raise path did not raise")
-
-    # explicit types force the two-job path; results must agree with the
-    # fused path on the untouched columns
-    out3 = dt.coerce_types(explicit={"mixed": "string"}, infer_dates=False)
-    got3 = {f.name: f.dataType.simpleString() for f in out3.df.schema.fields}
-    assert got3 == got_types
-
-    # values identical between the paths (not just the types)
-    big = DataTable.from_rows(spark, rows, cols)
-    object.__setattr__(big, "_n_rows", None)  # force the two-job path
-    ref = big.coerce_types(infer_dates=False)
-    assert [tuple(r) for r in out.df.orderBy("i").collect()] == [
-        tuple(r) for r in ref.df.orderBy("i").collect()
-    ]

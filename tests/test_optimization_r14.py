@@ -187,7 +187,8 @@ def test_format_for_output_keeps_dense_row_ids(spark):
     as the old orderBy + re-stamp form (ids are dense 0..n-1, so the
     renumber it replaced was the identity)."""
     from data_table_spark.core import ROW_ID, DataTable
-    from data_table_spark.functions.formatting import format_table_for_output
+    from data_table_spark.functions.formatting import format_value
+    from data_table_spark.names import sql_name
 
     dt = DataTable.from_rows(
         spark,
@@ -196,11 +197,14 @@ def test_format_for_output_keeps_dense_row_ids(spark):
     ).coerce_types(infer_dates=False)
     got = dt.format_for_output()
     # old formulation: order by id, format, re-stamp a fresh dense id
+    plain = dt.ordered_df.orderBy(ROW_ID).select(*dt.column_names)
     old = DataTable(
-        format_table_for_output(
-            dt.ordered_df.orderBy(ROW_ID).select(*dt.column_names),
-            dt.config.list_delimiter,
-        ),
+        plain.select(*[
+            format_value(
+                F.col(sql_name(f.name)), f.dataType, dt.config.list_delimiter
+            ).alias(f.name)
+            for f in plain.schema.fields
+        ]),
         config=dt.config,
     )
     # _row_id POSITION differs (the facade hides it and resolves by

@@ -1,68 +1,41 @@
-"""Training-corpus pipeline operators (operators/pipeline.py, bpe.py):
-behavioral invariants (determinism, split totality, chunk coverage,
-sampling rates) and pure-Python replays."""
+"""Training-corpus pipeline operators (operators/pipeline.py): DuckDB
+oracle parity for every gate plus behavioral invariants (determinism,
+split totality, chunk coverage, sampling rates)."""
 
 from __future__ import annotations
 
-import hashlib
-import math
 import os
-import re
-from collections import Counter, defaultdict
+import sys
 
 import pytest
-from pyspark.sql import functions as F
 
-from data_table_spark.operators.pipeline import (
-    DP_SEED,
-    EPOCH_SEED,
-    GOPHER_ALPHA_DEN,
-    GOPHER_ALPHA_NUM,
-    GOPHER_MAX_WORDS,
-    GOPHER_MEAN_LEN_MAX,
-    GOPHER_MEAN_LEN_MIN,
-    GOPHER_MIN_STOP_HITS,
-    GOPHER_MIN_WORDS,
-    GOPHER_STOPWORDS,
-    KFOLD_K,
-    KFOLD_SEED,
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from pyspark.sql import functions as F  # noqa: E402
+
+from data_table_spark.operators.bpe import (  # noqa: E402
+    BPE_ORACLE,
+    BPE_QUERIES,
+)
+from data_table_spark.operators.pipeline import (  # noqa: E402
+    PIPELINE_ORACLE,
     PIPELINE_QUERIES,
-    RESAMPLE_N,
-    SCHEDULE_HEAD,
-    SENT_SPLIT,
-    SPANC_LEN,
-    SPANC_PCT,
-    SPANC_SEED,
-    SUBTOK_RE,
     chunk_documents,
-    dp_counts,
-    epoch_schedule,
-    gopher_rules,
-    kfold_assign,
-    span_corruption,
     split_assign,
     stratified_sample,
-    tokenizer_fertility,
 )
-from data_table_spark.sources.registry import load_table
+from tests.oracle_util import compare_to_oracle  # noqa: E402
+
+PIPELINE_QUERIES = {**PIPELINE_QUERIES, **BPE_QUERIES}
+PIPELINE_ORACLE = {**PIPELINE_ORACLE, **BPE_ORACLE}
 
 
-def _h32(s: str) -> int:
-    """The engines' shared md5-prefix hash (pipeline.hash_bucket core)."""
-    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
+@pytest.mark.parametrize("name", sorted(PIPELINE_ORACLE))
+def test_pipeline_oracle(name, spark, sf_dir, duck):
+    df = PIPELINE_QUERIES[name](spark, sf_dir)
+    ok, msg = compare_to_oracle(df, duck, PIPELINE_ORACLE[name])
+    assert ok, f"{name}: {msg}"
 
-
-def _toks(text: str) -> list[str]:
-    return [w for w in text.lower().strip().split() if w]
-
-
-def _epoch_s(ts) -> int:
-    """Epoch seconds of a collected ``events.ts`` value. The column is
-    TIMESTAMP (``load_table`` normalizes it), which ``collect()`` returns
-    as a naive datetime in the host's local zone; ``.timestamp()`` reads
-    a naive datetime in that same zone, so the replayed epoch equals the
-    gates' timestampdiff on any host."""
-    return int(ts.timestamp())
 
 def test_split_total_and_deterministic(spark, sf_dir):
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -428,588 +401,3 @@ def test_bpe_encode_roundtrip(spark, sf_smoke):
         .collect()
     )
     assert all(r["s"] in vocab for r in multi), (sorted(vocab), multi)
-
-
-def test_quality_calibration_deciles_partition_sources(spark, sf_smoke):
-    """pipe_quality_calibration: per source, decile counts must sum to
-    the source's doc count, every decile sits in 0..9, and sizes are
-    near-equal (the integer rank arithmetic guarantees |n_d − n/10| ≤ 1
-    for n ≥ 10)."""
-    from data_table_spark.operators.pipeline import PIPELINE_QUERIES
-
-    rows = PIPELINE_QUERIES["pipe_quality_calibration"](
-        spark, sf_smoke
-    ).collect()
-    per_src_total: dict = {}
-    for r in rows:
-        assert 0 <= r["decile"] <= 9
-        assert r["min_score"] <= r["max_score"]
-        per_src_total[r["source"]] = (
-            per_src_total.get(r["source"], 0) + r["n_docs"]
-        )
-    truth = {
-        r["source"]: r["n"]
-        for r in load_table(spark, "documents", sf_smoke)
-        .groupBy("source")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert per_src_total == truth
-    for r in rows:
-        n = truth[r["source"]]
-        if n >= 10:
-            assert abs(r["n_docs"] - n / 10) <= 1, r
-
-
-# --------------------------------------------------------------------------
-# DP counts
-# --------------------------------------------------------------------------
-
-
-def test_dp_counts_noise_exact_and_bounded(spark, sf_smoke):
-    """Released = true + round(Laplace_b=1(md5 uniform)): the noise is
-    exactly the documented inverse-CDF draw, and its magnitude is
-    bounded by b·ln(2^32) ≈ 22.2 (the md5-uniform tail bound), so a
-    release can never be wildly off its true count."""
-    docs = load_table(spark, "documents", sf_smoke)
-    true = {
-        r["source"]: r["n"]
-        for r in docs.groupBy("source").agg(F.count("*").alias("n")).collect()
-    }
-    for r in dp_counts(docs).collect():
-        u = (_h32(f"{DP_SEED}:{r['source']}") + 0.5) / 4294967296.0
-        lap = -1.0 * math.copysign(1.0, u - 0.5) * math.log(
-            1.0 - 2.0 * abs(u - 0.5)
-        )
-        exp = true[r["source"]] + math.floor(lap + 0.5)
-        assert r["released_count"] == exp, r["source"]
-        assert abs(r["released_count"] - true[r["source"]]) <= 23
-        assert r["eps_e6"] == 1_000_000
-
-
-# --------------------------------------------------------------------------
-# epoch schedule
-# --------------------------------------------------------------------------
-
-
-def test_epoch_schedule_replay_and_shape(spark, sf_smoke):
-    """Each epoch emits positions 1..head over distinct docs; the head
-    equals a Python argsort of the documented per-(epoch, doc) hash;
-    and at least two epochs order differently (the shuffle shuffles)."""
-    docs = load_table(spark, "documents", sf_smoke).select("doc_id")
-    ids = [r["doc_id"] for r in docs.collect()]
-    got: dict[int, list[int]] = {}
-    for r in epoch_schedule(docs).orderBy("epoch", "position").collect():
-        got.setdefault(r["epoch"], []).append(r["doc_id"])
-    assert sorted(got) == [0, 1, 2]
-    for e, order in got.items():
-        assert len(order) == SCHEDULE_HEAD
-        assert len(set(order)) == SCHEDULE_HEAD
-        exp = sorted(
-            ids, key=lambda d: (_h32(f"{EPOCH_SEED}:{e}:{d}"), d)
-        )[:SCHEDULE_HEAD]
-        assert order == exp, e
-    assert len({tuple(v) for v in got.values()}) > 1
-
-
-# --------------------------------------------------------------------------
-# dedup quota
-# --------------------------------------------------------------------------
-
-
-def test_dedup_quota_counts_partition(spark, sf_smoke):
-    """kept + dropped = docs per source; kept equals the number of
-    distinct opening-prefix clusters intersecting the source under
-    quota 1 with min-doc_id survivorship; and the sweep drops > 0 docs
-    (the sizing is not degenerate)."""
-    from data_table_spark.operators.pipeline import (
-        DUP_PREFIX_TOKENS,
-        PIPELINE_QUERIES,
-    )
-
-    docs = load_table(spark, "documents", sf_smoke).collect()
-    clusters: dict[str, list] = {}
-    for r in docs:
-        key = " ".join(
-            [x for x in r["text"].lower().strip().split() if x]
-            [:DUP_PREFIX_TOKENS]
-        )
-        clusters.setdefault(key, []).append((r["doc_id"], r["source"]))
-    kept: dict[str, int] = {}
-    dropped: dict[str, int] = {}
-    for members in clusters.values():
-        members.sort()
-        kept[members[0][1]] = kept.get(members[0][1], 0) + 1
-        for _, src in members[1:]:
-            dropped[src] = dropped.get(src, 0) + 1
-    rows = PIPELINE_QUERIES["pipe_dedup_quota"](spark, sf_smoke).collect()
-    for r in rows:
-        assert r["n_kept"] + r["n_dropped"] == r["n_docs"]
-        assert r["n_kept"] == kept.get(r["source"], 0), r["source"]
-        assert r["n_dropped"] == dropped.get(r["source"], 0), r["source"]
-    assert sum(r["n_dropped"] for r in rows) > 0
-
-
-# --------------------------------------------------------------------------
-# time split
-# --------------------------------------------------------------------------
-
-
-def test_time_split_partitions_and_boundaries(spark, sf_smoke):
-    """Per-type counts partition the log, boundaries are the exact 80 %
-    cut and +24 h embargo of the observed span, and every split is
-    non-empty (the knobs discriminate)."""
-    from data_table_spark.operators.pipeline import (
-        PIPELINE_QUERIES,
-        TIME_EMBARGO_S,
-        TIME_SPLIT_FRAC_E2,
-    )
-
-    ev = load_table(spark, "events", sf_smoke).select(
-        "event_type", "ts"
-    ).collect()
-    ss = [_epoch_s(r["ts"]) for r in ev]
-    lo, hi = min(ss), max(ss)
-    cut = lo + ((hi - lo) * TIME_SPLIT_FRAC_E2) // 100
-    per_type: dict = {}
-    for r, s in zip(ev, ss):
-        t = per_type.setdefault(r["event_type"], [0, 0, 0])
-        if s < cut:
-            t[0] += 1
-        elif s < cut + TIME_EMBARGO_S:
-            t[1] += 1
-        else:
-            t[2] += 1
-    rows = PIPELINE_QUERIES["pipe_time_split"](spark, sf_smoke).collect()
-    assert len(rows) == len(per_type)
-    for r in rows:
-        tr, em, te = per_type[r["event_type"]]
-        assert (r["cut_s"], r["test_from_s"]) == (cut, cut + TIME_EMBARGO_S)
-        assert (r["n_train"], r["n_embargo_dropped"], r["n_test"]) == (
-            tr, em, te
-        )
-    assert sum(r["n_embargo_dropped"] for r in rows) > 0
-    assert sum(r["n_test"] for r in rows) > 0
-
-
-# --------------------------------------------------------------------------
-# Gopher rules
-# --------------------------------------------------------------------------
-
-
-def test_gopher_rules_matches_python_replay(spark, sf_smoke):
-    """Per-source pass/fail table equals an independent per-doc Python
-    recompute of all four rules — pins tokenization, the exact
-    cross-multiplied thresholds, and the per-rule counting."""
-    docs = load_table(spark, "documents", sf_smoke).select("source", "text")
-    exp: dict[str, list[int]] = defaultdict(lambda: [0, 0, 0, 0, 0, 0])
-    for r in docs.collect():
-        t = _toks(r["text"])
-        n = len(t)
-        sumlen = sum(len(w) for w in t)
-        n_alpha = sum(1 for w in t if any("a" <= c <= "z" for c in w))
-        n_stop = sum(1 for w in t if w in GOPHER_STOPWORDS)
-        f_wc = n < GOPHER_MIN_WORDS or n > GOPHER_MAX_WORDS
-        f_mwl = (
-            sumlen < GOPHER_MEAN_LEN_MIN * n
-            or sumlen > GOPHER_MEAN_LEN_MAX * n
-        )
-        f_alpha = GOPHER_ALPHA_DEN * n_alpha < GOPHER_ALPHA_NUM * n
-        f_stop = n_stop < GOPHER_MIN_STOP_HITS
-        e = exp[r["source"]]
-        e[0] += 1
-        e[1] += not (f_wc or f_mwl or f_alpha or f_stop)
-        e[2] += f_wc
-        e[3] += f_mwl
-        e[4] += f_alpha
-        e[5] += f_stop
-    got = {
-        r["source"]: [
-            r["n_docs"], r["n_pass"], r["fail_word_count"],
-            r["fail_mean_word_len"], r["fail_alpha_ratio"],
-            r["fail_stopwords"],
-        ]
-        for r in gopher_rules(docs).collect()
-    }
-    assert got == {k: list(v) for k, v in exp.items()}
-    # the fixture must exercise BOTH outcomes or the gate is vacuous
-    assert any(v[1] > 0 for v in exp.values()), "no doc passes"
-    assert any(v[0] > v[1] for v in exp.values()), "no doc fails"
-
-
-# --------------------------------------------------------------------------
-# k-fold assignment
-# --------------------------------------------------------------------------
-
-
-def test_kfold_partitions_and_loo_sums(spark, sf_smoke):
-    """Folds equal the md5 replay, fold sizes partition the corpus, and
-    every leave-one-out pair satisfies fold + train == total."""
-    docs = load_table(spark, "documents", sf_smoke).select("doc_id", "text")
-    exp_docs: Counter = Counter()
-    exp_toks: Counter = Counter()
-    for r in docs.collect():
-        fold = _h32(f"{KFOLD_SEED}:{r['doc_id']}") % KFOLD_K
-        exp_docs[fold] += 1
-        exp_toks[fold] += len(_toks(r["text"]))
-    rows = kfold_assign(docs).collect()
-    assert len(rows) == KFOLD_K
-    tot_d, tot_t = sum(exp_docs.values()), sum(exp_toks.values())
-    for r in rows:
-        assert exp_docs[r["fold"]] == r["n_docs"]
-        assert exp_toks[r["fold"]] == r["n_tokens"]
-        assert r["n_docs"] + r["train_docs"] == tot_d
-        assert r["n_tokens"] + r["train_tokens"] == tot_t
-
-
-# --------------------------------------------------------------------------
-# DP sum release
-# --------------------------------------------------------------------------
-
-
-def test_dp_sum_noise_exact_and_bounded(spark, sf_smoke):
-    """Released = clipped true sum + round(Laplace_b=C/eps(md5 uniform));
-    noise magnitude bounded by b·ln(2^32) so a release can't be wildly
-    off; clipping actually binds on this fixture (some doc > C)."""
-    from data_table_spark.operators.pipeline import (
-        DP_SUM_CLIP,
-        DP_SUM_SEED,
-        dp_sums,
-    )
-
-    docs = load_table(spark, "documents", sf_smoke)
-    true: Counter = Counter()
-    clipped_binds = False
-    for r in docs.select("source", "text").collect():
-        n = len(_toks(r["text"]))
-        clipped_binds |= n > DP_SUM_CLIP
-        true[r["source"]] += min(n, DP_SUM_CLIP)
-    assert clipped_binds, "fixture never exceeds the clip: rule vacuous"
-    for r in dp_sums(docs).collect():
-        u = (_h32(f"{DP_SUM_SEED}:{r['source']}") + 0.5) / 4294967296.0
-        lap = -float(DP_SUM_CLIP) * math.copysign(1.0, u - 0.5) * math.log(
-            1.0 - 2.0 * abs(u - 0.5)
-        )
-        assert r["released_token_sum"] == true[r["source"]] + math.floor(
-            lap + 0.5
-        )
-        assert abs(r["released_token_sum"] - true[r["source"]]) <= (
-            DP_SUM_CLIP * math.log(2**32) + 1
-        )
-        # cross-engine portability rests on FLOOR(lap + 0.5) agreeing
-        # between Spark's F.log and DuckDB's LN (both libm, neither
-        # correctly rounded): assert every per-group noise value sits
-        # FAR from a floor boundary, so a last-ulp ln difference cannot
-        # flip the released integer (round-11 ADVICE item — the same
-        # treatment the sqrt-based gates carry)
-        frac = (lap + 0.5) % 1.0
-        assert min(frac, 1.0 - frac) > 1e-6, (
-            f"noise for {r['source']!r} within 1e-6 of a floor boundary: "
-            f"{lap + 0.5!r} — reseed DP_SUM_SEED"
-        )
-
-
-# --------------------------------------------------------------------------
-# packing efficiency
-# --------------------------------------------------------------------------
-
-
-def test_pack_efficiency_consistency(spark, sf_smoke):
-    """Per-source totals reconcile with the pack_sequences gate output
-    joined to sources, and fill_e6 is the exact floored ratio."""
-    from data_table_spark.operators.pipeline import (
-        PACK_BUDGET,
-        chunk_documents,
-        pack_efficiency,
-        pack_sequences,
-    )
-
-    docs = load_table(spark, "documents", sf_smoke)
-    src = {r["doc_id"]: r["source"] for r in docs.select("doc_id", "source").collect()}
-    packs: dict[tuple, int] = defaultdict(int)
-    for r in pack_sequences(chunk_documents(docs)).collect():
-        packs[(src[r["doc_id"]], r["doc_id"], r["pack_id"])] += r["n_chunk_tokens"]
-    exp: dict[str, list[int]] = defaultdict(lambda: [0, 0])
-    for (s, _, _), toks in packs.items():
-        exp[s][0] += 1
-        exp[s][1] += toks
-    for r in pack_efficiency(docs).collect():
-        n, t = exp[r["source"]]
-        assert (r["n_packs"], r["total_tokens"]) == (n, t)
-        assert r["capacity"] == n * PACK_BUDGET
-        assert r["fill_e6"] == (1_000_000 * t) // (n * PACK_BUDGET)
-        # a chunk that straddles the budget line overfills its pack, so
-        # fill can exceed 1e6 by < chunk_len/budget; it can't double
-        assert 0 < r["fill_e6"] < 2_000_000
-
-
-# --------------------------------------------------------------------------
-# Neyman allocation
-# --------------------------------------------------------------------------
-
-
-def test_neyman_allocation_matches_python_and_dominates(spark, sf_smoke):
-    """Weights equal √(N·Q − S²) e6-floored, allocations floor-split
-    the budget, and a higher-variance-mass stratum never gets fewer
-    samples than a lower one (the optimality ordering)."""
-    from data_table_spark.operators.pipeline import (
-        NEYMAN_BUDGET,
-        neyman_allocation,
-    )
-
-    docs = load_table(spark, "documents", sf_smoke)
-    m: dict[str, list[int]] = defaultdict(lambda: [0, 0, 0])
-    for r in docs.select("source", "text").collect():
-        x = len(_toks(r["text"]))
-        e = m[r["source"]]
-        e[0] += 1
-        e[1] += x
-        e[2] += x * x
-    w = {
-        s: math.floor(1e6 * math.sqrt(n * q - v * v))
-        for s, (n, v, q) in m.items()
-    }
-    tot = sum(w.values())
-    rows = neyman_allocation(docs).collect()
-    assert len(rows) == len(m)
-    got_alloc = {}
-    for r in rows:
-        assert r["weight_e6"] == w[r["source"]]
-        assert r["total_weight_e6"] == tot
-        assert r["alloc_n"] == (NEYMAN_BUDGET * w[r["source"]]) // tot
-        got_alloc[r["source"]] = r["alloc_n"]
-    assert sum(got_alloc.values()) <= NEYMAN_BUDGET
-    ordered = sorted(m, key=lambda s: w[s])
-    for a, b in zip(ordered, ordered[1:]):
-        assert got_alloc[a] <= got_alloc[b]
-
-
-# --------------------------------------------------------------------------
-# tokenizer fertility
-# --------------------------------------------------------------------------
-
-
-def test_tokenizer_fertility_python_replay(spark, sf_smoke):
-    docs = load_table(spark, "documents", sf_smoke)
-    agg: dict[str, list[int]] = {}
-    pat = re.compile(SUBTOK_RE)
-    for r in docs.select("source", "text").collect():
-        low = r["text"].lower().strip()
-        cell = agg.setdefault(r["source"], [0, 0, 0])
-        cell[0] += len(_toks(low))
-        cell[1] += len(pat.findall(low))
-        cell[2] += len(low)
-    got = {
-        r["source"]: r
-        for r in tokenizer_fertility(docs).collect()
-    }
-    assert set(got) == set(agg)
-    for src, (w, s, c) in agg.items():
-        g = got[src]
-        assert (g["n_words"], g["n_subtoks"], g["n_chars"]) == (w, s, c)
-        assert g["fertility_e6"] == (1_000_000 * s) // w
-        assert g["chars_per_subtok_e6"] == (1_000_000 * c) // s
-        # a whitespace word splits into >= 1 subwords: fertility >= 1
-        assert g["fertility_e6"] >= 1_000_000
-
-
-# --------------------------------------------------------------------------
-# span corruption
-# --------------------------------------------------------------------------
-
-
-def test_span_corruption_python_replay(spark, sf_smoke):
-    docs = load_table(spark, "documents", sf_smoke)
-    got = {
-        r["doc_id"]: r
-        for r in span_corruption(docs).collect()
-    }
-    total_spans = total_masked = 0
-    for r in docs.select("doc_id", "text").collect():
-        n = len(_toks(r["text"]))
-        if n == 0:
-            assert r["doc_id"] not in got
-            continue
-        n_spans = (n + SPANC_LEN - 1) // SPANC_LEN
-        masked = [
-            s for s in range(n_spans)
-            if _h32(f"{SPANC_SEED}:{r['doc_id']}:{s}") % 100 < SPANC_PCT
-        ]
-        m_toks = sum(min(SPANC_LEN, n - s * SPANC_LEN) for s in masked)
-        g = got[r["doc_id"]]
-        assert (
-            g["n_toks"], g["n_spans"], g["n_masked_spans"],
-            g["n_masked_toks"],
-        ) == (n, n_spans, len(masked), m_toks)
-        assert g["mask_rate_e6"] == (1_000_000 * m_toks) // n
-        total_spans += n_spans
-        total_masked += len(masked)
-    # the seeded coin really masks ~SPANC_PCT% of spans corpus-wide
-    rate = total_masked / total_spans
-    assert 0.10 < rate < 0.20, rate
-
-
-# --------------------------------------------------------------------------
-# preference pairs
-# --------------------------------------------------------------------------
-
-
-def test_preference_pairs_python_replay(spark, sf_smoke):
-    """Score, packed key, and both argmax/argmin selections replayed in
-    Python floats (the same IEEE truncation chain quality_parts pins);
-    chosen strictly >= rejected and the pair is the score-extreme with
-    the doc_id tie rule."""
-    import math
-
-    from data_table_spark.operators.pipeline import preference_pairs
-
-    docs = load_table(spark, "documents", sf_smoke)
-    per: dict[str, list] = {}
-    stop_pat = re.compile(r"\b(the|a|of|and|to|in)\b")
-    punct_pat = re.compile(r"[^\sA-Za-z0-9]")
-    for r in docs.select("source", "doc_id", "text").collect():
-        t = r["text"]
-        n_tokens = len(re.split(r"\s+", t.strip()))
-        n_chars = len(t)
-        n_punct = len(punct_pat.findall(t))
-        n_stop = len(stop_pat.findall(t.lower()))
-        if n_tokens < 5:
-            sc = 0
-        else:
-            punct_ratio = math.floor(n_punct / n_chars * 10000) / 10000
-            stop_ratio = math.floor(n_stop / n_tokens * 10000) / 10000
-            sc = math.floor(
-                (
-                    (1.0 - min(punct_ratio * 4, 1.0)) * 0.5
-                    + min(stop_ratio * 5, 1.0) * 0.5
-                )
-                * 10000
-            )
-        per.setdefault(r["source"], []).append(
-            (sc * 10**12 + r["doc_id"], sc, r["doc_id"])
-        )
-    got = {
-        r["source"]: r for r in preference_pairs(docs).collect()
-    }
-    assert set(got) == set(per)
-    for src, items in per.items():
-        g = got[src]
-        hi = max(items)
-        lo = min(items)
-        assert (g["chosen_doc"], g["chosen_score_e4"]) == (hi[2], max(
-            s for _, s, _ in items
-        ))
-        assert (g["rejected_doc"], g["rejected_score_e4"]) == (lo[2], min(
-            s for _, s, _ in items
-        ))
-        assert g["gap_e4"] == g["chosen_score_e4"] - g["rejected_score_e4"]
-        assert g["gap_e4"] >= 0 and g["n_docs"] == len(items)
-
-
-def test_preference_pairs_doc_id_overflow_raises(spark):
-    """A doc_id >= 10^12 would bleed into the score digits of the
-    packed selection key and silently corrupt the max_by/min_by
-    ordering; the in-plan assert_true guard must raise instead
-    (q186_ohlc_bars discipline — round-12 VERDICT item 2)."""
-    import pytest
-
-    from data_table_spark.operators.pipeline import preference_pairs
-
-    docs = spark.createDataFrame(
-        [
-            ("s", 1, "the cat and the dog ran to the house in town"),
-            ("s", 10**12, "a of and to in the a of and to in the road"),
-        ],
-        ["source", "doc_id", "text"],
-    )
-    with pytest.raises(Exception, match="doc_id"):
-        preference_pairs(docs).collect()
-    # the in-bound sibling still evaluates (guard adds exactly 0)
-    ok = docs.filter(F.col("doc_id") < 10**12)
-    assert preference_pairs(ok).count() == 1
-
-
-# --------------------------------------------------------------------------
-# pipe systematic resample
-# --------------------------------------------------------------------------
-
-
-def test_systematic_resample_coverage_and_targets(spark, sf_smoke):
-    """Every pick lands on exactly ONE document; the replayed stride
-    targets select the same docs; per-doc pick counts respect the
-    systematic-sampling bound |picks(d) − n·w_d/W| < 1 + 1 (floor/phase
-    slack) — the low-discrepancy property that distinguishes this from
-    multinomial sampling."""
-    docs = sorted(
-        (r["doc_id"], r["n_chars"])
-        for r in load_table(spark, "documents", sf_smoke)
-        .select("doc_id", "n_chars")
-        .collect()
-    )
-    total = sum(w for _, w in docs)
-    rows = PIPELINE_QUERIES["pipe_systematic_resample"](
-        spark, sf_smoke
-    ).collect()
-    assert len(rows) == RESAMPLE_N
-    assert sorted(r["pick_id"] for r in rows) == list(range(RESAMPLE_N))
-    # python replay of the interval walk
-    want = {}
-    cum, iv = 0, []
-    for d, w in docs:
-        iv.append((cum, cum + w, d, w))
-        cum += w
-    for j in range(RESAMPLE_N):
-        t = (2 * j + 1) * total // (2 * RESAMPLE_N)
-        for lo, hi, d, w in iv:
-            if lo <= t < hi:
-                want[j] = (d, w)
-                break
-    got = {r["pick_id"]: (r["doc_id"], r["weight"]) for r in rows}
-    assert got == want
-    # low-discrepancy: actual picks per doc within 1 of the real-valued
-    # expectation (plus 1 more for the floored stride phase)
-    picks = Counter(d for d, _ in got.values())
-    for d, w in docs:
-        expect = RESAMPLE_N * w / total
-        assert abs(picks[d] - expect) < 2.0, (d, picks[d], expect)
-
-
-# --------------------------------------------------------------------------
-# pipe loss-mask spans
-# --------------------------------------------------------------------------
-
-
-def test_loss_mask_spans_python_replay(spark, sf_smoke):
-    """Role parity is assigned on RAW split positions (pre-filter), and
-    the token accounting matches a regex replay; trainable <= total and
-    the basis points are exact integer division."""
-    d = load_table(spark, "documents", sf_smoke)
-    want = {}
-    for r in d.select("doc_id", "text").collect():
-        segs = re.split(SENT_SPLIT, r["text"])
-        n_turns = total = trainable = 0
-        for pos, seg in enumerate(segs):
-            if not seg.strip():
-                continue
-            t = len([w for w in re.split(r"\s+", seg.lower().strip()) if w])
-            n_turns += 1
-            total += t
-            if pos % 2 == 1:
-                trainable += t
-        if n_turns:
-            want[r["doc_id"]] = (
-                n_turns, total, trainable, trainable * 10000 // total
-            )
-    got = {
-        r["doc_id"]: (
-            r["n_turns"], r["total_tokens"], r["trainable_tokens"],
-            r["trainable_bp"],
-        )
-        for r in PIPELINE_QUERIES["pipe_loss_mask_spans"](
-            spark, sf_smoke
-        ).collect()
-    }
-    assert got == want
-    for n_turns, total, trainable, bp in got.values():
-        assert 0 <= trainable <= total
-        assert 0 <= bp <= 10000

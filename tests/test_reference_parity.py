@@ -4,12 +4,17 @@ against the DataTable facade — pins reference-parity semantics (SURVEY §5.1).
 
 from __future__ import annotations
 
+import os
+import sys
+
 import pytest
 from pyspark.sql import types as T
 
-from data_table_spark.core import DataTable
-from data_table_spark.inference import simplify_type
-from data_table_spark.names import dedupe_names, resolve_column
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from data_table_spark.core import DataTable  # noqa: E402
+from data_table_spark.inference import simplify_type  # noqa: E402
+from data_table_spark.names import dedupe_names, resolve_column  # noqa: E402
 
 # F1 employees fixture — mirror of test-data-table (tests/data-table.lisp:15-24)
 EMPLOYEE_COLS = ["first name", "last name", "job title", "number of hours", "id"]
@@ -482,82 +487,3 @@ def test_from_records_all_null_column_demotes_to_string(spark):
     t = DataTable.from_records(spark, [{"a": None, "b": 1}, {"a": None, "b": 2}])
     assert t.rows() == [[None, "1"], [None, "2"]]
     assert [str(x) for x in t.column_types] == ["StringType()", "StringType()"]
-
-
-# ---------------------------------------------------------------------------
-# facade batch: row-count hint, in-place formatting, fused guess+audit
-# ---------------------------------------------------------------------------
-
-
-def test_n_rows_hint_tracks_true_count(spark):
-    """The statically-known row count must equal df.count() through every
-    operation that carries it — a wrong hint would silently skip
-    _ensure_rows padding or mis-slice sub_table."""
-    from data_table_spark.core import DataTable
-
-    dt = DataTable.from_rows(
-        spark, [["a", "1"], ["b"], ["c", "3"]], ["x", "y"]
-    )
-
-    def check(t):
-        assert t._n_rows is not None
-        assert t._n_rows == t._df.count()
-
-    check(dt)
-    check(dt.select_columns(["y", "x"]))
-    check(dt.add_column("z", "q"))
-    check(dt.rename_column("x", "xx"))
-    check(dt.symbolize_column_names())
-    check(dt.sub_table(lri=1, uri=3))
-    check(dt.sub_table(lri=2))          # open upper bound
-    check(dt.sub_table(lri=9, uri=20))  # slice beyond the end -> 0 rows
-    check(dt.set_value("Z", row_idx=1, col="x"))
-    check(dt.set_value("Z", row_idx=7, col="x"))        # auto-extends to 8
-    check(dt.set_value(["p", "q"], col="y"))            # column list
-    check(dt.set_value(["p", "q", "r", "s", "t"], col="y"))  # extends to 5
-    check(dt._ensure_rows(10))
-    check(dt.coerce_types())
-    check(dt.format_for_output())
-    block = DataTable.from_rows(spark, [["X"], ["Y"]], ["a"])
-    check(dt.overlay_region(block, row_idx=2, col_idx=1))  # grows to 4 rows
-    check(dt.overlay_region(block, row_idx=0, col_idx=0))
-    # from_records and the empty table
-    check(DataTable.from_records(spark, [{"a": 1}, {"a": 2}]))
-    check(DataTable.from_rows(spark, [], ["a"]))
-
-
-def test_format_for_output_keeps_dense_row_ids(spark):
-    """In-place formatting must emit the same rows with the same _row_id
-    as the old orderBy + re-stamp form (ids are dense 0..n-1, so the
-    renumber it replaced was the identity)."""
-    from pyspark.sql import functions as F
-
-    from data_table_spark.core import ROW_ID, DataTable
-    from data_table_spark.functions.formatting import format_value
-    from data_table_spark.names import sql_name
-
-    dt = DataTable.from_rows(
-        spark,
-        [["1", "26.20"], ["2", None], ["3", "0.5"]],
-        ["id", "hours"],
-    ).coerce_types(infer_dates=False)
-    got = dt.format_for_output()
-    # old formulation: order by id, format, re-stamp a fresh dense id
-    plain = dt.ordered_df.orderBy(ROW_ID).select(*dt.column_names)
-    old = DataTable(
-        plain.select(*[
-            format_value(
-                F.col(sql_name(f.name)), f.dataType, dt.config.list_delimiter
-            ).alias(f.name)
-            for f in plain.schema.fields
-        ]),
-        config=dt.config,
-    )
-    # _row_id POSITION differs (the facade hides it and resolves by
-    # name); rows and ids must be identical
-    cols = [ROW_ID, *dt.column_names]
-    assert [
-        tuple(r) for r in got.ordered_df.select(*cols).orderBy(ROW_ID).collect()
-    ] == [
-        tuple(r) for r in old.ordered_df.select(*cols).orderBy(ROW_ID).collect()
-    ]

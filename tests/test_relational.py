@@ -1,29 +1,24 @@
-"""Relational gates (operators/relational.py): invariants and
-pure-Python replays the DuckDB oracle cannot state, and each rewritten
-plan pinned against its straightforward formulation."""
+"""Q01-Q32 hash-match the DuckDB oracle at sf0.01 (SURVEY §2.3)."""
 
 from __future__ import annotations
 
-import hashlib
-import math
-import os
-import re
-from collections import Counter, defaultdict
+import pytest
 
-from pyspark.sql import functions as F
+import sys, os
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as entry
-from data_table_spark.operators.relational import LR_SEATS, RELATIONAL_QUERIES
-from data_table_spark.sources.registry import load_table
-
-
-def _h32(s: str) -> int:
-    """The engines' shared md5-prefix hash (pipeline.hash_bucket core)."""
-    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
+from data_table_spark.operators.relational import (  # noqa: E402
+    RELATIONAL_ORACLE,
+    RELATIONAL_QUERIES,
+)
+from tests.oracle_util import compare_to_oracle  # noqa: E402
 
 
-def _rows(df, order_cols):
-    return [tuple(r) for r in df.orderBy(*order_cols).collect()]
+@pytest.mark.parametrize("name", sorted(RELATIONAL_ORACLE))
+def test_oracle_match(name, spark, sf_dir, duck):
+    df = RELATIONAL_QUERIES[name](spark, sf_dir)
+    ok, msg = compare_to_oracle(df, duck, RELATIONAL_ORACLE[name])
+    assert ok, f"{name}: {msg}"
 
 
 def test_json_extract_paths_agree(spark, sf_dir):
@@ -72,1379 +67,3 @@ def test_pagerank_mass_conservation(spark, sf_dir):
     slack = 3 * (n_edges_bound + len(rows)) * 10**6
     assert 10**12 - slack <= total <= 10**12
     assert all(r["rank_e12"] > 0 for r in rows)
-
-
-def test_pvm_bridge_is_additive(spark, sf_smoke):
-    """q157: volume + price effects must reconstruct the revenue delta
-    EXACTLY on every row — the residual definition makes the bridge
-    additive by construction; this pins that no row escapes it."""
-    rows = RELATIONAL_QUERIES["q157_price_volume_mix"](
-        spark, sf_smoke
-    ).collect()
-    assert rows
-    for r in rows:
-        assert (
-            r["volume_effect_cents"] + r["price_effect_cents"]
-            == r["rev1_cents"] - r["rev0_cents"]
-        ), r
-
-
-def test_window_funnel_matches_bruteforce(spark, sf_smoke):
-    """q154 levels equal a per-user python recompute of the documented
-    semantics (first-view anchor, earliest-next-step chain, 24h cap)."""
-    ev = (
-        load_table(spark, "events", sf_smoke)
-        .select("user_id", "event_type", "ts")
-        .collect()
-    )
-    by_user: dict = {}
-    for r in ev:
-        by_user.setdefault(r["user_id"], []).append((r["ts"], r["event_type"]))
-    exp: dict = {}
-    for u, rows in by_user.items():
-        t1 = min((t for t, k in rows if k == "view"), default=None)
-        t2 = (
-            min((t for t, k in rows if k == "click" and t > t1), default=None)
-            if t1 else None
-        )
-        t3 = (
-            min((t for t, k in rows if k == "purchase" and t > t2), default=None)
-            if t2 else None
-        )
-        lim = t1 and (t1 + __import__("datetime").timedelta(hours=24))
-        if t3 and t3 <= lim:
-            lv = 3
-        elif t2 and t2 <= lim:
-            lv = 2
-        elif t1:
-            lv = 1
-        else:
-            lv = 0
-        exp[lv] = exp.get(lv, 0) + 1
-    got = {
-        r["level"]: r["n_users"]
-        for r in RELATIONAL_QUERIES["q154_window_funnel"](
-            spark, sf_smoke
-        ).collect()
-    }
-    assert got == exp
-
-
-def test_new_vs_returning_accounting(spark, sf_smoke):
-    """q158: every user is new exactly once, so sum(new) == distinct
-    users, and per-day new+returning == that day's distinct actives."""
-    out = RELATIONAL_QUERIES["q158_new_vs_returning"](spark, sf_smoke)
-    rows = out.collect()
-    ev = load_table(spark, "events", sf_smoke)
-    n_users = ev.select("user_id").distinct().count()
-    assert sum(r["new_users"] for r in rows) == n_users
-    per_day = {
-        r["day"]: r["cnt"]
-        for r in ev.select(
-            F.to_date("ts").cast("string").alias("day"), "user_id"
-        )
-        .distinct()
-        .groupBy("day")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
-    for r in rows:
-        assert r["new_users"] + r["returning_users"] == per_day[r["day"]]
-
-
-def test_geo_radius_join_matches_bruteforce(spark, sf_dir):
-    """q162: the cell-bucketed join must find EXACTLY the brute-force
-    all-pairs-within-radius set (completeness: the 3x3 neighborhood
-    covers the radius; soundness: the haversine verify). Runs at sf0.01
-    - the sf0.001 customer set is too sparse for any pair inside 10 km
-    (zero-row degeneracy)."""
-    import math
-
-    rows = RELATIONAL_QUERIES["q162_geo_radius_join"](
-        spark, sf_dir
-    ).collect()
-    got = {(r["a"], r["b"]) for r in rows}
-
-    ids = [
-        r["c_custkey"]
-        for r in load_table(spark, "customer", sf_dir)
-        .select("c_custkey").collect()
-    ]
-
-    def pt(k):
-        la = 45.0 + 5.0 * ((k * 2654435761) % (1 << 31)) / float(1 << 31)
-        lo = 0.0 + 10.0 * (((k + 7) * 2246822519) % (1 << 31)) / float(1 << 31)
-        return la, lo
-
-    def hav(p, q):
-        r = math.pi / 180.0
-        dla, dlo = (q[0] - p[0]) * r / 2, (q[1] - p[1]) * r / 2
-        x = (
-            math.sin(dla) ** 2
-            + math.cos(p[0] * r) * math.cos(q[0] * r) * math.sin(dlo) ** 2
-        )
-        return 2.0 * 6371000.0 * math.asin(math.sqrt(x))
-
-    pts = {k: pt(k) for k in ids}
-    exp = {
-        (a, b)
-        for i, a in enumerate(ids)
-        for b in ids[i + 1:]
-        if math.floor(hav(pts[min(a, b)], pts[max(a, b)])) <= 10000
-        for a, b in [(min(a, b), max(a, b))]
-    }
-    assert got == exp and got
-
-
-def test_gini_by_region_bounds_and_global_consistency(spark, sf_smoke):
-    """q165: every region's Gini lies in [0, 1e6) and regions with more
-    unequal revenue must not be NEGATIVE; totals reconcile with orders."""
-    rows = RELATIONAL_QUERIES["q165_gini_by_region"](spark, sf_smoke).collect()
-    assert rows
-    total = sum(r["total_cents"] for r in rows)
-    orders = load_table(spark, "orders", sf_smoke)
-    exp = orders.select(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("s")
-    ).collect()[0]["s"]
-    assert total == exp
-    for r in rows:
-        assert 0 <= r["gini_e6"] < 1_000_000, r
-
-
-def test_repeat_purchase_interval_monotone(spark, sf_smoke):
-    """q164: p50 <= p90 per segment, and gap counts equal orders minus
-    first-orders (every non-first order contributes one gap)."""
-    rows = RELATIONAL_QUERIES["q164_repeat_purchase_interval"](
-        spark, sf_smoke
-    ).collect()
-    assert rows
-    for r in rows:
-        assert r["p50_days"] <= r["p90_days"], r
-    o = load_table(spark, "orders", sf_smoke)
-    c = load_table(spark, "customer", sf_smoke)
-    n_orders = o.count()
-    n_buyers = o.select("o_custkey").distinct().count()
-    assert sum(r["n_gaps"] for r in rows) == n_orders - n_buyers
-
-
-# --------------------------------------------------------------------------
-# ANOVA F
-# --------------------------------------------------------------------------
-
-
-def test_anova_f_matches_python_replay(spark, sf_smoke):
-    """k/n/ssb/ssw/f_e6 equal a NumPy-free Python recompute with the
-    same per-group term floors — pins the decomposition and the
-    floor placement (term-level, before the k-row sums)."""
-    from data_table_spark.operators.relational import RELATIONAL_QUERIES
-
-    c = load_table(spark, "customer", sf_smoke).select(
-        "c_mktsegment", F.round(F.col("c_acctbal") * 100).cast("long").alias("x")
-    ).collect()
-    groups: dict[str, list[int]] = {}
-    for r in c:
-        groups.setdefault(r["c_mktsegment"], []).append(r["x"])
-    nn = sum(len(v) for v in groups.values())
-    ss = sum(sum(v) for v in groups.values())
-    m = ss / nn
-    ssw = sum(
-        math.floor(
-            float(sum(x * x for x in v)) - float(sum(v)) * sum(v) / len(v)
-        )
-        for v in groups.values()
-    )
-    ssb = sum(
-        math.floor(len(v) * (sum(v) / len(v) - m) * (sum(v) / len(v) - m))
-        for v in groups.values()
-    )
-    k = len(groups)
-    f_e6 = math.floor(1_000_000 * (ssb / (k - 1)) / (ssw / (nn - k)))
-    row = RELATIONAL_QUERIES["q171_anova_f"](spark, sf_smoke).collect()[0]
-    assert (row["k"], row["n"], row["ssb"], row["ssw"], row["f_e6"]) == (
-        k, nn, ssb, ssw, f_e6
-    )
-
-
-# --------------------------------------------------------------------------
-# Bloom prefilter
-# --------------------------------------------------------------------------
-
-
-def test_bloom_no_false_negatives_and_exact_replay(spark, sf_smoke, sf_dir):
-    """The Bloom guarantee (every true match is a candidate) holds at
-    both sfs, and all five counts equal a Python bitset replay."""
-    from data_table_spark.operators.relational import (
-        BLOOM_M,
-        BLOOM_SEGMENT,
-        RELATIONAL_QUERIES,
-    )
-
-    for sf in (sf_smoke, sf_dir):
-        keys = {
-            r["c_custkey"]
-            for r in load_table(spark, "customer", sf)
-            .where(F.col("c_mktsegment") == BLOOM_SEGMENT)
-            .collect()
-        }
-        bits = {
-            _h32(f"bloom{i}:{k}") % BLOOM_M for k in keys for i in (0, 1)
-        }
-        probe = [
-            r["o_custkey"]
-            for r in load_table(spark, "orders", sf).select("o_custkey").collect()
-        ]
-        cand = [
-            p for p in probe
-            if _h32(f"bloom0:{p}") % BLOOM_M in bits
-            and _h32(f"bloom1:{p}") % BLOOM_M in bits
-        ]
-        true = [p for p in probe if p in keys]
-        row = RELATIONAL_QUERIES["q172_bloom_prefilter"](spark, sf).collect()[0]
-        assert row["n_false_neg"] == 0
-        assert (
-            row["n_probe"], row["n_candidates"], row["n_true"],
-            row["n_false_pos"],
-        ) == (
-            len(probe), len(cand), len(true),
-            len([p for p in cand if p not in keys]),
-        )
-        assert row["n_false_pos"] > 0, "filter sizing degenerate: no FPs"
-
-
-# --------------------------------------------------------------------------
-# second-order paths
-# --------------------------------------------------------------------------
-
-
-def test_second_order_paths_probabilities_partition(spark, sf_smoke):
-    """Per (a, b) context the floored conditional probabilities sum to
-    within #branches of 1e6 (floor loss only) and counts partition the
-    context total exactly."""
-    from data_table_spark.operators.relational import RELATIONAL_QUERIES
-
-    rows = RELATIONAL_QUERIES["q173_second_order_paths"](
-        spark, sf_smoke
-    ).collect()
-    assert rows
-    ctx: dict = {}
-    for r in rows:
-        ctx.setdefault((r["a"], r["b"]), []).append((r["n"], r["p_e6"]))
-    for (a, b), branches in ctx.items():
-        tot = sum(n for n, _ in branches)
-        psum = sum(p for _, p in branches)
-        assert 1_000_000 - len(branches) < psum <= 1_000_000, (a, b)
-        for n, p in branches:
-            assert p == (1_000_000 * n) // tot, (a, b, n)
-
-
-# --------------------------------------------------------------------------
-# moving median
-# --------------------------------------------------------------------------
-
-
-def test_moving_median_matches_python_replay(spark, sf_smoke):
-    """Every (region, day) med2 equals the sum of the two middle order
-    statistics of the trailing-7-day daily revenues, recomputed in
-    Python from the raw tables."""
-    from data_table_spark.operators.relational import RELATIONAL_QUERIES
-
-    o = load_table(spark, "orders", sf_smoke).collect()
-    c = {r["c_custkey"]: r["c_nationkey"]
-         for r in load_table(spark, "customer", sf_smoke).collect()}
-    n = {r["n_nationkey"]: r["n_regionkey"]
-         for r in load_table(spark, "nation", sf_smoke).collect()}
-    reg = {r["r_regionkey"]: r["r_name"]
-           for r in load_table(spark, "region", sf_smoke).collect()}
-    daily: dict = {}
-    for r in o:
-        region = reg[n[c[r["o_custkey"]]]]
-        day = r["o_orderdate"].date()
-        cents = round(r["o_totalprice"] * 100)
-        daily[(region, day)] = daily.get((region, day), 0) + cents
-    got = RELATIONAL_QUERIES["q174_moving_median"](
-        spark, sf_smoke
-    ).collect()
-    assert len(got) == len(daily)
-    import datetime
-
-    for r in got:
-        vals = sorted(
-            v for (rg, d), v in daily.items()
-            if rg == r["region"]
-            and datetime.timedelta(0) <= r["day"] - d <= datetime.timedelta(6)
-        )
-        k = len(vals)
-        exp = vals[(k + 1) // 2 - 1] + vals[k // 2]
-        assert (r["n_in_window"], r["med2_cents"]) == (k, exp), r
-
-
-# --------------------------------------------------------------------------
-# hour entropy
-# --------------------------------------------------------------------------
-
-
-def test_hour_entropy_matches_python_replay(spark, sf_smoke):
-    """Per-type entropy, peak hour, and shares equal a Python replay
-    with identical term floors, and entropy sits in [0, ln 24]."""
-    from data_table_spark.operators.relational import RELATIONAL_QUERIES
-
-    ev = load_table(spark, "events", sf_smoke).select(
-        "event_type", F.hour("ts").alias("h")
-    ).collect()
-    cnt: dict = {}
-    for r in ev:
-        d = cnt.setdefault(r["event_type"], {})
-        d[r["h"]] = d.get(r["h"], 0) + 1
-    got = {
-        r["event_type"]: r
-        for r in RELATIONAL_QUERIES["q175_hour_entropy"](
-            spark, sf_smoke
-        ).collect()
-    }
-    assert set(got) == set(cnt)
-    for et, d in cnt.items():
-        t = sum(d.values())
-        ent = sum(
-            math.floor(1_000_000.0 * (-(c / t) * math.log(c / t)))
-            for c in d.values()
-        )
-        peak_c = max(d.values())
-        peak_h = min(h for h, c in d.items() if c == peak_c)
-        r = got[et]
-        assert (
-            r["n_events"], r["n_hours_used"], r["entropy_e6"],
-            r["peak_hour"], r["peak_share_e6"],
-        ) == (t, len(d), ent, peak_h, (1_000_000 * peak_c) // t), et
-        assert -1 <= r["entropy_e6"] <= math.ceil(math.log(24) * 1e6)
-
-
-# --------------------------------------------------------------------------
-# Lorenz deciles
-# --------------------------------------------------------------------------
-
-
-def test_lorenz_deciles_invariants_and_replay(spark, sf_smoke):
-    """Deciles partition the customer base (sizes within 1 of N/10),
-    cum_share is non-decreasing and ends at exactly 1e6, and every row
-    equals a Python replay including zero-spend customers."""
-    from data_table_spark.operators.relational import RELATIONAL_QUERIES
-
-    orders = load_table(spark, "orders", sf_smoke).collect()
-    cust = [r["c_custkey"]
-            for r in load_table(spark, "customer", sf_smoke).collect()]
-    sp = {c: 0 for c in cust}
-    for r in orders:
-        sp[r["o_custkey"]] = sp.get(r["o_custkey"], 0) + round(
-            r["o_totalprice"] * 100
-        )
-    ranked = sorted((v, c) for c, v in sp.items())
-    n = len(ranked)
-    dec: dict[int, list[int]] = {}
-    for i, (v, _) in enumerate(ranked):
-        dec.setdefault(i * 10 // n, []).append(v)
-    tot = sum(v for v, _ in ranked)
-    got = RELATIONAL_QUERIES["q176_lorenz_deciles"](
-        spark, sf_smoke
-    ).orderBy("decile").collect()
-    assert [r["decile"] for r in got] == sorted(dec)
-    cum = 0
-    prev_share = -1
-    for r in got:
-        vals = dec[r["decile"]]
-        cum += sum(vals)
-        assert (r["n_cust"], r["rev_cents"]) == (len(vals), sum(vals))
-        assert r["cum_share_e6"] == (1_000_000 * cum) // tot
-        assert r["cum_share_e6"] >= prev_share
-        prev_share = r["cum_share_e6"]
-        assert abs(r["n_cust"] - n / 10) <= 1
-    assert got[-1]["cum_share_e6"] == 1_000_000
-
-
-# --------------------------------------------------------------------------
-# Bollinger breaches
-# --------------------------------------------------------------------------
-
-
-def test_bollinger_matches_python_replay(spark, sf_smoke):
-    """Breach counts equal a Python replay of the integer band rule
-    over trailing-7-day (current-excluded) daily revenue windows."""
-    from data_table_spark.operators.relational import RELATIONAL_QUERIES
-
-    o = load_table(spark, "orders", sf_smoke).collect()
-    c = {r["c_custkey"]: r["c_nationkey"]
-         for r in load_table(spark, "customer", sf_smoke).collect()}
-    n = {r["n_nationkey"]: r["n_regionkey"]
-         for r in load_table(spark, "nation", sf_smoke).collect()}
-    reg = {r["r_regionkey"]: r["r_name"]
-           for r in load_table(spark, "region", sf_smoke).collect()}
-    daily: dict = {}
-    for r in o:
-        key = (reg[n[c[r["o_custkey"]]]], r["o_orderdate"].date())
-        daily[key] = daily.get(key, 0) + round(r["o_totalprice"] * 100)
-    exp: dict = {}
-    for (rg, day), x in daily.items():
-        trail = [
-            v for (rg2, d2), v in daily.items()
-            if rg2 == rg and 1 <= (day - d2).days <= 7
-        ]
-        nn = len(trail)
-        if nn < 3:
-            continue
-        s, q = sum(trail), sum(v * v for v in trail)
-        d = x * nn - s
-        breach = d * d > 4 * (nn * q - s * s)
-        t = exp.setdefault(rg, [0, 0, 0])
-        t[0] += 1
-        if breach and d > 0:
-            t[1] += 1
-        if breach and d < 0:
-            t[2] += 1
-    got = RELATIONAL_QUERIES["q177_bollinger_breaches"](
-        spark, sf_smoke
-    ).collect()
-    assert len(got) == len(exp)
-    for r in got:
-        assert (
-            r["n_days_judged"], r["n_upper_breaches"], r["n_lower_breaches"]
-        ) == tuple(exp[r["region"]]), r["region"]
-
-
-# --------------------------------------------------------------------------
-# OHLC bars
-# --------------------------------------------------------------------------
-
-
-def test_ohlc_matches_python_replay(spark, sf_smoke):
-    """Bars equal a per-(type, day) Python fold ordered by (ts,
-    event_id) — pins the argmin/argmax key construction and cents."""
-    ev = load_table(spark, "events", sf_smoke).select(
-        "event_id", "ts", "event_type", "value"
-    )
-    bars: dict[tuple, list] = {}
-    for r in sorted(
-        ev.collect(), key=lambda r: (r["ts"], r["event_id"])
-    ):
-        k = (r["event_type"], r["ts"].date())
-        v = round(r["value"] * 100)
-        if k not in bars:
-            bars[k] = [v, v, v, v, 0]  # open, high, low, close, n
-        b = bars[k]
-        b[1] = max(b[1], v)
-        b[2] = min(b[2], v)
-        b[3] = v
-        b[4] += 1
-    got = {
-        (r["event_type"], r["day"]): [
-            r["open_c"], r["high_c"], r["low_c"], r["close_c"], r["n_events"]
-        ]
-        for r in RELATIONAL_QUERIES["q186_ohlc_bars"](
-            spark, sf_smoke
-        ).collect()
-    }
-    assert got == {k: list(v) for k, v in bars.items()}
-
-
-# --------------------------------------------------------------------------
-# Kendall tau
-# --------------------------------------------------------------------------
-
-
-def test_kendall_tau_matches_python_replay(spark, sf_smoke):
-    """Pair counts and tau_b equal the O(D²) Python recompute."""
-    ev = load_table(spark, "events", sf_smoke).select("ts", "value")
-    daily: dict = defaultdict(lambda: [0, 0])
-    for r in ev.collect():
-        d = daily[r["ts"].date()]
-        d[0] += 1
-        d[1] += round(r["value"] * 100)
-    days = sorted(daily)
-    nc = nd = n1 = n2 = 0
-    for i in range(len(days)):
-        for j in range(i + 1, len(days)):
-            cx = (daily[days[j]][0] > daily[days[i]][0]) - (
-                daily[days[j]][0] < daily[days[i]][0]
-            )
-            cy = (daily[days[j]][1] > daily[days[i]][1]) - (
-                daily[days[j]][1] < daily[days[i]][1]
-            )
-            nc += cx * cy > 0
-            nd += cx * cy < 0
-            n1 += cx == 0
-            n2 += cy == 0
-    n0 = len(days) * (len(days) - 1) // 2
-    r = RELATIONAL_QUERIES["q188_kendall_tau"](spark, sf_smoke).collect()[0]
-    assert (
-        r["n_pairs"], r["concordant"], r["discordant"],
-        r["ties_x"], r["ties_y"],
-    ) == (n0, nc, nd, n1, n2)
-    tau = (nc - nd) / math.sqrt((n0 - n1) * (n0 - n2))
-    assert r["tau_b_e6"] == math.floor(1_000_000 * tau)
-
-
-# --------------------------------------------------------------------------
-# Cramér's V
-# --------------------------------------------------------------------------
-
-
-def test_cramers_v_bounds_and_chi2_consistency(spark, sf_smoke):
-    """V ∈ [0, 1] and reproduces from the returned χ² and marginal
-    dimensions by the published formula (one double sqrt)."""
-    r = RELATIONAL_QUERIES["q187_cramers_v"](spark, sf_smoke).collect()[0]
-    assert 0 <= r["cramers_v_e6"] <= 1_000_000
-    v = math.sqrt(
-        (r["chi2_e6"] / 1e6)
-        / (r["n"] * min(r["n_rows_cat"] - 1, r["n_cols_cat"] - 1))
-    )
-    assert r["cramers_v_e6"] == math.floor(1_000_000 * v)
-
-
-# --------------------------------------------------------------------------
-# TPC-H completion shapes — the share/threshold algebra the hash
-# oracle proves by value; these pin the CROSS-ENGINE-INDEPENDENT facts
-# --------------------------------------------------------------------------
-
-
-def test_q180_threshold_is_exact_partition(spark, sf_smoke):
-    """Returned parts are EXACTLY those whose value crosses the global
-    0.1% line — recomputed from an independent full per-part scan."""
-    li = load_table(spark, "lineitem", sf_smoke)
-    per = {}
-    for r in li.collect():
-        u = round(r["l_extendedprice"] * 100) * (
-            100 - round(r["l_discount"] * 100)
-        )
-        per[r["l_partkey"]] = per.get(r["l_partkey"], 0) + u
-    total = sum(per.values())
-    exp = {k: v for k, v in per.items() if v * 1000 > total}
-    got = {
-        r["p_partkey"]: r["value_u"]
-        for r in RELATIONAL_QUERIES["q180_tpch_q11_important"](
-            spark, sf_smoke
-        ).collect()
-    }
-    assert got == exp
-
-
-def test_q182_ties_all_included(spark):
-    """Equal-revenue suppliers BOTH surface (exact-integer argmax —
-    planted tie via a 2-supplier, 2-line fixture)."""
-    import pandas as pd
-
-    spark_dir = None  # the gate reads parquet: build a tmp sf dir
-    import tempfile
-
-    spark_dir = tempfile.mkdtemp(prefix="q182_tie_")
-    li = pd.DataFrame(
-        {
-            "l_orderkey": [1, 2],
-            "l_partkey": [1, 1],
-            "l_suppkey": [7, 8],
-            "l_linenumber": [1, 1],
-            "l_quantity": [1.0, 1.0],
-            "l_extendedprice": [50.0, 50.0],
-            "l_discount": [0.0, 0.0],
-            "l_tax": [0.0, 0.0],
-            "l_returnflag": ["N", "N"],
-            "l_linestatus": ["O", "O"],
-            "l_shipdate": pd.to_datetime(["1998-02-01", "1998-02-02"]),
-        }
-    )
-    s = pd.DataFrame(
-        {
-            "s_suppkey": [7, 8],
-            "s_name": ["Supplier#7", "Supplier#8"],
-            "s_nationkey": [0, 1],
-            "s_acctbal": [0.0, 0.0],
-        }
-    )
-    spark.createDataFrame(li).write.mode("overwrite").parquet(
-        os.path.join(spark_dir, "lineitem.parquet")
-    )
-    spark.createDataFrame(s).write.mode("overwrite").parquet(
-        os.path.join(spark_dir, "supplier.parquet")
-    )
-    rows = RELATIONAL_QUERIES["q182_tpch_q15_top_supplier"](
-        spark, spark_dir
-    ).collect()
-    assert {(r["s_suppkey"], r["total_rev_u"]) for r in rows} == {
-        (7, 500000), (8, 500000)
-    }
-
-
-# --------------------------------------------------------------------------
-# tri-clause MERGE
-# --------------------------------------------------------------------------
-
-
-def test_merge_full_three_arms(spark):
-    """All three MERGE arms on a planted fixture: matched rows take
-    source values, source-only rows insert, base-only rows DELETE."""
-    from data_table_spark.operators.relational import merge_full
-
-    base = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)],
-        ["k", "status", "price"],
-    )
-    src = spark.createDataFrame(
-        [(2, "U", 99.0), (4, "I", 40.0)], ["k", "status", "price"]
-    )
-    got = {
-        (r["k"], r["status"], r["price"])
-        for r in merge_full(base, src, ["k"]).collect()
-    }
-    assert got == {(2, "U", 99.0), (4, "I", 40.0)}  # 1 and 3 deleted
-
-
-# --------------------------------------------------------------------------
-# subtree rollup
-# --------------------------------------------------------------------------
-
-
-def test_subtree_rollup_matches_python_walk(spark, sf_smoke):
-    """Counts and price mass equal an imperative parent-chain walk."""
-    p = load_table(spark, "part", sf_smoke).select(
-        "p_partkey", "p_retailprice"
-    )
-    size: dict[int, int] = defaultdict(int)
-    mass: dict[int, int] = defaultdict(int)
-    n_parts = 0
-    for r in p.collect():
-        n = r["p_partkey"]
-        c = round(r["p_retailprice"] * 100)
-        n_parts += 1
-        if n == 0:  # node 0 is its own 1-element chain (never reaches 1)
-            size[0] += 1
-            mass[0] += c
-            continue
-        a = n
-        while a >= 1:
-            if a <= 63:
-                size[a] += 1
-                mass[a] += c
-            if a == 1:
-                break
-            a //= 2
-    got = {
-        r["node"]: (r["subtree_size"], r["subtree_price_c"])
-        for r in RELATIONAL_QUERIES["q190_subtree_rollup"](
-            spark, sf_smoke
-        ).collect()
-    }
-    assert got == {k: (size[k], mass[k]) for k in size}
-    # the root's subtree is every part except the orphan node 0
-    assert got[1][0] == n_parts - 1
-    assert got[0] == (1, mass[0])
-
-
-# --------------------------------------------------------------------------
-# equi-depth histogram
-# --------------------------------------------------------------------------
-
-
-def test_equidepth_buckets_partition_and_balance(spark, sf_smoke):
-    """Buckets partition the rows, ranges are disjoint and ordered, and
-    every bucket holds ~n/8 rows up to value-atomic tie rounding (no
-    bucket more than the largest tie group off balance)."""
-    rows = RELATIONAL_QUERIES["q192_equidepth_histogram"](
-        spark, sf_smoke
-    ).collect()
-    o = load_table(spark, "orders", sf_smoke).select("o_totalprice").collect()
-    vals = sorted(round(r["o_totalprice"] * 100) for r in o)
-    n = len(vals)
-    assert sum(r["n_rows"] for r in rows) == n
-    by_b = sorted(rows, key=lambda r: r["bucket"])
-    for a, b in zip(by_b, by_b[1:]):
-        assert a["hi_c"] < b["lo_c"]
-    # python replay of the value-atomic bucketing
-    from collections import Counter
-
-    cnt = Counter(vals)
-    cum = 0
-    exp: dict[int, int] = defaultdict(int)
-    for v in sorted(cnt):
-        cum += cnt[v]
-        exp[((cum - 1) * 8) // n] += cnt[v]
-    assert {r["bucket"]: r["n_rows"] for r in rows} == dict(exp)
-
-
-# --------------------------------------------------------------------------
-# q194 mode per key
-# --------------------------------------------------------------------------
-
-
-def test_mode_per_key_matches_python(spark, sf_smoke):
-    """Per-user mode replayed with a Counter; the tie rule (highest
-    count, then lexically smallest type) is exactly min((-cnt, type))."""
-    e = load_table(spark, "events", sf_smoke)
-    per: dict[int, Counter] = {}
-    for r in e.select("user_id", "event_type").collect():
-        per.setdefault(r["user_id"], Counter())[r["event_type"]] += 1
-    got = {
-        r["user_id"]: (
-            r["mode_type"], r["mode_cnt"], r["n_events"], r["n_types"]
-        )
-        for r in RELATIONAL_QUERIES["q194_mode_per_key"](
-            spark, sf_smoke
-        ).collect()
-    }
-    assert set(got) == set(per)
-    for uid, c in per.items():
-        mode = min(((-n, t) for t, n in c.items()))
-        assert got[uid] == (
-            mode[1], -mode[0], sum(c.values()), len(c)
-        ), uid
-
-
-# --------------------------------------------------------------------------
-# q195 lagged cross-correlation
-# --------------------------------------------------------------------------
-
-
-def test_crosscorr_python_replay(spark, sf_smoke):
-    """Exact integer centering + full-series normalization replayed in
-    arbitrary-precision Python; r_e6 must match the engine bit-for-bit
-    and lie in [-1e6, 1e6]."""
-    import math
-
-    e = load_table(spark, "events", sf_smoke)
-    daily: dict = {}
-    for r in e.select(
-        F.to_date("ts").alias("day"), "event_type",
-        F.round(F.col("value") * 100).cast("long").alias("v_c"),
-    ).collect():
-        cell = daily.setdefault(r["day"], [0, 0])
-        if r["event_type"] == "click":
-            cell[0] += r["v_c"]
-        elif r["event_type"] == "purchase":
-            cell[1] += r["v_c"]
-    n = len(daily)
-    sx = sum(v[0] for v in daily.values())
-    sy = sum(v[1] for v in daily.values())
-    a = {d: n * v[0] - sx for d, v in daily.items()}
-    b = {d: n * v[1] - sy for d, v in daily.items()}
-    va = sum(x * x for x in a.values())
-    vb = sum(x * x for x in b.values())
-    import datetime
-
-    got = {
-        r["lag"]: (r["n_overlap"], r["r_e6"])
-        for r in RELATIONAL_QUERIES["q195_crosscorr_daily"](
-            spark, sf_smoke
-        ).collect()
-    }
-    assert set(got) == set(range(-3, 4))
-    for lag in range(-3, 4):
-        num = 0
-        n_overlap = 0
-        for d, av in a.items():
-            d2 = d + datetime.timedelta(days=lag)
-            if d2 in b:
-                num += av * b[d2]
-                n_overlap += 1
-        exp = math.floor(
-            1_000_000.0 * float(num) / math.sqrt(float(va) * float(vb))
-        )
-        assert got[lag] == (n_overlap, exp), lag
-        assert -1_000_000 <= got[lag][1] <= 1_000_000
-
-
-# --------------------------------------------------------------------------
-# q196 gaps-and-islands streaks
-# --------------------------------------------------------------------------
-
-
-def test_streak_islands_python_replay(spark, sf_smoke):
-    """Per-user streak summary replayed by walking each user's sorted
-    distinct day set in Python; max_streak <= active_days and the
-    streak/day accounting is self-consistent."""
-    e = load_table(spark, "events", sf_smoke)
-    per: dict[int, set] = defaultdict(set)
-    for r in e.select("user_id", F.to_date("ts").alias("day")).collect():
-        per[r["user_id"]].add(r["day"])
-    want = {}
-    for uid, days in per.items():
-        sd = sorted(days)
-        runs, cur = [], 1
-        for a, b in zip(sd, sd[1:]):
-            if (b - a).days == 1:
-                cur += 1
-            else:
-                runs.append(cur)
-                cur = 1
-        runs.append(cur)
-        want[uid] = (len(sd), len(runs), max(runs))
-    got = {
-        r["user_id"]: (r["active_days"], r["n_streaks"], r["max_streak"])
-        for r in RELATIONAL_QUERIES["q196_streak_islands"](
-            spark, sf_smoke
-        ).collect()
-    }
-    assert got == want
-    for ad, ns, mx in got.values():
-        assert mx <= ad and ns >= 1 and mx >= 1
-        assert ad >= ns  # every streak holds >= 1 day
-
-
-# --------------------------------------------------------------------------
-# q197 largest-remainder apportionment
-# --------------------------------------------------------------------------
-
-
-def test_largest_remainder_exact_total_and_quota(spark, sf_smoke):
-    """Seats sum EXACTLY to LR_SEATS (the property naive rounding
-    breaks), and every source's allocation satisfies the quota rule:
-    floor(n*S/N) <= seats <= ceil(n*S/N)."""
-    rows = RELATIONAL_QUERIES["q197_largest_remainder"](
-        spark, sf_smoke
-    ).collect()
-    total = sum(r["n_docs"] for r in rows)
-    assert sum(r["seats"] for r in rows) == LR_SEATS
-    for r in rows:
-        lo = r["n_docs"] * LR_SEATS // total
-        hi = -((-r["n_docs"] * LR_SEATS) // total)
-        assert lo <= r["seats"] <= hi, r
-
-
-def test_largest_remainder_python_replay(spark, sf_smoke):
-    """Full Hamilton replay: base + one extra seat for the LARGEST
-    remainders, ties broken lexically by source."""
-    d = load_table(spark, "documents", sf_smoke)
-    counts = Counter(
-        r["source"] for r in d.select("source").collect()
-    )
-    total = sum(counts.values())
-    base = {s: n * LR_SEATS // total for s, n in counts.items()}
-    rem = {s: (n * LR_SEATS) % total for s, n in counts.items()}
-    leftover = LR_SEATS - sum(base.values())
-    order = sorted(counts, key=lambda s: (-rem[s], s))
-    want = {
-        s: base[s] + (1 if i < leftover else 0)
-        for i, s in enumerate(order)
-    }
-    got = {
-        r["source"]: r["seats"]
-        for r in RELATIONAL_QUERIES["q197_largest_remainder"](
-            spark, sf_smoke
-        ).collect()
-    }
-    assert got == want
-
-
-# --------------------------------------------------------------------------
-# q198 degree assortativity
-# --------------------------------------------------------------------------
-
-
-def test_degree_assortativity_python_replay(spark, sf_smoke):
-    """Newman r replayed in arbitrary-precision Python ints over the
-    co-purchase edges; r_e6 matches bit-for-bit and lies in
-    [-1e6, 1e6]."""
-    li = load_table(spark, "lineitem", sf_smoke)
-    per_order: dict[int, set] = defaultdict(set)
-    for r in li.select("l_orderkey", "l_partkey").collect():
-        per_order[r["l_orderkey"]].add(r["l_partkey"])
-    edges = set()
-    for parts in per_order.values():
-        ps = sorted(parts)
-        for i, a in enumerate(ps):
-            for b in ps[i + 1 :]:
-                edges.add((a, b))
-    deg = Counter()
-    for a, b in edges:
-        deg[a] += 1
-        deg[b] += 1
-    m = 2 * len(edges)
-    sxy = sum(2 * deg[a] * deg[b] for a, b in edges)
-    sx = sum(deg[a] + deg[b] for a, b in edges)
-    sx2 = sum(deg[a] ** 2 + deg[b] ** 2 for a, b in edges)
-    num = m * sxy - sx * sx
-    var = m * sx2 - sx * sx
-    exp = math.floor(1_000_000.0 * float(num) / math.sqrt(float(var) * float(var)))
-    (row,) = RELATIONAL_QUERIES["q198_degree_assortativity"](
-        spark, sf_smoke
-    ).collect()
-    assert row["m_directed"] == m
-    assert row["r_e6"] == exp
-    assert -1_000_000 <= row["r_e6"] <= 1_000_000
-
-
-def test_cohens_kappa_python_replay(spark, sf_smoke):
-    """Kappa replayed from the raw rater rules; kappa_e6 in
-    [-1e6, 1e6] and the exact rational matches."""
-    d = load_table(spark, "documents", sf_smoke)
-    cells = Counter()
-    for r in d.select("n_chars", "text").collect():
-        ra = 0 if r["n_chars"] < 200 else (1 if r["n_chars"] < 400 else 2)
-        nt = len([w for w in re.split(r"\s+", r["text"].lower().strip()) if w])
-        rb = 0 if nt < 40 else (1 if nt < 80 else 2)
-        cells[(ra, rb)] += 1
-    n = sum(cells.values())
-    diag = sum(v for (a, b), v in cells.items() if a == b)
-    rows_ = Counter()
-    cols_ = Counter()
-    for (a, b), v in cells.items():
-        rows_[a] += v
-        cols_[b] += v
-    pe = sum(rows_[k] * cols_[k] for k in set(rows_) | set(cols_))
-    exp = math.floor(1_000_000.0 * float(n * diag - pe) / float(n * n - pe))
-    (row,) = RELATIONAL_QUERIES["q199_cohens_kappa"](
-        spark, sf_smoke
-    ).collect()
-    assert (row["n_docs"], row["diag"], row["pe_num"]) == (n, diag, pe)
-    assert row["kappa_e6"] == exp
-    assert -1_000_000 <= row["kappa_e6"] <= 1_000_000
-
-
-def test_parameterized_sql(spark, sf_smoke):
-    """spark.sql named/positional parameter binding (the injection-safe
-    SQL surface): parameterized and literal forms agree."""
-    load_table(spark, "orders", sf_smoke).createOrReplaceTempView(
-        "orders_param"
-    )
-    named = spark.sql(
-        "SELECT COUNT(*) AS n FROM orders_param "
-        "WHERE o_totalprice > :lo AND o_orderstatus = :st",
-        args={"lo": 1000.0, "st": "O"},
-    ).collect()[0]["n"]
-    positional = spark.sql(
-        "SELECT COUNT(*) AS n FROM orders_param "
-        "WHERE o_totalprice > ? AND o_orderstatus = ?",
-        args=[1000.0, "O"],
-    ).collect()[0]["n"]
-    literal = spark.sql(
-        "SELECT COUNT(*) AS n FROM orders_param "
-        "WHERE o_totalprice > 1000.0 AND o_orderstatus = 'O'"
-    ).collect()[0]["n"]
-    assert named == positional == literal > 0
-
-
-def test_business_days_matches_numpy_busday(spark, sf_smoke):
-    """The closed-form g(d2)−g(d1) equals numpy's busday_count (the
-    independent calendar authority) for every (order, ship) pair —
-    weekends excluded exactly, sign preserved when shipping precedes
-    ordering."""
-    import numpy as np
-
-    li = load_table(spark, "lineitem", sf_smoke).select(
-        "l_orderkey", "l_shipdate"
-    )
-    o = load_table(spark, "orders", sf_smoke).select(
-        "o_orderkey", "o_orderdate"
-    )
-    pairs = [
-        (r["o_orderdate"], r["l_shipdate"])
-        for r in li.join(
-            o, li["l_orderkey"] == o["o_orderkey"]
-        ).collect()
-    ]
-    one = np.timedelta64(1, "D")
-    want = Counter()
-    for d1, d2 in pairs:
-        a = np.datetime64(str(d1)[:10])
-        b = np.datetime64(str(d2)[:10])
-        # g-diff counts the SIGNED business days in the half-open
-        # interval (d1, d2]; numpy's reversed-argument convention
-        # differs by one, so negate an explicit forward count instead
-        if b >= a:
-            n = int(np.busday_count(a + one, b + one))
-        else:
-            n = -int(np.busday_count(b + one, a + one))
-        want[n] += 1
-    got = {
-        r["bdays"]: r["n_lines"]
-        for r in RELATIONAL_QUERIES["q201_business_days"](
-            spark, sf_smoke
-        ).collect()
-    }
-    assert got == dict(want)
-
-
-def test_mase_python_replay(spark, sf_smoke):
-    """MASE replayed from the raw daily series in exact ints + one
-    float op; the lag-7 error sum skips the first 7 days exactly."""
-    o = load_table(spark, "orders", sf_smoke)
-    daily: dict = defaultdict(int)
-    for r in o.select(
-        F.to_date("o_orderdate").alias("day"),
-        F.floor(F.col("o_totalprice") * 100).cast("long").alias("c"),
-    ).collect():
-        daily[r["day"]] += r["c"]
-    days = sorted(daily)
-    xs = [daily[d] for d in days]
-    n = len(xs)
-    s7 = sum(abs(xs[i] - xs[i - 7]) for i in range(7, n))
-    s1 = sum(abs(xs[i] - xs[i - 1]) for i in range(1, n))
-    exp = math.floor(
-        1_000_000.0 * float(s7 * (n - 1)) / float(s1 * (n - 7))
-    )
-    (row,) = RELATIONAL_QUERIES["q204_mase_forecast_error"](
-        spark, sf_smoke
-    ).collect()
-    assert (row["n_days"], row["sum_err7"], row["sum_err1"]) == (n, s7, s1)
-    assert row["mase_e6"] == exp
-
-
-def test_gini_split_python_replay(spark, sf_smoke):
-    """Weighted Gini replayed with exact Fractions; each side's
-    impurity sits in [0, 1 − 1/k], and the emitted closed form equals
-    the textbook (nL/n)·giniL + (nR/n)·giniR."""
-    from fractions import Fraction
-
-    from data_table_spark.operators.relational import GINI_THRESHOLDS
-
-    o = load_table(spark, "orders", sf_smoke)
-    rows = [
-        (r["c"], r["cls"])
-        for r in o.select(
-            F.floor(F.col("o_totalprice") * 100).cast("long").alias("c"),
-            F.col("o_orderstatus").alias("cls"),
-        ).collect()
-    ]
-    want = {}
-    for thr in GINI_THRESHOLDS:
-        left = Counter(cls for c, cls in rows if c <= thr)
-        right = Counter(cls for c, cls in rows if c > thr)
-        nl, nr = sum(left.values()), sum(right.values())
-
-        def gini(cnt, n):
-            return 1 - sum(Fraction(v, n) ** 2 for v in cnt.values())
-
-        w = Fraction(nl, nl + nr) * gini(left, nl) + Fraction(
-            nr, nl + nr
-        ) * gini(right, nr)
-        want[thr] = (nl, nr, math.floor(1_000_000.0 * float(w)))
-    got = {
-        r["thr"]: (r["n_left"], r["n_right"], r["weighted_gini_e6"])
-        for r in RELATIONAL_QUERIES["q205_gini_split_scores"](
-            spark, sf_smoke
-        ).collect()
-    }
-    assert got == want
-    for nl, nr, g in got.values():
-        assert 0 <= g <= 1_000_000
-
-
-def test_q193_matches_interval_frame_window(spark, sf_smoke):
-    """The probe/prefix-sum form must equal the literal INTERVAL-typed
-    RANGE frame window (`RANGE BETWEEN INTERVAL 7 DAYS PRECEDING AND
-    CURRENT ROW` over raw timestamps) row for row — this is also the
-    test that keeps the INTERVAL-frame SQL surface exercised now that
-    the gate itself runs the O(rows) plan."""
-    e = load_table(spark, "events", sf_smoke).select(
-        "event_id", "event_type", "ts",
-        F.round(F.col("value") * 100).cast("long").alias("v_c"),
-    )
-    roll = F.expr(
-        "SUM(v_c) OVER (PARTITION BY event_type ORDER BY ts "
-        "RANGE BETWEEN INTERVAL 7 DAYS PRECEDING AND CURRENT ROW)"
-    )
-    reference = (
-        e.select(
-            "event_id", "event_type", roll.cast("long").alias("roll7d_c")
-        )
-        .orderBy(F.col("roll7d_c").desc(), F.col("event_id"))
-        .limit(20)
-    )
-    got = entry.queries()["q193_interval_range_frame"](spark, sf_smoke)
-    assert _rows(got, ["event_id"]) == _rows(reference, ["event_id"])
-
-
-def test_q193_boundary_tie_semantics(spark):
-    """RANGE-frame edge cases the rewrite must preserve: rows exactly
-    7 days apart are IN each other's trailing frame (inclusive
-    PRECEDING bound), and ties in ts all share the same frame total."""
-    rows = [
-        # (event_id, event_type, ts, value)
-        (1, "t", "2024-01-01 00:00:00", 1.0),
-        (2, "t", "2024-01-08 00:00:00", 2.0),   # exactly 7d after id 1
-        (3, "t", "2024-01-08 00:00:00", 4.0),   # tie with id 2
-        (4, "t", "2024-01-15 00:00:00.000001", 8.0),  # 7d+1µs after 2/3
-        (5, "u", "2024-01-08 00:00:00", 16.0),  # other partition
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, event_type string, ts string, value double"
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    df.createOrReplaceTempView("events_q193_edge")
-
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as d:
-        df.write.mode("overwrite").parquet(os.path.join(d, "events.parquet"))
-        got = {
-            r["event_id"]: r["roll7d_c"]
-            for r in entry.queries()["q193_interval_range_frame"](
-                spark, d
-            ).collect()
-        }
-    # id1 frame: {1} → 100; id2/id3 frames: {1,2,3} → 700 each (7-day
-    # bound inclusive, ties share); id4 frame: {4} only (2/3 fall 1µs
-    # outside); id5 isolated in its own partition
-    assert got == {1: 100, 2: 700, 3: 700, 4: 800, 5: 1600}
-
-
-def test_q200_matches_scan_per_iteration_scripting(spark, sf_smoke):
-    """The power-spine scripting form must return exactly what the
-    original scan-per-iteration WHILE loop returns — the scripting
-    surface over the raw fact table stays exercised here."""
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    load_table(spark, "orders", sf_smoke).createOrReplaceTempView(
-        "orders_script_ref"
-    )
-    reference = spark.sql(
-        """
-        BEGIN
-          DECLARE t BIGINT DEFAULT 1;
-          WHILE (SELECT COUNT(*) FROM orders_script_ref
-                 WHERE o_totalprice > t)
-                >= (SELECT COUNT(*) FROM orders_script_ref) DIV 10 DO
-            SET t = t * 2;
-          END WHILE;
-          SELECT t AS threshold,
-                 (SELECT CAST(COUNT(*) AS BIGINT) FROM orders_script_ref
-                  WHERE o_totalprice > t) AS n_above;
-        END
-        """
-    ).collect()
-    got = entry.queries()["q200_sql_scripting_search"](
-        spark, sf_smoke
-    ).collect()
-    assert [tuple(r) for r in got] == [tuple(r) for r in reference]
-
-
-def test_q139_matches_full_remessage_bfs(spark, sf_smoke):
-    """The frontier-only messaging form (send only from d == hop) must
-    equal the original send-from-every-reached-node form — the BFS
-    invariant the optimization rests on: after round k every node with
-    d <= k holds its exact distance, so messages from d < hop nodes
-    can never lower any neighbor's min."""
-    from data_table_spark.operators.relational import _copurchase_edges
-
-    edges = _copurchase_edges(spark, sf_smoke)
-    adj = edges.select(
-        F.col("a").alias("u"), F.col("b").alias("v")
-    ).unionAll(edges.select(F.col("b").alias("u"), F.col("a").alias("v")))
-    nodes = adj.select("u").distinct()
-    dist = nodes.select(
-        "u",
-        F.when(F.col("u") < 10, F.lit(0)).otherwise(F.lit(None))
-        .cast("int").alias("d"),
-    )
-    for _hop in range(3):
-        msgs = (
-            dist.where(F.col("d").isNotNull())   # original: every reached node
-            .join(adj, "u")
-            .select(F.col("v").alias("u"), (F.col("d") + 1).alias("d"))
-        )
-        dist = dist.unionAll(msgs).groupBy("u").agg(F.min("d").alias("d"))
-    reference = (
-        dist.where(F.col("d").isNotNull())
-        .groupBy("d")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
-        .select(F.col("d").cast("int").alias("dist"), "n_nodes")
-    )
-    got = entry.queries()["q139_bounded_bfs"](spark, sf_smoke)
-    assert _rows(got, ["dist"]) == _rows(reference, ["dist"])
-
-
-def test_q138_matches_explode_window_form(spark, sf_dir):
-    """The flat 66-accumulator aggregate must equal the original
-    explode-32-rows-per-order + groupBy(b) + rank-window formulation
-    (the shape the DuckDB oracle literally describes) on real testdata
-    — exact long sums mean the replicate means are the identical
-    doubles, not merely close."""
-    from pyspark.sql import Window
-
-    B = 32
-    o = load_table(spark, "orders", sf_dir).select(
-        "o_orderkey",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("x"),
-    )
-    digests = o.select(
-        "x",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(B // 4 - 1)),
-                lambda g: F.struct(
-                    g.alias("g"),
-                    F.md5(
-                        F.concat(
-                            F.lit("boot"), g, F.lit("_"),
-                            F.col("o_orderkey").cast("string"),
-                        )
-                    ).alias("h"),
-                ),
-            )
-        ).alias("d"),
-    ).select("x", "d.g", "d.h")
-    rep = digests.select(
-        "x",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(3)),
-                lambda j: F.struct(
-                    (F.col("g") * 4 + j).alias("b"),
-                    (
-                        F.lit(8)
-                        - F.length(
-                            F.translate(
-                                F.substring(F.col("h"), j * 8 + 1, 8),
-                                "01", "",
-                            )
-                        )
-                    ).alias("w"),
-                ),
-            )
-        ).alias("r"),
-    ).select("x", "r.b", "r.w")
-    means = rep.groupBy("b").agg(
-        (F.sum(F.col("w") * F.col("x")) / F.sum("w")).alias("rep_mean")
-    )
-    ranked = means.select(
-        "rep_mean", F.row_number().over(Window.orderBy("rep_mean")).alias("rk")
-    )
-    ci = ranked.where(F.col("rk").isin(2, B - 1)).agg(
-        F.round(F.min("rep_mean"), 6).alias("ci_lo_c"),
-        F.round(F.max("rep_mean"), 6).alias("ci_hi_c"),
-    )
-    full = o.agg(F.round(F.sum("x") / F.count(F.lit(1)), 6).alias("mean_c"))
-    expected = (
-        full.collect()[0].asDict() | ci.collect()[0].asDict()
-        | {"n_replicates": B}
-    )
-    got = entry.queries()["q138_bootstrap_ci"](spark, sf_dir).collect()[0].asDict()
-    assert got == expected
-
-
-def test_q162_matches_full_neighborhood_form(spark, sf_dir):
-    """The half-neighborhood (5-offset) cell join must equal the
-    original 3x3 form pair-for-pair INCLUDING the floored meter
-    distance — the haversine must be exactly symmetric under the
-    endpoint swap the (least, greatest) emission performs."""
-    c = load_table(spark, "customer", sf_dir).select("c_custkey")
-    h1 = F.pmod(F.col("c_custkey") * F.lit(2654435761), F.lit(1 << 31))
-    h2 = F.pmod(
-        (F.col("c_custkey") + F.lit(7)) * F.lit(2246822519), F.lit(1 << 31)
-    )
-    pts = c.select(
-        F.col("c_custkey").alias("id"),
-        (F.lit(45.0) + F.lit(5.0) * h1 / F.lit(float(1 << 31))).alias("lat"),
-        (F.lit(0.0) + F.lit(10.0) * h2 / F.lit(float(1 << 31))).alias("lon"),
-    ).select(
-        "id", "lat", "lon",
-        F.floor("lat").cast("long").alias("cy"),
-        F.floor("lon").cast("long").alias("cx"),
-    )
-    probe = pts.select(
-        F.col("id").alias("a"), F.col("lat").alias("la"),
-        F.col("lon").alias("oa"),
-        F.explode(
-            F.expr("flatten(transform(sequence(-1,1), dy -> "
-                   "transform(sequence(-1,1), dx -> "
-                   "struct(cy + dy AS y, cx + dx AS x))))")
-        ).alias("cell"),
-    )
-    build = pts.select(
-        F.col("id").alias("b"), F.col("lat").alias("lb"),
-        F.col("lon").alias("ob"),
-        F.struct(F.col("cy").alias("y"), F.col("cx").alias("x")).alias("cell"),
-    )
-    rad = 3.141592653589793 / 180.0
-    dist = (
-        F.lit(2.0 * 6371000.0)
-        * F.asin(
-            F.sqrt(
-                F.pow(F.sin((F.col("lb") - F.col("la")) * rad / 2), 2)
-                + F.cos(F.col("la") * rad)
-                * F.cos(F.col("lb") * rad)
-                * F.pow(F.sin((F.col("ob") - F.col("oa")) * rad / 2), 2)
-            )
-        )
-    )
-    reference = (
-        probe.join(build, "cell")
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b", F.floor(dist).cast("long").alias("dist_m"))
-        .where(F.col("dist_m") <= 10_000)
-    )
-    got = entry.queries()["q162_geo_radius_join"](spark, sf_dir)
-    assert _rows(got, ["a", "b"]) == _rows(reference, ["a", "b"])
-
-
-def test_q79_matches_self_join_form(spark, sf_dir):
-    """The basket-explode pair count must equal the original
-    distinct → self-join → groupBy formulation row for row (each order
-    contributes each unordered distinct-part pair exactly once in both
-    forms)."""
-    li = load_table(spark, "lineitem", sf_dir).select(
-        "l_orderkey", "l_partkey"
-    ).distinct()
-    a, b = li.alias("a"), li.alias("b")
-    reference = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("part_a"),
-            F.col("b.l_partkey").alias("part_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-        .orderBy(F.col("n_orders").desc(), "part_a", "part_b")
-        .limit(20)
-    )
-    got = entry.queries()["q79_cooccurrence"](spark, sf_dir)
-    key = ["part_a", "part_b"]
-    assert _rows(got, key) == _rows(reference, key)
-
-
-def test_q117_matches_self_join_form(spark, sf_dir):
-    """The basket-explode association-rule build must equal the original
-    three-consumer distinct-li formulation (self-join pair counts, item
-    counts, basket count) on every column, including the floored
-    confidence/lift integer ratios."""
-    from data_table_spark.operators.relational import _floor_div_dec
-
-    li = load_table(spark, "lineitem", sf_dir).select(
-        "l_orderkey", "l_partkey"
-    ).distinct()
-    n_baskets = li.select("l_orderkey").distinct().count()
-    item = li.groupBy(F.col("l_partkey").alias("item")).agg(
-        F.count(F.lit(1)).alias("n_item")
-    )
-    x, y = li.alias("x"), li.alias("y")
-    pairs = (
-        x.join(y, "l_orderkey")
-        .where(F.col("x.l_partkey") < F.col("y.l_partkey"))
-        .groupBy(
-            F.col("x.l_partkey").alias("a"),
-            F.col("y.l_partkey").alias("b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-        .where(F.col("n_ab") >= 2)
-    )
-    directed = pairs.select("a", "b", "n_ab").unionAll(
-        pairs.select(F.col("b").alias("a"), F.col("a").alias("b"), "n_ab")
-    )
-    ia, ib = item.alias("ia"), item.alias("ib")
-    reference = (
-        directed.join(ia, F.col("a") == F.col("ia.item"))
-        .join(ib, F.col("b") == F.col("ib.item"))
-        .select(
-            F.col("a").alias("antecedent"),
-            F.col("b").alias("consequent"),
-            F.col("n_ab").cast("long").alias("n_ab"),
-            F.col("ia.n_item").cast("long").alias("n_a"),
-            F.col("ib.n_item").cast("long").alias("n_b"),
-            F.floor(F.lit(1_000_000) * F.col("n_ab") / F.col("ia.n_item"))
-            .cast("long").alias("confidence_e6"),
-            _floor_div_dec(
-                F.col("n_ab").cast("decimal(38,0)")
-                * F.lit(1_000_000) * F.lit(n_baskets),
-                F.col("ia.n_item").cast("decimal(38,0)") * F.col("ib.n_item"),
-            ).alias("lift_e6"),
-        )
-    )
-    got = entry.queries()["q117_association_rules"](spark, sf_dir)
-    key = ["antecedent", "consequent"]
-    assert _rows(got, key) == _rows(reference, key)

@@ -1,19 +1,29 @@
 """CSV inference ingest (G1), catalog round-trip (G3-equivalent), DDL
-sizing (R36-R37), and the multimodal (``media_*``) operators.
+sizing (R36-R37), multimodal plumbing, and reference-op gate queries.
 """
 
 from __future__ import annotations
 
+import os
+import sys
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from data_table_spark.operators.multimodal import (
-    JPEG_STRIDE,
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from data_table_spark.operators.multimodal import (  # noqa: E402
+    MULTIMODAL_ORACLE,
     MULTIMODAL_QUERIES,
     decode_media,
     documents_as_media,
 )
-from data_table_spark.plans.ddl import (
+from data_table_spark.operators.reference_ops import (  # noqa: E402
+    REFERENCE_ORACLE,
+    REFERENCE_QUERIES,
+)
+from data_table_spark.plans.ddl import (  # noqa: E402
     create_table_ddl,
     db_types_for_dataframe,
     ensure_table,
@@ -21,8 +31,8 @@ from data_table_spark.plans.ddl import (
     import_dataframe,
     next_highest_power_of_two,
 )
-from data_table_spark.sources.csv import read_csv_inferred
-from data_table_spark.sources.registry import load_table
+from data_table_spark.sources.csv import read_csv_inferred  # noqa: E402
+from tests.oracle_util import compare_to_oracle  # noqa: E402
 
 
 # ---------------------------------------------------------------- G1: CSV
@@ -426,6 +436,18 @@ def test_documents_fixture_is_ascii(sf_dir):
         "WHERE octet_length(encode(text)) != length(text) OR length(text) = 0"
     ).fetchone()
     assert bad == 0
+
+
+# ------------------------------------------- oracle gate for new queries
+
+@pytest.mark.parametrize(
+    "name", sorted({**REFERENCE_ORACLE, **MULTIMODAL_ORACLE})
+)
+def test_new_oracles(name, spark, sf_dir, duck):
+    q = {**REFERENCE_QUERIES, **MULTIMODAL_QUERIES}[name]
+    o = {**REFERENCE_ORACLE, **MULTIMODAL_ORACLE}[name]
+    ok, msg = compare_to_oracle(q(spark, sf_dir), duck, o)
+    assert ok, f"{name}: {msg}"
 
 
 def test_jdbc_round_trip_derby(spark, tmp_path):
@@ -1189,148 +1211,3 @@ def test_csv_dialect_sniffer(spark, tmp_path):
 
 
 SNIFF_NAMES = {",": "comma", ";": "semi", "\t": "tab", "|": "pipe"}
-
-
-def test_wav_energy_total_decomposes(spark, sf_smoke):
-    """media_wav_energy: window energies per doc must sum to the
-    whole-signal energy recomputed from the document bytes, and the
-    window sample counts must tile the 64-sample signal."""
-    from data_table_spark.operators.multimodal import MULTIMODAL_QUERIES
-
-    rows = MULTIMODAL_QUERIES["media_wav_energy"](spark, sf_smoke).collect()
-    got: dict = {}
-    samples: dict = {}
-    for r in rows:
-        got[r["doc_id"]] = got.get(r["doc_id"], 0) + r["energy"]
-        samples[r["doc_id"]] = samples.get(r["doc_id"], 0) + r["n_samples"]
-    docs = load_table(spark, "documents", sf_smoke).select(
-        "doc_id", "text"
-    ).collect()
-    for d in docs:
-        data = d["text"].encode()
-        cyc = (data * (1 + 64 // len(data)))[:64]
-        exp = sum(((b - 128) * 256) ** 2 for b in cyc)
-        assert got[d["doc_id"]] == exp
-        assert samples[d["doc_id"]] == 64
-
-
-def test_tile_hashes_consistent_with_whole_image(spark, sf_smoke):
-    """media_tile_hashes: identical documents (identical synthesized
-    images) must share all four tile hashes; every doc yields exactly
-    4 tiles of 16 bits."""
-    from data_table_spark.operators.multimodal import MULTIMODAL_QUERIES
-
-    rows = MULTIMODAL_QUERIES["media_tile_hashes"](spark, sf_smoke).collect()
-    per_doc: dict = {}
-    for r in rows:
-        assert len(r["tile_bits"]) == 16
-        per_doc.setdefault(r["doc_id"], {})[r["tile"]] = r["tile_bits"]
-    docs = load_table(spark, "documents", sf_smoke).select(
-        "doc_id", "text"
-    ).collect()
-    by_text: dict = {}
-    for d in docs:
-        assert set(per_doc[d["doc_id"]].keys()) == {0, 1, 2, 3}
-        by_text.setdefault(d["text"], []).append(d["doc_id"])
-    for _text, ids in by_text.items():
-        sigs = {tuple(sorted(per_doc[i].items())) for i in ids}
-        assert len(sigs) == 1, "identical images hashed differently"
-
-
-# --------------------------------------------------------------------------
-# quiet runs
-# --------------------------------------------------------------------------
-
-
-def test_quiet_runs_matches_python_replay(spark, sf_smoke):
-    """Per-doc quiet/run stats equal a Python replay of the WAV chain
-    (byte-cycled samples, 16-sample energies, below-mean threshold,
-    consecutive-run islands)."""
-    from data_table_spark.operators.multimodal import MULTIMODAL_QUERIES
-
-    docs = load_table(spark, "documents", sf_smoke).select(
-        "doc_id", "text"
-    ).collect()
-    exp = {}
-    for r in docs:
-        data = r["text"].encode()
-        cyc = (data * (1 + 64 // len(data)))[:64]
-        samples = [(b - 128) * 256 for b in cyc]
-        energies = [
-            sum(s * s for s in samples[w:w + 16]) for w in range(0, 64, 16)
-        ]
-        tot = sum(energies)
-        quiet = [i for i, e in enumerate(energies) if e * len(energies) < tot]
-        runs = []
-        for i in quiet:
-            if runs and runs[-1][1] == i - 1:
-                runs[-1] = (runs[-1][0], i)
-            else:
-                runs.append((i, i))
-        exp[r["doc_id"]] = (
-            len(energies), len(quiet), len(runs),
-            max((b - a + 1 for a, b in runs), default=0),
-        )
-    got = MULTIMODAL_QUERIES["media_quiet_runs"](spark, sf_smoke).collect()
-    assert len(got) == len(exp)
-    for r in got:
-        assert (
-            r["n_windows"], r["n_quiet"], r["n_runs"], r["longest_run"]
-        ) == exp[r["doc_id"]], r["doc_id"]
-
-
-# --------------------------------------------------------------------------
-# JPEG round-trip gate
-# --------------------------------------------------------------------------
-
-
-def test_media_jpeg_roundtrip_exact(spark, sf_smoke):
-    """The gate's luma ledger equals the flat-block construction
-    arithmetic for EVERY row — i.e. the real encode→decode cycle is
-    pixel-exact on the even-valued DC-only fixture (the property the
-    oracle's arithmetic replay rests on)."""
-    rows = MULTIMODAL_QUERIES["media_jpeg_roundtrip"](
-        spark, sf_smoke
-    ).collect()
-    n_docs = load_table(spark, "documents", sf_smoke).where(
-        F.col("doc_id") % JPEG_STRIDE == 0
-    ).count()
-    assert len(rows) == n_docs > 0
-    for r in rows:
-        exp = 64 * sum(
-            (26 * (4 * r["doc_id"] + b)) % 256 for b in range(4)
-        )
-        assert (r["w"], r["h"], r["lum_sum"]) == (16, 16, exp)
-
-
-# --------------------------------------------------------------------------
-# media mean-crossing rate
-# --------------------------------------------------------------------------
-
-
-def test_wav_crossings_python_replay(spark, sf_smoke):
-    """The real encode→decode→count chain replayed from the ASCII text
-    in pure Python: samples are (byte−128)·256 over the cycled UTF-8
-    bytes, crossings counted on the n·s − S product."""
-    d = load_table(spark, "documents", sf_smoke).select("doc_id", "text")
-    want = {}
-    for r in d.collect():
-        data = r["text"].encode("utf-8")
-        cyc = (data * (1 + 64 // len(data)))[:64]
-        s = [(b - 128) * 256 for b in cyc]
-        tot = sum(s)
-        c = [64 * v - tot for v in s]
-        want[r["doc_id"]] = (
-            sum(1 for a, b in zip(c, c[1:]) if a * b < 0),
-            min(s),
-            max(s),
-        )
-    got = {
-        r["doc_id"]: (r["mcr"], r["s_min"], r["s_max"])
-        for r in MULTIMODAL_QUERIES["media_wav_crossings"](
-            spark, sf_smoke
-        ).collect()
-    }
-    assert got == want
-    for mcr, lo, hi in got.values():
-        assert 0 <= mcr <= 63 and lo <= hi

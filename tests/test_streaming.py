@@ -9,38 +9,27 @@ window never finalizes, so batch-side expectation = transform(real events).
 
 from __future__ import annotations
 
-import hashlib
 import os
+import shutil
+import sys
 import time
 
 import pytest
-from pyspark.sql import functions as F
 
-from data_table_spark.sources.registry import load_table
-from data_table_spark.streaming.windows import (
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from pyspark.sql import functions as F  # noqa: E402
+
+from data_table_spark.sources.registry import load_table  # noqa: E402
+from data_table_spark.streaming.windows import (  # noqa: E402
     deduped_windowed_counts,
     ohlc_bars_stream,
     run_stream_over_files,
     session_counts,
     sliding_counts,
-    tumbling_counts,
     tumbling_distinct_users,
+    tumbling_counts,
 )
-
-
-def _h32(s: str) -> int:
-    """The engines' shared md5-prefix hash (pipeline.hash_bucket core)."""
-    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
-
-
-def _epoch_s(ts) -> int:
-    """Epoch seconds of a collected ``events.ts`` value. The column is
-    TIMESTAMP (``load_table`` normalizes it), which ``collect()`` returns
-    as a naive datetime in the host's local zone; ``.timestamp()`` reads
-    a naive datetime in that same zone, so the replayed epoch equals the
-    gates' timestampdiff on any host."""
-    return int(ts.timestamp())
-
 
 SENTINEL_OFFSET_DAYS = 30
 
@@ -726,230 +715,3 @@ def test_s7c_full_outer_attribution_join(spark, replay, tmp_path):
     # both outer sides must actually occur
     assert any(r[1] is None for r in g), "no NULL-click purchases emitted"
     assert any(r[0] is None for r in g), "no NULL-purchase clicks emitted"
-
-
-# --------------------------------------------------------------------------
-# late-drop accounting
-# --------------------------------------------------------------------------
-
-
-def test_late_drop_matches_python_replay(spark, sf_smoke):
-    """Batch sizes, watermarks, and drop counts equal a Python replay
-    of the documented arrival simulation; the watermark is
-    non-decreasing and batch 0 never drops."""
-    from data_table_spark.streaming.windows import (
-        LATE_DELAY_S,
-        LATE_JITTER_S,
-        LATE_N_BATCHES,
-        LATE_WINDOW_S,
-        STREAMJOIN_QUERIES,
-    )
-
-    ev = load_table(spark, "events", sf_smoke).select(
-        "event_id", "ts"
-    ).collect()
-    rows = [
-        (r["event_id"], _epoch_s(r["ts"]))
-        for r in ev
-    ]
-    arr = [
-        (s, s + _h32(f"lag:{eid}") % (2 * LATE_JITTER_S) - LATE_JITTER_S)
-        for eid, s in rows
-    ]
-    lo = min(a for _, a in arr)
-    hi = max(a for _, a in arr)
-    batches: dict[int, list[int]] = {}
-    for s, a in arr:
-        b = min((a - lo) * LATE_N_BATCHES // (hi - lo + 1), LATE_N_BATCHES - 1)
-        batches.setdefault(b, []).append(s)
-    got = {
-        r["batch"]: (r["n_events"], r["n_dropped"], r["wm_s"])
-        for r in STREAMJOIN_QUERIES["stream_late_drop_counts"](
-            spark, sf_smoke
-        ).collect()
-    }
-    assert set(got) == set(batches)
-    prev_wm = None
-    total_drops = 0
-    for b in sorted(batches):
-        # filter watermark lags one batch behind the advance (the
-        # empirically-pinned Spark rule — see the gate's constants)
-        wm = max(
-            (max(batches[j]) for j in batches if j <= b - 2), default=None
-        )
-        wm = wm - LATE_DELAY_S if wm is not None else None
-        drops = sum(
-            1 for s in batches[b]
-            if wm is not None and (s // LATE_WINDOW_S + 1) * LATE_WINDOW_S <= wm
-        )
-        assert got[b] == (len(batches[b]), drops, wm), b
-        if wm is not None and prev_wm is not None:
-            assert wm >= prev_wm
-        prev_wm = wm if wm is not None else prev_wm
-        total_drops += drops
-    assert got[0][1] == 0 and got[0][2] is None
-    assert got[1][1] == 0, "lag-2: batch 1 has no filter watermark yet"
-    assert total_drops > 0, "simulation degenerate: nothing dropped"
-
-
-def test_late_drop_model_matches_real_streaming(spark, tmp_path):
-    """The late-drop gate's model IS Spark's behavior: replay the same
-    deterministic arrival as 8 real micro-batches through a windowed
-    streaming aggregation; the engine's numRowsDroppedByWatermark total
-    equals the model's drop total, and the finalized window counts
-    equal the batch counts with exactly the model's dropped rows
-    excluded. (This test is what exposed the filter-watermark lag: a
-    lag-1 model — the guide's wording — overdropped; the engine
-    filters against the PREVIOUS batch's watermark.)"""
-    import os
-    import time as _time
-    import uuid
-
-    from pyspark.sql import functions as SF
-
-    from data_table_spark.streaming.windows import (
-        LATE_WINDOW_S,
-        late_drop_counts,
-    )
-
-    N, J, D = 8, 500_000, 600
-    events = load_table(spark, "events", "/root/testdata/sf0.001")
-    model = late_drop_counts(
-        events, n_batches=N, jitter_s=J, delay_s=D
-    ).collect()
-    expected = sum(r["n_dropped"] for r in model)
-    assert expected > 0, "simulation degenerate at N=8"
-
-    rows = events.collect()
-    arr = {
-        r["event_id"]: _epoch_s(r["ts"])
-        + _h32(f"lag:{r['event_id']}") % (2 * J) - J
-        for r in rows
-    }
-    lo = min(arr.values())
-    hi = max(arr.values())
-    batches: dict[int, list] = {}
-    for r in rows:
-        b = min((arr[r["event_id"]] - lo) * N // (hi - lo + 1), N - 1)
-        batches.setdefault(b, []).append(r)
-    # lag-2 python replay for the per-row dropped set
-    bmax = {
-        b: max(_epoch_s(r["ts"]) for r in v)
-        for b, v in batches.items()
-    }
-    dropped = set()
-    for b in sorted(batches):
-        wm = max((bmax[j] for j in batches if j <= b - 2), default=None)
-        wm = wm - D if wm is not None else None
-        for r in batches[b]:
-            s = _epoch_s(r["ts"])
-            if wm is not None and (s // LATE_WINDOW_S + 1) * LATE_WINDOW_S <= wm:
-                dropped.add(r["event_id"])
-    assert len(dropped) == expected
-
-    src_dir = str(tmp_path / "late_src")
-    os.makedirs(src_dir)
-    base = _time.time() - 3600
-    for b in sorted(batches):
-        before = set(os.listdir(src_dir))
-        spark.createDataFrame(batches[b], events.schema).coalesce(1) \
-            .write.mode("append").parquet(src_dir)
-        for f in set(os.listdir(src_dir)) - before:
-            if f.endswith(".parquet"):
-                os.utime(
-                    os.path.join(src_dir, f), (base + b * 10, base + b * 10)
-                )
-    name = f"late_{uuid.uuid4().hex[:8]}"
-    q = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-        .withWatermark("ts", f"{D} seconds")
-        .groupBy(SF.window("ts", "1 hour").alias("w"))
-        .agg(SF.count("*").alias("cnt"))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # the state-operator metric is a PARTIAL counter: some late rows
-    # are cut by the pre-state EventTimeWatermark filter and never
-    # reach the metered operator (observed 242 metered of 298 actually
-    # dropped) — so it lower-bounds the true drop count; the emitted
-    # window counts below are the semantic ground truth
-    metric = sum(
-        op.get("numRowsDroppedByWatermark") or 0
-        for p in q.recentProgress
-        for op in (p.get("stateOperators") or [])
-    )
-    assert 0 < metric <= expected, (metric, expected)
-    wm_final = max(bmax.values()) - D
-    got = {
-        _epoch_s(r["w"]["start"]): r["cnt"]
-        for r in spark.table(name).collect()
-    }
-    exp: dict[int, int] = {}
-    for v in batches.values():
-        for r in v:
-            if r["event_id"] in dropped:
-                continue
-            s = _epoch_s(r["ts"])
-            ws = (s // LATE_WINDOW_S) * LATE_WINDOW_S
-            if ws + LATE_WINDOW_S <= wm_final:
-                exp[ws] = exp.get(ws, 0) + 1
-    assert got == exp
-
-
-# --------------------------------------------------------------------------
-# S11 streaming latest-state compaction
-# --------------------------------------------------------------------------
-
-
-def test_stream_latest_state_matches_batch(spark, sf_smoke, tmp_path):
-    """The S11 transform replayed file-by-file in update mode converges
-    to its own batch application (the gate/oracle form): keep each
-    user's LAST emission (highest n_events) and compare."""
-    from pyspark.sql import Window
-
-    from data_table_spark.streaming.windows import (
-        latest_state_stream,
-        run_stream_over_files,
-    )
-
-    events = load_table(spark, "events", sf_smoke)
-    base = str(tmp_path / "s11_src")
-    t = F.unix_timestamp("ts")
-    mid = events.selectExpr(
-        "percentile(unix_timestamp(ts), 0.5) p"
-    ).collect()[0][0]
-    for part in (events.where(t <= mid), events.where(t > mid)):
-        part.coalesce(1).write.mode("append").parquet(base)
-        time.sleep(1.1)
-    parts = sorted(
-        (os.path.getmtime(os.path.join(base, f)), f)
-        for f in os.listdir(base)
-        if f.endswith(".parquet")
-    )
-    anchor = time.time() - 3600
-    for i, (_, f) in enumerate(parts):
-        os.utime(os.path.join(base, f), (anchor + i * 10, anchor + i * 10))
-
-    got_df = run_stream_over_files(
-        spark, base, latest_state_stream, events.schema,
-        str(tmp_path / "ck_s11"), output_mode="update",
-    )
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    final = (
-        got_df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    got = {tuple(r) for r in final.collect()}
-    want = {
-        tuple(r)
-        for r in latest_state_stream(events).select(*final.columns).collect()
-    }
-    assert got == want

@@ -86,55 +86,6 @@ def test_no_whitespace_split_outside_text_kernel():
     assert not stray, f"whitespace splits bypassing the text kernel: {stray}"
 
 
-TESTS = os.path.dirname(os.path.abspath(__file__))
-
-
-def _oracle_refs(node, names=frozenset()) -> bool:
-    """Whether ``node`` names an ``*_ORACLE`` dict, ``oracle_sql`` or one
-    of ``names``."""
-    for n in ast.walk(node):
-        name = getattr(n, "id", getattr(n, "attr", None))
-        if name and (name.endswith("_ORACLE") or name == "oracle_sql" or name in names):
-            return True
-    return False
-
-
-def test_test_files_are_named_by_family():
-    """Tests are filed by the operator family they check, not by the
-    round that added them."""
-    stray = [
-        fn for fn in os.listdir(TESTS)
-        if fn.startswith("test_") and fn.endswith(".py")
-        and (re.search(r"round\d+", fn) or re.search(r"_r\d+\.py$", fn))
-    ]
-    assert not stray, f"round-named test files: {stray}"
-
-
-def test_only_test_oracles_parametrizes_over_oracles():
-    """``test_oracles.py`` compares every gate through ``oracle_sql()``;
-    a per-family oracle parametrization elsewhere would be a second,
-    partial copy of it."""
-    stray = []
-    for fn in sorted(os.listdir(TESTS)):
-        if not fn.endswith(".py") or fn in ("conftest.py", "test_oracles.py"):
-            continue
-        with open(os.path.join(TESTS, fn)) as f:
-            tree = ast.parse(f.read())
-        oracle_names = {
-            t.id
-            for n in tree.body if isinstance(n, ast.Assign) and _oracle_refs(n.value)
-            for t in n.targets if isinstance(t, ast.Name)
-        }
-        stray += [
-            f"{fn}:{n.lineno}"
-            for n in ast.walk(tree)
-            if isinstance(n, ast.Call)
-            and getattr(n.func, "attr", None) == "parametrize"
-            and any(_oracle_refs(a, oracle_names) for a in n.args)
-        ]
-    assert not stray, f"oracle parametrizations outside test_oracles.py: {stray}"
-
-
 def _calls_load_table(node) -> bool:
     return any(
         isinstance(n, ast.Call)

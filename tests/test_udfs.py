@@ -1,17 +1,24 @@
-"""UDF surface (G11, operators/udfs.py): each pandas / Arrow UDF flavor
-engages in the physical plan and equals its built-in formulation, and
-the mapInPandas folds equal the grouped-map forms they replaced."""
+"""UDF surface (G11): pandas scalar / grouped-map / table-function demos
+hash-match their pure-SQL DuckDB oracles — verifying the Arrow UDF
+machinery end-to-end, not just the formulas."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import os
+import sys
 
-from data_table_spark.operators.udfs import UDF_QUERIES
-from data_table_spark.sources.registry import load_table
+import pytest
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from data_table_spark.operators.udfs import UDF_ORACLE, UDF_QUERIES  # noqa: E402
+from tests.oracle_util import compare_to_oracle  # noqa: E402
 
 
-def _rows(df, order_cols):
-    return [tuple(r) for r in df.orderBy(*order_cols).collect()]
+@pytest.mark.parametrize("name", sorted(UDF_ORACLE))
+def test_udf_oracle(name, spark, sf_dir, duck):
+    ok, msg = compare_to_oracle(UDF_QUERIES[name](spark, sf_dir), duck, UDF_ORACLE[name])
+    assert ok, f"{name}: {msg}"
 
 
 def test_arrow_udtf_flavor_engages(spark, sf_dir):
@@ -24,279 +31,3 @@ def test_arrow_udtf_flavor_engages(spark, sf_dir):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "ArrowEvalPythonUDTF" in plan or "ArrowEvalPython" in plan, plan
-
-
-# --------------------------------------------------------------------------
-# mapInPandas flavor
-# --------------------------------------------------------------------------
-
-
-def test_mapinpandas_plan_and_builtin_equivalence(spark, sf_smoke):
-    """The gate's plan contains a MapInPandas node (the flavor under
-    test), and its output equals the same computation as pure Column
-    expressions — the Python batch path agrees with the JVM path."""
-    from data_table_spark.operators.udfs import MIP_MIN_QTY, UDF_QUERIES
-
-    df = UDF_QUERIES["udf_mapinpandas_filter"](spark, sf_smoke)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
-    li = load_table(spark, "lineitem", sf_smoke)
-    ref = (
-        li.select(
-            "l_orderkey", "l_linenumber",
-            F.round("l_quantity").cast("long").alias("qty"),
-            F.expr(
-                "(CAST(ROUND(l_extendedprice * 100) AS BIGINT) "
-                "* (100 - CAST(ROUND(l_discount * 100) AS BIGINT))) "
-                "div 100"
-            ).cast("long").alias("net_cents"),
-        )
-        .where(F.col("qty") >= MIP_MIN_QTY)
-    )
-    got = {tuple(r) for r in df.collect()}
-    exp = {tuple(r) for r in ref.collect()}
-    assert got == exp and got
-
-
-# --------------------------------------------------------------------------
-# grouped-agg pandas UDAF
-# --------------------------------------------------------------------------
-
-
-def test_grouped_agg_udaf_plan_and_builtin_equivalence(spark, sf_smoke):
-    """The gate's plan runs an AggregateInPandas node (the UDAF flavor
-    under test) and its exact integer outputs equal the same sums via
-    built-in aggregates."""
-    from data_table_spark.operators.udfs import UDF_QUERIES
-
-    df = UDF_QUERIES["udf_grouped_agg_sums"](spark, sf_smoke)
-    df.collect()  # finalize AQE so the physical node is visible
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # Spark 4 names the node ArrowAggregatePython (AggregateInPandas
-    # in the 3.x line)
-    assert "ArrowAggregatePython" in plan or "AggregateInPandas" in plan
-    li = load_table(spark, "lineitem", sf_smoke)
-    ref = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum(
-            F.round(F.col("l_extendedprice") * 100).cast("long")
-            * F.round("l_quantity").cast("long")
-        ).cast("long").alias("wsum_cents"),
-        F.sum(F.round("l_quantity").cast("long")).cast("long")
-        .alias("qty_sum"),
-    )
-    got = {
-        r["l_returnflag"]: (r["n_rows"], r["wsum_cents"], r["qty_sum"])
-        for r in df.collect()
-    }
-    exp = {
-        r["l_returnflag"]: (r["n_rows"], r["wsum_cents"], r["qty_sum"])
-        for r in ref.collect()
-    }
-    assert got == exp and got
-
-
-# --------------------------------------------------------------------------
-# polymorphic (analyze-time) UDTF
-# --------------------------------------------------------------------------
-
-
-def test_udtf_dynamic_schema_is_polymorphic(spark, sf_smoke):
-    """The schema really is computed from the call's constant argument:
-    n=3 yields (n_toks, w0..w2), a second call with n=1 yields
-    (n_toks, w0) from the SAME registration — and a non-constant n is
-    rejected at plan time, not silently defaulted."""
-    import pytest as _pytest
-
-    from data_table_spark.operators.udfs import UDF_QUERIES
-    from data_table_spark.sources.registry import sql_gate
-
-    out = UDF_QUERIES["udf_udtf_dynamic_schema"](spark, sf_smoke)
-    assert out.columns == ["doc_id", "n_toks", "w0", "w1", "w2"]
-    one = sql_gate(
-        spark, sf_smoke,
-        "SELECT h.* FROM documents, LATERAL dt_head_cols(text, 1) h "
-        "WHERE doc_id = 40",
-    )
-    assert one.columns == ["n_toks", "w0"]
-    (r,) = one.collect()
-    first = sql_gate(
-        spark, sf_smoke, "SELECT text FROM documents WHERE doc_id = 40"
-    ).collect()[0][0]
-    toks = first.split()
-    assert (r["n_toks"], r["w0"]) == (len(toks), toks[0] if toks else None)
-    with _pytest.raises(Exception, match="constant"):
-        sql_gate(
-            spark, sf_smoke,
-            "SELECT h.* FROM documents, "
-            "LATERAL dt_head_cols(text, CAST(doc_id AS INT)) h",
-        ).collect()
-
-
-# --------------------------------------------------------------------------
-# UDF transport gates
-# --------------------------------------------------------------------------
-
-
-def test_arrow_grouped_map_equals_builtin_agg(spark, sf_smoke):
-    """The applyInArrow ledger equals the same aggregation computed by
-    built-in JVM expressions — proving the Arrow grouped-map transport,
-    not the arithmetic."""
-    from data_table_spark.operators.udfs import STATS_COHORTS
-
-    o = load_table(spark, "orders", sf_smoke).select(
-        (F.col("o_custkey") % STATS_COHORTS).alias("cohort"),
-        F.floor(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    want = {
-        r["cohort"]: (r["n"], r["tot"], r["mx"])
-        for r in o.groupBy("cohort")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("cents").alias("tot"),
-            F.max("cents").alias("mx"),
-        )
-        .collect()
-    }
-    got = {
-        r["cohort"]: (r["n_orders"], r["total_cents"], r["max_cents"])
-        for r in UDF_QUERIES["udf_arrow_grouped_map"](
-            spark, sf_smoke
-        ).collect()
-    }
-    assert got == want
-
-
-def test_cogrouped_merge_full_outer_semantics(spark, sf_smoke):
-    """Keys present on only one side still surface (the full-outer
-    contract): every order appears exactly once, orphan lineitems (none
-    in TPC-H-ish fixtures, but asserted structurally) would carry null
-    o_cents, and the per-order line sums match a Spark join replay."""
-    rows = UDF_QUERIES["udf_cogrouped_merge"](spark, sf_smoke).collect()
-    by_key = {r["okey"]: r for r in rows}
-    assert len(by_key) == len(rows), "duplicate order keys emitted"
-    o = load_table(spark, "orders", sf_smoke)
-    li = load_table(spark, "lineitem", sf_smoke)
-    n_orders = o.count()
-    li_sum = {
-        r["l_orderkey"]: (r["s"], r["n"])
-        for r in li.groupBy("l_orderkey")
-        .agg(
-            F.sum(
-                F.floor(F.col("l_extendedprice") * 100).cast("long")
-            ).alias("s"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .collect()
-    }
-    assert len(rows) >= n_orders
-    for okey, r in by_key.items():
-        if okey in li_sum:
-            assert (r["li_cents"], r["n_lines"]) == li_sum[okey]
-        else:
-            assert r["li_cents"] is None and r["n_lines"] == 0
-
-
-def test_iter_series_net_equals_expression(spark, sf_smoke):
-    """The iterator-flavor UDF equals the pure-expression floor-cents
-    computation row for row."""
-    li = load_table(spark, "lineitem", sf_smoke)
-    want = {
-        (r["l_orderkey"], r["l_linenumber"]): r["c"]
-        for r in li.select(
-            "l_orderkey", "l_linenumber",
-            F.floor(
-                F.col("l_extendedprice") * (1.0 - F.col("l_discount")) * 100.0
-            ).cast("long").alias("c"),
-        ).collect()
-    }
-    got = {
-        (r["l_orderkey"], r["l_linenumber"]): r["net_cents"]
-        for r in UDF_QUERIES["udf_iter_series_net"](
-            spark, sf_smoke
-        ).collect()
-    }
-    assert got == want
-
-
-def test_capped_sessions_matches_grouped_map_form(spark, sf_dir):
-    """The vectorized mapInPandas fold must emit exactly the sessions
-    the original per-key grouped-map recurrence emitted — every split
-    decision (gap break, cap break, sid numbering) row-identical."""
-    import pandas as pd
-
-    from data_table_spark.operators.udfs import (
-        SESSION_CAP_US,
-        SESSION_GAP_US,
-        capped_sessions,
-        load_table,
-    )
-
-    gap_us, cap_us = SESSION_GAP_US, SESSION_CAP_US
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["ts", "event_id"])
-        us = pdf["ts"].astype("int64") // 1000
-        key = pdf["user_id"].iloc[0]
-        out, sid, start, prev, n = [], 0, None, None, 0
-        for t in us:
-            if start is None or t - prev > gap_us or t - start > cap_us:
-                if start is not None:
-                    out.append((key, sid, n, start, prev))
-                sid += 1
-                start, n = t, 0
-            n += 1
-            prev = t
-        if start is not None:
-            out.append((key, sid, n, start, prev))
-        return pd.DataFrame(
-            out,
-            columns=["user_id", "sid", "n_events", "start_us", "end_us"],
-        )
-
-    e = load_table(spark, "events", sf_dir).select(
-        "user_id", "ts", "event_id"
-    )
-    reference = e.groupBy("user_id").applyInPandas(
-        fold,
-        "user_id long, sid long, n_events long, start_us long, end_us long",
-    )
-    got = capped_sessions(e)
-    key = ["user_id", "sid"]
-    assert _rows(got, key) == _rows(reference, key)
-
-
-def test_ewma_matches_grouped_map_form(spark, sf_dir):
-    """The partition-sorted mapInPandas fold must emit exactly what the
-    original per-key grouped-map recurrence emitted — same float64 op
-    sequence per row (python float is the same IEEE-754 double), same
-    flooring expression, same per-key rn numbering."""
-    import pandas as pd
-
-    from data_table_spark.operators.udfs import ewma_per_key, load_table
-
-    alpha = 0.2
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["ts", "event_id"])
-        y, out = None, []
-        for x in pdf["value"].astype("float64"):
-            y = x if y is None else alpha * x + (1.0 - alpha) * y
-            out.append(y)
-        return pd.DataFrame(
-            {
-                "user_id": pdf["user_id"],
-                "rn": range(1, len(out) + 1),
-                "ewma_e6": [int(v * 1e6 // 1) for v in out],
-            }
-        )
-
-    e = load_table(spark, "events", sf_dir).select(
-        "user_id", "ts", "event_id", "value"
-    )
-    reference = e.groupBy("user_id").applyInPandas(
-        fold, "user_id long, rn long, ewma_e6 long"
-    )
-    got = ewma_per_key(e)
-    key = ["user_id", "rn"]
-    assert _rows(got, key) == _rows(reference, key)
